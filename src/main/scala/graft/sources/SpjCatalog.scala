@@ -160,7 +160,8 @@ final class GraftSpjCatalog extends TableCatalog with FunctionCatalog
         s"$catName.${ident.name}: no snapshot $snapId"))
     val schema = snap.schemaId.flatMap(t.metadata.schemaById).getOrElse(t.schema)
     new SpjTable(t, SchemaBridge.toSpark(schema), allowBucket = true,
-      strict = false, snapshotId = Some(snapId), writable = false)
+      strict = false, snapshotId = Some(snapId), writable = false,
+      keySchema = Some(schema))
   }
 
   override def createTable(ident: Identifier, schema: StructType,

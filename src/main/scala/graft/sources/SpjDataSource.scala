@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.catalog.Catalogs
 import graft.core.{Expr, SchemaBridge, Transforms}
-import graft.table.{Table => GraftTable, Writer}
+import graft.table.{ReadRoute, Table => GraftTable, Writer}
 
 /** DSv2 read over an identity-partitioned Iceberg table that reports
   * `KeyGroupedPartitioning` — the storage-partitioned-join path: two tables
@@ -87,13 +87,15 @@ final class SpjSourceProvider extends TableProvider with DataSourceRegister {
   * into [[Writer.append]] / [[Writer.overwriteAll]] — fanout, footer stats,
   * commit protocol with retry/rebase all apply) and `DELETE FROM` (CoW
   * [[Writer.deleteWhere]]; metadata-only when the strict evaluator proves
-  * whole files match). `snapshotId` pins time-travel reads; time-travel
-  * tables refuse writes.
+  * whole files match). `snapshotId` pins time-travel reads, and
+  * `keySchema` is then the snapshot's schema `sparkSchema` came from;
+  * time-travel tables refuse writes.
   */
 final class SpjTable(table: GraftTable, sparkSchema: StructType,
     allowBucket: Boolean = false, strict: Boolean = true,
     snapshotId: Option[Long] = None, writable: Boolean = false,
-    branch: Option[String] = None)
+    branch: Option[String] = None,
+    keySchema: Option[graft.core.IcebergSchema] = None)
     extends V2Table with SupportsRead with SupportsWrite with SupportsDelete
     with SupportsRowLevelOperations with SupportsMetadataColumns {
 
@@ -233,7 +235,7 @@ final class SpjTable(table: GraftTable, sparkSchema: StructType,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new SpjScanBuilder(table, sparkSchema, claimKeys, snapshotId,
-      options.asCaseSensitiveMap().asScala.toMap)
+      options.asCaseSensitiveMap().asScala.toMap, keySchema = keySchema)
 
   private def requireWritable(op: String): Unit = {
     if (!writable) throw new UnsupportedOperationException(
@@ -550,10 +552,18 @@ object SpjTable {
   * into the reader), and rows. Every filter is also kept by Spark
   * (returned from `pushFilters`), so an untranslatable residual can never
   * change results.
+  *
+  * `build` plans once and routes the planned tasks through
+  * [[ReadRoute.choose]]; with `prePlanned` the caller did both
+  * and the builder serves those tasks as they are. `keySchema` is the
+  * Iceberg schema `fullSchema` came from when it is not the table's current
+  * one (time travel): it names the equality-delete key columns.
   */
 final class SpjScanBuilder(table: GraftTable, fullSchema: StructType,
     claimKeys: Option[Seq[Transform]], snapshotId: Option[Long],
-    options: Map[String, String]) extends ScanBuilder
+    options: Map[String, String],
+    prePlanned: Option[Seq[graft.table.FileScanTask]] = None,
+    keySchema: Option[graft.core.IcebergSchema] = None) extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters
     with SupportsPushDownAggregates
     with org.apache.spark.sql.connector.read.SupportsPushDownLimit {
@@ -584,9 +594,11 @@ final class SpjScanBuilder(table: GraftTable, fullSchema: StructType,
 
   // COUNT/MIN/MAX from manifest stats — zero data bytes read; only when no
   // filters are in play (ours are all residual, which a one-row complete
-  // result cannot satisfy) and every term is provably exact
+  // result cannot satisfy) and every term is provably exact. A pre-planned
+  // scan (SparkRead.read) may read a time-travel schema, so it never
+  // answers from stats.
   private def probeAgg(agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    if (aggResult.isEmpty && pushed.isEmpty)
+    if (aggResult.isEmpty && pushed.isEmpty && prePlanned.isEmpty)
       aggResult = SpjAggPushdown.tryPush(table, baseScan.planFiles(), agg)
     aggResult.isDefined
   }
@@ -615,76 +627,52 @@ final class SpjScanBuilder(table: GraftTable, fullSchema: StructType,
 
   override def pushedFilters(): Array[Filter] = pushed
 
-  /** Σ distinct eq-delete file bytes above which the scan abandons
-    * executor-side key sets for the distributed anti-join pipeline (see
-    * [[SpjAntiJoinScan]]). Key sets are O(delete bytes) of EXECUTOR MEMORY
-    * per file — fine for the bounded CDC-upsert pattern, an OOM for an
-    * uncompacted backlog. Option `eq-delete-fallback-bytes` or session conf
-    * `spark.graft.eqDeleteFallbackBytes`; default 64 MB.
-    */
-  private def eqFallbackBytes: Long =
-    options.get("eq-delete-fallback-bytes").map(_.toLong).getOrElse(
-      SparkSession.active.conf.getOption("spark.graft.eqDeleteFallbackBytes")
-        .map(_.toLong).getOrElse(64L * 1024 * 1024))
-
   override def build(): Scan = aggResult match {
     case Some((aggSchema, row)) => new SpjAggScan(aggSchema, row)
     case None =>
       val fileExpr = pushed.flatMap(SpjScanBuilder.toExpr)
         .foldLeft(graft.core.Expr.AlwaysTrue: graft.core.Expr)(graft.core.Expr.and)
-      // plan HERE (once — SpjScan reuses the result) so the eq-delete
-      // backlog for this exact scan is measurable before choosing readers
-      val planned = baseScan.withFilter(fileExpr).planFiles()
-      val eqBytes = planned.flatMap(_.eqDeletes.map(_._1))
-        .distinctBy(_.path).map(_.fileSize).sum
-      // imported (addFiles/snapshot) tables carry a name mapping: their
-      // files may lack field IDs, carry pre-rename column names, or omit
-      // hive-partition columns entirely — resolutions the stock
-      // name-based parquet reader can't do. Route those reads through the
-      // SparkRead pipeline (field-ID/name-mapping rebind + identity
-      // partition fill), same V1 escape hatch as the eq-delete fallback.
-      val needsNameResolution = table.metadata.properties
-        .contains(graft.format.NameMapping.PropertyKey)
-      val anyMeta = withFile || withPos || withRowId || withLastUpd
-      val metaReq = SpjTable.RequestedMeta(required, withFile, withPos,
-        withRowId, withLastUpd)
-      if (needsNameResolution) {
-        // imported files may carry pre-rename names the stock DSv2 reader
-        // silently null-fills — metadata-column requests ride the SAME V1
-        // name-mapping route (it computes file/pos/lineage natively)
-        // instead of mis-reading through SpjScan
-        SpjRouting.record(table.name, "name-mapping", eqBytes)
-        emitRouteReport("name-mapping", eqBytes)
-        new SpjAntiJoinScan(table, snapshotId, planned, required, options, metaReq)
-      } else if (eqBytes > eqFallbackBytes && !anyMeta) {
-        // executor key sets would hold eqBytes of decoded keys in memory;
-        // route this scan through the SparkRead anti-join pipeline instead
-        // (unbounded backlog = shuffle-join territory, not hash-set
-        // territory). Row-level operations request `_file`/`_pos` and keep
-        // the key-set route: their group-filtered scans are file-scoped.
-        SpjRouting.record(table.name, "anti-join", eqBytes)
-        emitRouteReport("anti-join", eqBytes)
-        new SpjAntiJoinScan(table, snapshotId, planned, required, options)
-      } else {
-        if (planned.exists(_.eqDeletes.nonEmpty)) {
-          SpjRouting.record(table.name, "keyset", eqBytes)
-          emitRouteReport("keyset", eqBytes)
-        }
+      def perTask(planned: Seq[graft.table.FileScanTask]) =
         new SpjScan(table, required, claimKeys, snapshotId, options,
           fileExpr, pushed.toSeq, withFile = withFile, withPos = withPos,
           withRowId = withRowId, withLastUpd = withLastUpd,
           pushedLimit = if (pushed.isEmpty) limit else None,
-          prePlanned = Some(planned))
+          prePlanned = Some(planned), keySchema = keySchema)
+      prePlanned match {
+        // the caller planned and routed already (SparkRead.read)
+        case Some(planned) => perTask(planned)
+        case None =>
+          // plan HERE (once — SpjScan reuses the result) so the eq-delete
+          // backlog for this exact scan is measurable before choosing readers
+          val planned = baseScan.withFilter(fileExpr).planFiles()
+          val metaReq = SpjTable.RequestedMeta(required, withFile, withPos,
+            withRowId, withLastUpd)
+          val decision = ReadRoute.choose(SparkSession.active, table, planned,
+            options, positionMeta = metaReq.anyMeta)
+          decision.route match {
+            case ReadRoute.PerTask =>
+              if (planned.exists(_.eqDeletes.nonEmpty)) recordRoute(decision)
+              perTask(planned)
+            case _ =>
+              // name-mapped files, non-parquet files and oversized
+              // eq-delete backlogs read through the SparkRead pipeline;
+              // metadata-column requests ride along (it computes file,
+              // pos and lineage natively)
+              recordRoute(decision)
+              new SpjAntiJoinScan(table, snapshotId, planned, required, options, metaReq)
+          }
       }
   }
 
-  /** Supplementary ScanReport naming the equality-delete application route
+  /** Records the route in [[SpjRouting]] and emits a supplementary
+    * ScanReport naming the equality-delete application route
     * and the measured backlog vs the routing threshold, so a 100 TB
     * operator watching the i40 metrics wire can see cliff proximity (an
     * upcoming route flip = time to run rewrite_position_delete_files /
     * compaction) without reading query plans.
     */
-  private def emitRouteReport(route: String, eqBytes: Long): Unit = {
+  private def recordRoute(decision: ReadRoute.Decision): Unit = {
+    SpjRouting.record(table.name, decision.route.name, decision.eqBytes)
     try {
       val rep = table.reporter
       if (rep eq graft.metrics.NopReporter) return
@@ -699,9 +687,9 @@ final class SpjScanBuilder(table: GraftTable, fullSchema: StructType,
         filterJson = "",
         metrics = graft.metrics.ScanMetricsResult(),
         metadata = Map(
-          "eq-delete-route" -> route,
-          "eq-delete-bytes" -> eqBytes.toString,
-          "eq-delete-fallback-bytes" -> eqFallbackBytes.toString)))
+          "eq-delete-route" -> decision.route.name,
+          "eq-delete-bytes" -> decision.eqBytes.toString,
+          "eq-delete-fallback-bytes" -> decision.fallbackBytes.toString)))
     } catch { case _: Exception => () } // diagnostics never fail the scan
   }
 }
@@ -724,6 +712,41 @@ object SpjRouting {
     Option(routes.get(table)).map(_._2).filter(_ >= 0)
 }
 
+/** An already-planned task set as a DSv2 table: the relation behind
+  * [[graft.table.SparkRead.read]] on the per-task route. Its scan builder
+  * prunes columns and takes row-group filters like the catalog's, then
+  * serves exactly these tasks through [[SpjScan]] — no second planning
+  * pass, no partitioning claim (one input partition per file).
+  * `readSchema` is the read's stored schema (a time-travel read's is the
+  * snapshot's): it names the columns, equality-delete keys included. With
+  * `rowLineage` the v3 lineage columns are part of the table schema, so a
+  * plain projection requests them.
+  */
+final class SpjPlannedTable(table: GraftTable, readSchema: graft.core.IcebergSchema,
+    tasks: Seq[graft.table.FileScanTask], snapshotId: Option[Long],
+    rowLineage: Boolean, options: Map[String, String])
+    extends V2Table with SupportsRead {
+
+  private val dataSchema: StructType = SchemaBridge.toSpark(readSchema)
+
+  override def name(): String = s"graft-planned:${table.name}"
+
+  override def schema(): StructType =
+    if (!rowLineage) dataSchema
+    else StructType(dataSchema.fields ++ Seq(
+      org.apache.spark.sql.types.StructField(SpjTable.RowIdColumnName,
+        org.apache.spark.sql.types.LongType, nullable = true),
+      org.apache.spark.sql.types.StructField(SpjTable.LastUpdatedColumnName,
+        org.apache.spark.sql.types.LongType, nullable = true)))
+
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ)
+
+  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
+    new SpjScanBuilder(table, dataSchema, None, snapshotId, options,
+      prePlanned = Some(tasks), keySchema = Some(readSchema))
+}
+
 /** The oversized-equality-delete-backlog read: a V1 scan whose relation
   * executes [[graft.table.SparkRead.readTasks]] — data files anti-joined
   * against the delete files as a DISTRIBUTED join (null-safe on the
@@ -735,8 +758,9 @@ object SpjRouting {
   * the reference's own documented weakness (its eq-delete reader is
   * in-memory: `table/equality_delete_reader.go:43-52`).
   *
-  * Chosen at plan time by [[SpjScanBuilder.build]] when Σ eq-delete bytes
-  * exceeds the fallback threshold; the file set was already pruned by the
+  * Chosen at plan time by [[ReadRoute.choose]] when Σ
+  * eq-delete bytes exceeds the fallback threshold, and for name-mapped or
+  * non-parquet tables; the file set was already pruned by the
   * pushed filters, and Spark re-applies every filter above the scan (all
   * pushdown is residual), so routing can never change results — only the
   * execution strategy. Trade-offs vs the key-set route: no SPJ claim, no
@@ -870,7 +894,8 @@ final class SpjScan(table: GraftTable, sparkSchema: StructType,
     withRowId: Boolean = false,
     withLastUpd: Boolean = false,
     pushedLimit: Option[Int] = None,
-    prePlanned: Option[Seq[graft.table.FileScanTask]] = None)
+    prePlanned: Option[Seq[graft.table.FileScanTask]] = None,
+    keySchema: Option[graft.core.IcebergSchema] = None)
     extends Scan with Batch with SupportsReportPartitioning
     with SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
@@ -1094,7 +1119,7 @@ final class SpjScan(table: GraftTable, sparkSchema: StructType,
 
   override def createReaderFactory(): PartitionReaderFactory =
     SpjScan.readerFactory(table, grouped, sparkSchema, options,
-      rowGroupFilters, withFile, withPos, withRowId, withLastUpd)
+      rowGroupFilters, withFile, withPos, withRowId, withLastUpd, keySchema)
 }
 
 object SpjScan {
@@ -1109,7 +1134,8 @@ object SpjScan {
       dataSchema: StructType, options: Map[String, String],
       rowGroupFilters: Seq[Filter], withFile: Boolean,
       withPos: Boolean = false, withRowId: Boolean = false,
-      withLastUpd: Boolean = false): SpjReaderFactory = {
+      withLastUpd: Boolean = false,
+      keySchema: Option[graft.core.IcebergSchema] = None): SpjReaderFactory = {
     val spark = SparkSession.active
     val needLineage = withRowId || withLastUpd
     val anyDeletes = parts.exists(_.files.exists(_.deletes.nonEmpty))
@@ -1124,10 +1150,13 @@ object SpjScan {
 
     // equality-key columns the pruned projection may lack: widen the
     // delete-path read schema (appended AFTER the data columns, so the
-    // strip projection is a prefix take)
+    // strip projection is a prefix take). Keys are named by the schema
+    // `dataSchema` came from — a time-travel read's is the snapshot's, and
+    // the delete files it reads carry that snapshot's names
+    val namingSchema = keySchema.getOrElse(table.schema)
     val eqFieldsById: Map[Int, org.apache.spark.sql.types.StructField] =
       eqIdSets.flatten.distinct.map { id =>
-        id -> SchemaBridge.toSparkField(table.schema.idToField(id))
+        id -> SchemaBridge.toSparkField(namingSchema.idToField(id))
       }.toMap
     val present = dataSchema.fieldNames.toSet
     val widenedEq = StructType(dataSchema.fields ++

@@ -112,9 +112,7 @@ object Analyze {
     val updated = meta.copy(
       statistics = meta.statistics.filterNot(_.snapshotId == snap.snapshotId) :+ statsFile,
       lastUpdatedMs = System.currentTimeMillis())
-    table.catalog.commit(table.name, meta, updated, table.currentVersion,
-      Some(table.metadataPath))
-    table.refresh()
+    MetadataLogPolicy.commit(table, updated)
   }
 
   /** NDV estimates recorded for the current snapshot, per field id. */
@@ -146,8 +144,6 @@ object Analyze {
         .filterNot(_.snapshotId == snap.snapshotId) :+
         PartitionStatisticsFile(snap.snapshotId, file.path, file.size),
       lastUpdatedMs = System.currentTimeMillis())
-    table.catalog.commit(table.name, meta, updated, table.currentVersion,
-      Some(table.metadataPath))
-    table.refresh()
+    MetadataLogPolicy.commit(table, updated)
   }
 }

@@ -36,6 +36,22 @@ object MetadataLogPolicy {
     (full.drop(dropCount), full.take(dropCount))
   }
 
+  /** Commit `updated` over `table`'s metadata with the replaced version
+    * logged (and the trimmed-off tail deleted). Every metadata commit goes
+    * through here or through the snapshot producer's equivalent: a commit
+    * that skips the log strands the previous metadata file where no later
+    * trim can reach it.
+    */
+  def commit(table: Table, updated: TableMetadata): Table = {
+    val (mlog, dropped) = appended(updated,
+      table.metadataPath, math.max(updated.lastUpdatedMs, System.currentTimeMillis()))
+    val withLog = updated.copy(metadataLog = mlog)
+    table.catalog.commit(table.name, table.metadata, withLog, table.currentVersion,
+      Some(table.metadataPath))
+    deleteTrimmed(withLog, dropped)
+    table.refresh()
+  }
+
   /** Delete trimmed-off metadata files — call only AFTER the commit that
     * removed them from the log has landed (a failed commit must leave
     * every previous version readable).
@@ -638,13 +654,6 @@ object Evolve {
       lastUpdatedMs = System.currentTimeMillis()))
   }
 
-  private def commitMetadata(table: Table, updated: TableMetadata): Table = {
-    val (mlog, dropped) = MetadataLogPolicy.appended(updated,
-      table.metadataPath, math.max(updated.lastUpdatedMs, System.currentTimeMillis()))
-    val withLog = updated.copy(metadataLog = mlog)
-    table.catalog.commit(table.name, table.metadata, withLog, table.currentVersion,
-      Some(table.metadataPath))
-    MetadataLogPolicy.deleteTrimmed(withLog, dropped)
-    table.refresh()
-  }
+  private def commitMetadata(table: Table, updated: TableMetadata): Table =
+    MetadataLogPolicy.commit(table, updated)
 }

@@ -214,8 +214,11 @@ object Maintenance {
       covered ++= batchPaths
       // a shared delete file drops with the LAST batch that completes its
       // attachment set — until then the files of later batches still need
-      // it; the dead backlog rides the first commit
-      val batchDroppable = deleteAttachment.collect {
+      // it; the dead backlog rides the first commit. (Collected through an
+      // iterator: a Map's collect yielding (path, offset) pairs would build
+      // a Map keyed by path and keep ONE blob per puffin file, leaving the
+      // file's other DVs live after their data files are gone.)
+      val batchDroppable = deleteAttachment.iterator.collect {
         case (key, dataPaths) if dataPaths.subsetOf(covered) && !dropped(key) => key
       }.toSet
       dropped ++= batchDroppable
@@ -287,7 +290,6 @@ object Maintenance {
       return DeleteCompactionResult(table, 0, 0, 0)
 
     var added: Seq[DataFile] = Nil
-    var supersededDvKeys: Set[(String, Option[Long])] = Set.empty
     if (posParquet.nonEmpty) {
       import org.apache.spark.sql.functions.{col, regexp_replace}
       import spark.implicits._
@@ -311,7 +313,8 @@ object Maintenance {
       if (table.metadata.formatVersion >= 3) {
         // v3 forbids NEW parquet pos-delete files: fold the legacy backlog
         // into per-file deletion vectors instead, OR-ing any existing DV
-        // for the same file (which the new blob then supersedes)
+        // for the same file (which the new blob then supersedes; the
+        // commit removes the old one)
         // keyed canonically to match the folded file_path column above
         val dvByFile: Map[String, (String, Long, Long)] = deleteEntries
           .filter(f => f.content == DataFileContent.PositionDeletes &&
@@ -321,8 +324,6 @@ object Maintenance {
               ((d.path, d.contentOffset.get, d.contentSize.get)))).toMap
         added = Writer.writeDvBlobs(spark, rows, dvByFile, table.location,
           table.metadata.properties)
-        supersededDvKeys = added.flatMap(_.referencedDataFile)
-          .flatMap(dvByFile.get).map(d => (d._1, Option(d._2))).toSet
       } else {
         // v2: re-clustered (file_path, pos)-ordered parquet into
         // ~Σbytes/target output files — the spec's pos-delete layout
@@ -337,7 +338,7 @@ object Maintenance {
           val target = Locations.newDataLocation(table.location,
             table.metadata.properties, "", s"delete-${UUID.randomUUID()}.parquet")
           Writer.moveFile(src, target)
-          val (rowCount, size, _, _) = Writer.footerBasics(target)
+          val (rowCount, size, _) = Writer.footerBasics(target)
           DataFile(DataFileContent.PositionDeletes, target, "PARQUET",
             partition = Seq.empty, recordCount = rowCount, fileSize = size)
         }.filter(_.recordCount > 0)
@@ -345,7 +346,7 @@ object Maintenance {
       }
     }
     val removedKeys = (posParquet ++ danglingDvs)
-      .map(f => (f.path, f.contentOffset)).toSet ++ supersededDvKeys
+      .map(f => (f.path, f.contentOffset)).toSet
     // the v3 branch writes DVs that SUPERSEDE the per-file delete state it
     // folded at scan time — a delete committed concurrently on the same
     // files would be dropped by this rewrite, so it must conflict
@@ -458,10 +459,9 @@ object Maintenance {
       refs = liveRefs,
       snapshotLog = meta.snapshotLog.filterNot(e => expiredIds.contains(e.snapshotId)),
       lastUpdatedMs = System.currentTimeMillis())
-    table.catalog.commit(table.name, meta, updated, table.currentVersion,
-      Some(table.metadataPath))
+    val committed = MetadataLogPolicy.commit(table, updated)
     graft.io.FileIO.deleteAll(toDelete)
-    ExpireResult(table.refresh(), expired.map(_.snapshotId), toDelete)
+    ExpireResult(committed, expired.map(_.snapshotId), toDelete)
   }
 
   /** Merge the current snapshot's data manifests into ~`targetCount` larger
@@ -544,9 +544,7 @@ object Maintenance {
       snapshots = meta.snapshots :+ newSnap,
       snapshotLog = meta.snapshotLog :+ SnapshotLogEntry(snapshotId, now),
       refs = meta.refs.updated("main", SnapshotRef(snapshotId, "branch")))
-    table.catalog.commit(table.name, meta, updated, table.currentVersion,
-      Some(table.metadataPath))
-    table.refresh()
+    MetadataLogPolicy.commit(table, updated)
   }
 
   /** How to treat a listed file whose path-only component matches a

@@ -1,0 +1,65 @@
+package graft.table
+
+import org.apache.spark.sql.SparkSession
+
+/** Which engine reads a planned task set — the one routing rule shared by
+  * the programmatic [[SparkRead.read]] and the SQL catalog's scan builder
+  * ([[graft.sources.SpjScanBuilder]]).
+  *
+  *  - [[ReadRoute.PerTask]]: the DSv2 [[graft.sources.SpjScan]] readers,
+  *    which apply DV bitmaps, positional-delete sets and equality-key sets
+  *    per task from executor LRU caches. Every plain parquet read with a
+  *    bounded equality-delete backlog takes it.
+  *  - everything else reads through [[SparkRead.readTasks]], the anti-join
+  *    pipeline: name-mapped (imported) tables, whose files may lack field
+  *    ids or carry pre-rename names; non-parquet data files, which the
+  *    per-task parquet readers cannot open; and equality-delete backlogs
+  *    over `spark.graft.eqDeleteFallbackBytes`, whose key sets would not
+  *    fit in executor memory.
+  */
+object ReadRoute {
+
+  sealed abstract class Route(val name: String)
+  case object PerTask extends Route("keyset")
+  case object NameMapping extends Route("name-mapping")
+  case object NonParquet extends Route("non-parquet")
+  case object AntiJoin extends Route("anti-join")
+
+  /** A route with the figures it was decided on: the task set's
+    * equality-delete backlog (each file once) and the threshold it was
+    * held against — the SQL builder reports both.
+    */
+  final case class Decision(route: Route, eqBytes: Long, fallbackBytes: Long)
+
+  private val FallbackBytesConf = "spark.graft.eqDeleteFallbackBytes"
+  private val FallbackBytesOption = "eq-delete-fallback-bytes"
+
+  /** Σ distinct eq-delete file bytes above which a read abandons executor
+    * key sets for the distributed anti-join. Key sets are O(delete bytes)
+    * of executor memory per file — fine for the bounded CDC-upsert
+    * pattern, an OOM for an uncompacted backlog. Read option
+    * `eq-delete-fallback-bytes`, else the session conf; default 64 MB.
+    */
+  private def eqFallbackBytes(spark: SparkSession, options: Map[String, String]): Long =
+    options.get(FallbackBytesOption).map(_.toLong).getOrElse(
+      spark.conf.getOption(FallbackBytesConf).map(_.toLong)
+        .getOrElse(64L * 1024 * 1024))
+
+  /** `options`: the read's options (may carry `eq-delete-fallback-bytes`).
+    * `positionMeta`: the read asks for `_file`/`_pos`/lineage metadata
+    * columns through the SQL surface. Row-level operations do, and their
+    * group-filtered scans are file-scoped, so an equality-delete backlog
+    * keeps them on the per-task route.
+    */
+  def choose(spark: SparkSession, table: Table, tasks: Seq[FileScanTask],
+      options: Map[String, String], positionMeta: Boolean = false): Decision = {
+    val eqBytes = tasks.flatMap(_.eqDeletes.map(_._1)).distinctBy(_.path).map(_.fileSize).sum
+    val fallbackBytes = eqFallbackBytes(spark, options)
+    val route =
+      if (table.metadata.properties.contains(graft.format.NameMapping.PropertyKey)) NameMapping
+      else if (tasks.exists(!_.file.format.equalsIgnoreCase("PARQUET"))) NonParquet
+      else if (eqBytes > fallbackBytes && !positionMeta) AntiJoin
+      else PerTask
+    Decision(route, eqBytes, fallbackBytes)
+  }
+}

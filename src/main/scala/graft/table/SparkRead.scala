@@ -8,19 +8,29 @@ import graft.core._
 import graft.format.DataFileContent
 
 /** Executes a planned scan as a Spark DataFrame (reference read dataflow
-  * `table/arrow_scanner.go` §2.3, re-expressed declaratively):
+  * `table/arrow_scanner.go` §2.3).
   *
-  *  - files are read with the table read-schema carrying `parquet.field.id`
-  *    metadata and `spark.sql.parquet.fieldId.read.enabled`, so per-file
-  *    ID-based column resolution (rename/add/drop between file and table
-  *    schema) happens inside Spark's vectorized reader;
-  *  - positional deletes / DVs become a broadcast left-anti join on
-  *    (file, _metadata.row_index);
-  *  - equality deletes become left-anti joins on the equality-id columns,
-  *    scoped by sequence number (strictly greater) — real shuffling joins,
-  *    never in-memory hash sets, per the 100 TB contract;
-  *  - the residual filter lowers to a Catalyst Column and is pushed into the
-  *    parquet scan (row-group stats + bloom + dictionary pruning for free).
+  * [[read]] plans once, then lets [[ReadRoute.choose]] pick the engine:
+  *
+  *  - the per-task route (every plain parquet read with a bounded
+  *    equality-delete backlog): the planned tasks become a DSv2 relation
+  *    ([[graft.sources.SpjPlannedTable]]) served by
+  *    [[graft.sources.SpjScan]]'s readers, the same engine as the SQL
+  *    catalog. Each task reads its data file with the table read-schema
+  *    carrying `parquet.field.id` metadata (ID-based column resolution
+  *    inside Spark's parquet reader) and drops deleted rows as it reads:
+  *    DV bitmaps, positional-delete sets and equality-key sets come from
+  *    executor LRU caches, sequence-scoped by the planner.
+  *  - [[readTasks]] (name-mapped tables, non-parquet files, oversized
+  *    equality-delete backlogs; also Writer rewrites, compaction and the
+  *    changelog): positional deletes become a left-anti join on
+  *    (file, `_metadata.row_index`), DVs a per-file bitmap filter, and
+  *    equality deletes null-safe left-anti joins — shuffling joins, never
+  *    in-memory hash sets, so an unbounded backlog stays readable.
+  *
+  * Either way projection, the residual row filter (pushed into the parquet
+  * reader for row-group pruning) and the limit are Catalyst operators above
+  * the scan.
   */
 object SparkRead {
 
@@ -56,18 +66,35 @@ object SparkRead {
       if (timeTravel) scan.snapshot.flatMap(_.schemaId).getOrElse(meta.currentSchemaId)
       else meta.currentSchemaId
     val schema = meta.schemaById(snapSchemaId).getOrElse(meta.schema)
-    val readSchema: StructType = SchemaBridge.toSpark(schema)
 
     if (tasks.isEmpty) {
       val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], readSchema)
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], SchemaBridge.toSpark(schema))
       return project(applyResidual(empty, scan), scan, schema)
     }
 
-    project(applyResidual(
-      readTasks(spark, tasks, schema, scan.table.nameMapping, scan.rowLineage,
-        scan.table.metadata.specById, ioOptions),
-      scan), scan, schema)
+    val route = ReadRoute.choose(spark, scan.table, tasks, ioOptions).route
+    val df =
+      if (route == ReadRoute.PerTask) withUnknownColumns(schema) { stored =>
+        org.apache.spark.sql.GraftSqlShim.readV2(spark, new graft.sources.SpjPlannedTable(
+          scan.table, stored, tasks,
+          scan.snapshot.map(_.snapshotId), scan.rowLineage, ioOptions))
+      }
+      else readTasks(spark, tasks, schema, scan.table.nameMapping, scan.rowLineage,
+        meta.specById, ioOptions)
+    project(applyResidual(df, scan), scan, schema)
+  }
+
+  /** v3 `unknown`-typed columns are never stored in data files (spec:
+    * always-null forward-compat placeholder, reference types.go:903): read
+    * the stored columns, then append the unknown ones as null columns.
+    */
+  private def withUnknownColumns(schema: IcebergSchema)(
+      readStored: IcebergSchema => DataFrame): DataFrame = {
+    val (unknown, stored) =
+      schema.fields.partition(_.fieldType == graft.core.IcebergTypes.UnknownT)
+    val df = readStored(if (unknown.isEmpty) schema else schema.copy(fields = stored))
+    unknown.foldLeft(df)((d, f) => d.withColumn(f.name, lit(null)))
   }
 
   /** Read a specific set of scan tasks with their MoR deletes applied — the
@@ -80,8 +107,8 @@ object SparkRead {
     * reader hard-fails on ID-less files, so those are read with an
     * ID-metadata-free schema using the mapping's names, then renamed to the
     * canonical schema. Tables never imported skip the footer probe entirely.
-    */
-  /** `ioOptions` are per-scan storage options (typically REST-vended plan
+    *
+    * `ioOptions` are per-scan storage options (typically REST-vended plan
     * credentials resolved through [[graft.io.PlanScopedCredentials]]): they
     * ride as Spark read options, which file sources fold into the scan's
     * Hadoop configuration, so credentials reach the executor-side readers
@@ -103,15 +130,21 @@ object SparkRead {
       // DSv2 reader cannot resolve)
       keepFilePos: Boolean = false): DataFrame = {
     configure(spark)
-    // v3 `unknown`-typed columns are never stored in data files (spec:
-    // always-null forward-compat placeholder, reference types.go:903) —
-    // strip them from the physical read schema and synthesize null columns
-    // after the union
-    val unknownFields = schema.fields.filter(_.fieldType == graft.core.IcebergTypes.UnknownT)
-    val storedSchema =
-      if (unknownFields.isEmpty) schema
-      else schema.copy(fields =
-        schema.fields.filterNot(_.fieldType == graft.core.IcebergTypes.UnknownT))
+    val full = withUnknownColumns(schema) { storedSchema =>
+      readStoredTasks(spark, tasks, storedSchema, nameMapping, rowLineage,
+        specById, ioOptions, keepFilePos)
+    }
+    // residual ROW filter (spec fileScanTask residual-filter semantics):
+    // planning pruned FILES; matching files still carry non-matching rows.
+    // Lowered to a Catalyst Column so it pushes into the parquet scan.
+    if (residual == graft.core.Expr.AlwaysTrue) full
+    else full.filter(graft.core.Expr.toColumn(residual))
+  }
+
+  private def readStoredTasks(spark: SparkSession, tasks: Seq[FileScanTask],
+      storedSchema: IcebergSchema, nameMapping: Option[graft.format.NameMapping],
+      rowLineage: Boolean, specById: Int => Option[graft.format.PartitionSpec],
+      ioOptions: Map[String, String], keepFilePos: Boolean): DataFrame = {
     val readSchema: StructType = SchemaBridge.toSpark(storedSchema)
 
     // group tasks by identical (parquet pos-delete set, eq-delete set). DVs
@@ -153,13 +186,7 @@ object SparkRead {
         keepFilePos) }
     }
 
-    val stored = parts.reduce(_ unionByName _)
-    val full = unknownFields.foldLeft(stored)((d, f) => d.withColumn(f.name, lit(null)))
-    // residual ROW filter (spec fileScanTask residual-filter semantics):
-    // planning pruned FILES; matching files still carry non-matching rows.
-    // Lowered to a Catalyst Column so it pushes into the parquet scan.
-    if (residual == graft.core.Expr.AlwaysTrue) full
-    else full.filter(graft.core.Expr.toColumn(residual))
+    parts.reduce(_ unionByName _)
   }
 
   private def readSubGroup(spark: SparkSession, groupTasks: Seq[FileScanTask],
@@ -306,8 +333,16 @@ object SparkRead {
       // encoding, table/equality_delete_reader.go:352-527), which a plain
       // equi-join would silently drop.
       eqDeletes.groupBy(_._1.equalityIds).foreach { case (eqIds, dels) =>
-        val keyCols = eqIds.map(id => schema.idToField(id).name)
-        val delDf = spark.read.options(ioOptions).parquet(dels.map(_._1.path): _*)
+        val keyFields = eqIds.map(schema.idToField)
+        val keyCols = keyFields.map(_.name)
+        // explicit key schema, by NAME without field ids (delete files may
+        // lack them): no inference footer read, no listing job. Required
+        // keys stay non-nullable, so a delete file lacking the column fails
+        // the read instead of matching nothing (as the per-task readers do)
+        val keySchema = StructType(keyFields.map(f =>
+          StructField(f.name, SchemaBridge.toSparkType(f.fieldType), nullable = !f.required)))
+        val delDf = MetadataRead.parquet(spark,
+            dels.map(d => (d._1.path, d._1.fileSize)).distinctBy(_._1), keySchema, ioOptions)
           .select(keyCols.map(k => col(k).as(s"__del_$k")): _*)
         val cond = keyCols.map(k => col(k) <=> col(s"__del_$k")).reduce(_ && _)
         df = df.join(delDf, cond, "left_anti")

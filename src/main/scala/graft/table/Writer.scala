@@ -285,14 +285,20 @@ object Writer {
     val tmpDir = s"${table.location}/tmp-delete-${UUID.randomUUID()}"
     matched.write.options(encryptionOptions(spark, table)).parquet(tmpDir)
     val written = listParquet(tmpDir)
+    // a delete file covering exactly one data file references it, so
+    // planning attaches it to that file alone instead of to every file
+    val candidateByCanon = candidates.map(t =>
+      graft.io.FileIO.canonical(t.file.path) -> t.file.path).toMap
     val deleteFiles = written.map { src =>
       val target = Locations.newDataLocation(table.location,
         table.metadata.properties, "", s"delete-${UUID.randomUUID()}.parquet")
       moveFile(src, target)
-      val (rowCount, size, _, _) = footerBasics(target)
+      val (rowCount, size, single) = footerBasics(target)
       DataFile(DataFileContent.PositionDeletes, target, "PARQUET",
         partition = Seq.empty, // global delete: unpartitioned spec (see commitSnapshotOnce)
-        recordCount = rowCount, fileSize = size)
+        recordCount = rowCount, fileSize = size,
+        referencedDataFile = single.flatMap(p =>
+          candidateByCanon.get(graft.io.FileIO.canonical(p))))
     }
     deleteTree(tmpDir)
     if (deleteFiles.forall(_.recordCount == 0))
@@ -363,6 +369,7 @@ object Writer {
     val deleteFiles = writeDvBlobs(spark, withExisting, existingDvs, location,
       table.metadata.properties)
     if (deleteFiles.isEmpty) return table
+    // the commit removes each folded prior DV (one DV per data file)
     commitSnapshot(table, "delete", Nil, Set.empty, deleteFiles,
       conflictCheck = Some(ConflictCheck(filter = filter,
         candidatePaths = candidates.map(_.file.path).toSet,
@@ -476,7 +483,7 @@ object Writer {
       val target = Locations.newDataLocation(table.location,
         table.metadata.properties, "", s"eq-delete-${UUID.randomUUID()}.parquet")
       moveFile(src, target)
-      val (rowCount, size, _, _) = footerBasics(target)
+      val (rowCount, size, _) = footerBasics(target)
       DataFile(DataFileContent.EqualityDeletes, target, "PARQUET",
         partition = Seq.empty, // global delete: unpartitioned spec (see commitSnapshotOnce)
         recordCount = rowCount, fileSize = size, equalityIds = eqIds)
@@ -509,7 +516,7 @@ object Writer {
       val target = Locations.newDataLocation(table.location,
         table.metadata.properties, "", s"eq-delete-${UUID.randomUUID()}.parquet")
       moveFile(src, target)
-      val (rowCount, size, _, _) = footerBasics(target)
+      val (rowCount, size, _) = footerBasics(target)
       DataFile(DataFileContent.EqualityDeletes, target, "PARQUET",
         partition = Seq.empty, // global delete: unpartitioned spec (see commitSnapshotOnce)
         recordCount = rowCount, fileSize = size, equalityIds = eqIds)
@@ -1322,11 +1329,30 @@ object Writer {
     case _ => v
   }
 
-  private[table] def footerBasics(path: String): (Long, Long, Int, Int) = {
+  /** Row count and byte size of a written file, plus — for a
+    * positional-delete file — the one data file it targets when its
+    * `file_path` column stats have min = max in every row group (the
+    * spec's inference of `referenced_data_file`); None otherwise.
+    */
+  private[table] def footerBasics(path: String): (Long, Long, Option[String]) = {
     val reader = graft.encryption.ParquetEncryption.openFooterReader(path)
     try {
-      val rows = reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-      (rows, graft.io.FileIO.size(path), reader.getFooter.getBlocks.size(), 0)
+      val blocks = reader.getFooter.getBlocks.asScala.toSeq
+      // a positional-delete file's `file_path` stats: one value across
+      // every row group means the file targets exactly one data file
+      val bounds = blocks.map(_.getColumns.asScala
+        .find(_.getPath.toDotString == "file_path").map(_.getStatistics)
+        .filter(st => !st.isEmpty && st.hasNonNullValue && st.getNumNulls == 0)
+        .map(st => (st.genericGetMin, st.genericGetMax)))
+      val single = bounds match {
+        case bs if bs.nonEmpty && bs.forall(_.isDefined) =>
+          bs.flatMap(_.toSeq).flatMap { case (lo, hi) => Seq(lo, hi) }.distinct match {
+            case Seq(b: org.apache.parquet.io.api.Binary) => Some(b.toStringUsingUTF8)
+            case _ => None
+          }
+        case _ => None
+      }
+      (blocks.map(_.getRowCount).sum, graft.io.FileIO.size(path), single)
     } finally reader.close()
   }
 
@@ -1686,16 +1712,26 @@ object Writer {
 
     var manifests = Seq.newBuilder[ManifestFile]
 
+    // one deletion vector per data file (spec v3): an added DV replaces the
+    // base's live DV on the same file. Nothing reads the old one again, but
+    // a live entry would keep its puffin file through every compaction and
+    // expiry — so it leaves in this commit, whichever writer added the DV
+    val dvTargets: Set[String] = addedDeleteFiles.filter(_.format == "PUFFIN")
+      .flatMap(_.referencedDataFile).map(graft.io.FileIO.canonical).toSet
+    val filterDeletes = removedDeleteKeys.nonEmpty || dvTargets.nonEmpty
+
     // carry forward / filter previous manifests
-    if (removedPaths.isEmpty && removedDeleteKeys.isEmpty) {
+    if (removedPaths.isEmpty && !filterDeletes) {
       manifests ++= previousManifests
     } else {
       previousManifests.foreach { m =>
         val isData = m.content == ManifestContent.Data
         def keep(e: ManifestEntry): Boolean =
           if (isData) !removedPaths.contains(e.file.path)
-          else !removedDeleteKeys.contains((e.file.path, e.file.contentOffset))
-        if ((isData && removedPaths.isEmpty) || (!isData && removedDeleteKeys.isEmpty)) {
+          else !removedDeleteKeys.contains((e.file.path, e.file.contentOffset)) &&
+            !(e.file.format == "PUFFIN" && e.file.referencedDataFile.exists(r =>
+              dvTargets(graft.io.FileIO.canonical(r))))
+        if ((isData && removedPaths.isEmpty) || (!isData && !filterDeletes)) {
           manifests += m
         } else {
           // materialize list-level inherited first_row_id (field 520) as

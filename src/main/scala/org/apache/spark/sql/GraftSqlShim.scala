@@ -4,9 +4,11 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Minimal bridge into `private[sql]` Spark surface for the V1 streaming
-  * source/sink providers in `graft.streaming`. The V1 micro-batch contract
-  * requires `Source.getBatch` to return a DataFrame whose leaf is marked
+/** Minimal bridge into `private[sql]` Spark surface.
+  *
+  * For the V1 streaming source/sink providers in `graft.streaming`: the
+  * V1 micro-batch contract requires `Source.getBatch` to return a
+  * DataFrame whose leaf is marked
   * `isStreaming = true` (MicroBatchExecution asserts it), and conversely a
   * `Sink.addBatch` frame carries a streaming plan that batch writers reject.
   * Both directions are the exact pattern Spark's own Kafka V1 source used:
@@ -38,4 +40,12 @@ object GraftSqlShim {
     * the normal write path can execute.
     */
   def asBatchFrame(df: DataFrame): DataFrame = reroot(df, streaming = false)
+
+  /** A DataFrame straight over a DSv2 table that no catalog names — the
+    * programmatic read's relation ([[graft.table.SparkRead.read]]). Column
+    * pruning, filter and limit pushdown run as for any catalog table.
+    */
+  def readV2(spark: SparkSession, table: connector.catalog.Table): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      execution.datasources.v2.DataSourceV2Relation.create(table, None, None))
 }

@@ -9,7 +9,7 @@ import org.scalatest.BeforeAndAfterAll
 import graft.catalog.HadoopCatalog
 import graft.core._
 import graft.format.PartitionSpec
-import graft.table.{Evolve, Maintenance, Writer}
+import graft.table.{Evolve, Maintenance, SparkRead, Writer}
 
 /** Retention-policy snapshot expiry: ref max-ref-age-ms, branch
   * min-snapshots-to-keep, and the history.expire.* table defaults.
@@ -63,5 +63,54 @@ class ExpirePolicySpec extends AnyFunSuite with BeforeAndAfterAll {
     val res2 = Maintenance.expireSnapshotsByPolicy(res.table,
       nowMs = System.currentTimeMillis() + 60000)
     assert(res2.expiredSnapshots.isEmpty)
+  }
+
+  test("upsert, MoR delete, compaction and expire rounds leave no files behind") {
+    import spark.implicits._
+    val whDir = Files.createTempDirectory("graft-exp-rounds").toString
+    val cat = new HadoopCatalog(whDir)
+    val df = (0L until 400L).map(k => (k, s"v$k")).toDF("k", "v")
+    val schema = SchemaBridge.fromSpark(df.schema)
+    var t = cat.createTable("rounds", schema,
+      PartitionSpec.builder(schema).add("k", Transforms.Bucket(4)).build(),
+      properties = Map(
+        "write.metadata.delete-after-commit.enabled" -> "true",
+        "write.metadata.previous-versions-max" -> "4",
+        "write.delete.mode" -> "merge-on-read",
+        "write.merge.mode" -> "merge-on-read"))
+    t = Evolve.upgradeFormatVersion(t, 3)
+    t = Writer.append(spark, t, df)
+    def files(): Seq[String] =
+      graft.io.FileIO.listFilesRecursive(t.location).map(_.path).sorted
+    spark.conf.set("spark.sql.catalog.gexp", classOf[graft.sources.GraftSpjCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gexp.uri", whDir)
+    val live = scala.collection.mutable.Set((0L until 400L): _*)
+    val counts = (1 to 6).map { r =>
+      t = Writer.upsert(spark, t,
+        Seq((r.toLong, s"u$r"), (100L + r, s"u$r")).toDF("k", "v"), Seq("k"))
+      val merged = spark.sql(s"SELECT _file FROM gexp.rounds WHERE k = ${300L + r}")
+        .head.getString(0)
+      Seq((300L + r, s"m$r"), (1000L + r, s"m$r")).toDF("k", "v")
+        .createOrReplaceTempView("exp_merge_src")
+      spark.sql("""MERGE INTO gexp.rounds t USING exp_merge_src s ON t.k = s.k
+        |WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""".stripMargin).collect()
+      // one deleted key shares the merged row's old file: its DV
+      // supersedes the MERGE's DV there
+      val neighbour = spark.sql("SELECT k, _file FROM gexp.rounds").collect()
+        .collect { case row if row.getString(1) == merged && row.getLong(0) >= 200 => row.getLong(0) }
+        .min
+      spark.sql(s"DELETE FROM gexp.rounds WHERE k IN (${200L + r}, $neighbour)").collect()
+      live += 1000L + r
+      live --= Seq(200L + r, neighbour)
+      t = cat.loadTable("rounds")
+      val c = Maintenance.rewriteDataFiles(spark, t)
+      t = Maintenance.expireSnapshots(c.table, System.currentTimeMillis(),
+        retainLast = 1).table
+      files().size
+    }
+    assert(counts.drop(2).distinct.size === 1,
+      s"files under the table location by round: $counts\n${files().mkString("\n")}")
+    assert(SparkRead.read(spark, t.newScan).select("k").collect().map(_.getLong(0)).toSet ===
+      live.toSet)
   }
 }

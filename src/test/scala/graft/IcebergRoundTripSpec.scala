@@ -182,6 +182,7 @@ class IcebergRoundTripSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = SparkRead.read(spark, t2.newScan)
     val nScans = df.queryExecution.optimizedPlan.collect {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
     }.size
     assert(nScans === 1, s"DV table must plan one scan, got $nScans")
     val expected = cust.filter("c_acctbal >= 5000.0").count()

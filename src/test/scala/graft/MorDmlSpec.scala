@@ -66,6 +66,20 @@ class MorDmlSpec extends AnyFunSuite with BeforeAndAfterAll {
     // both delete rounds still apply
     assert(spark.sql("SELECT count(*) FROM g.md WHERE k % 10 IN (3, 7)")
       .head.getLong(0) === 0)
+    // each commit removed the DVs it superseded, on the SQL route and the
+    // programmatic one alike: one live DV per data file
+    def liveDvTargets(): Seq[String] =
+      graft.table.Inspect.deleteFiles(spark, catalog.loadTable("md"))
+        .filter("file_format = 'PUFFIN'").select("referenced_data_file")
+        .collect().map(_.getString(0)).toSeq
+    assert(liveDvTargets().nonEmpty)
+    assert(liveDvTargets().distinct.size === liveDvTargets().size, liveDvTargets())
+    // re-deleting a deleted row still writes a DV that folds and
+    // supersedes the one on its file
+    graft.table.Writer.deleteWhereDV(spark, catalog.loadTable("md"),
+      graft.core.Expr.eq("k", 3L))
+    assert(spark.sql("SELECT count(*) FROM g.md").head.getLong(0) === 80)
+    assert(liveDvTargets().distinct.size === liveDvTargets().size, liveDvTargets())
   }
 
   test("v2 table: MoR DELETE writes spec-ordered parquet positional deletes") {

@@ -100,4 +100,46 @@ class MorPartitionedSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(SparkRead.read(spark, t3.newScan).count() === 23)
     assert(t3.metadata.partitionSpecs.count(_.fields.isEmpty) === 1)
   }
+
+  test("a multi-file positional delete attaches each delete file only to its own data file") {
+    val nation = spark.read.parquet(s"$sf/nation.parquet")
+    val t1 = freshNation("morp_scoped")
+    val before = SparkRead.read(spark, t1.newScan).collect().map(_.toString).toSet
+    val paths = t1.newScan.planFiles().map(t => graft.io.FileIO.canonical(t.file.path))
+    assert(paths.size >= 4)
+    // the writer hashes file_path over spark.sql.shuffle.partitions writer
+    // tasks, one delete file each: pick a width that gives every data file
+    // a task of its own
+    import spark.implicits._
+    val width = Iterator.from(16).find { n =>
+      paths.toDF("p").select(pmod(hash(col("p")), lit(n))).distinct().count() == paths.size
+    }.get
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val prior = keys.map(k => k -> spark.conf.getOption(k))
+    val t2 = try {
+      spark.conf.set(keys(0), width.toString)
+      spark.conf.set(keys(1), "false")
+      Writer.deleteWhereMoR(spark, t1, Expr.lt("n_nationkey", 20))
+    } finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    val tasks = t2.newScan.planFiles()
+    val deleteFiles = tasks.flatMap(_.posDeletes).distinctBy(_.path)
+    assert(deleteFiles.size >= 2)
+    assert(deleteFiles.forall(_.referencedDataFile.isDefined))
+    // every delete file a task carries holds positions of that task's file
+    tasks.foreach { t =>
+      t.posDeletes.foreach { d =>
+        val targets = spark.read.parquet(d.path).select("file_path").distinct()
+          .collect().map(r => graft.io.FileIO.canonical(r.getString(0))).toSet
+        assert(targets(graft.io.FileIO.canonical(t.file.path)),
+          s"${t.file.path} carries ${d.path}, which targets only $targets")
+        d.referencedDataFile.foreach(ref => assert(ref === t.file.path))
+      }
+    }
+    val want = nation.filter(col("n_nationkey") >= 20).collect().map(_.toString).toSet
+    val got = SparkRead.read(spark, t2.newScan).collect().map(_.toString).toSet
+    assert(got === want && want.subsetOf(before))
+  }
 }

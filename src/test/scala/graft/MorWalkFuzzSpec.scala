@@ -62,16 +62,25 @@ class MorWalkFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val history = mutable.Buffer.empty[(Long, Seq[(Long, String, Int)])]
 
+    // two independent delete engines against the model after every op:
+    // the per-task engine behind SparkRead.read (and the SQL catalog), and
+    // the anti-join pipeline behind readTasks (rewrites, compaction,
+    // oversized backlogs)
     def verify(step: Int, op: String): Unit = {
       val head = t.refresh()
-      val got = SparkRead.read(spark, head.newScan)
-        .select(col("id"), col("seg"), col("v"))
-        .as[(Long, String, Int)].collect().sortBy(_._1).toSeq
       val want = model.toSeq.map { case (id, (s, v)) => (id, s, v) }.sortBy(_._1)
-      assert(got === want,
-        s"fv=$formatVersion partitioned=$partitioned seed=$seed step=$step op=$op: " +
-        s"table has ${got.size} rows, model ${want.size}\n" +
-        s"extra=${got.diff(want).take(5)}\nmissing=${want.diff(got).take(5)}")
+      val tasks = head.newScan.planFiles()
+      val engines = Seq("per-task" -> SparkRead.read(spark, head.newScan)) ++
+        (if (tasks.isEmpty) Nil else Seq("anti-join" -> SparkRead.readTasks(spark,
+          tasks, head.schema, specById = head.metadata.specById)))
+      engines.foreach { case (engine, df) =>
+        val got = df.select(col("id"), col("seg"), col("v"))
+          .as[(Long, String, Int)].collect().sortBy(_._1).toSeq
+        assert(got === want,
+          s"fv=$formatVersion partitioned=$partitioned seed=$seed step=$step op=$op: " +
+          s"$engine engine has ${got.size} rows, model ${want.size}\n" +
+          s"extra=${got.diff(want).take(5)}\nmissing=${want.diff(got).take(5)}")
+      }
       head.metadata.currentSnapshotId.foreach(id => history += id -> want)
     }
 
@@ -150,7 +159,7 @@ class MorWalkFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the DSv2 catalog route over the walk's final — often MULTI-SPEC —
     // state: the SPJ partitioning claim must narrow or drop soundly
     // (effectiveClaim) and every delete shape must apply; same rows as the
-    // V1 route verify() trusted at every step
+    // model both engines matched at every step
     import spark.implicits._
     locally {
       val ctl = s"mw_${formatVersion}_${partitioned}_$seed"

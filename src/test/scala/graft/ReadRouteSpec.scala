@@ -1,0 +1,257 @@
+package graft
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.BeforeAndAfterAll
+
+import graft.catalog.HadoopCatalog
+import graft.core.{Expr, SchemaBridge, Transforms}
+import graft.format.PartitionSpec
+import graft.table.{Evolve, Scan, SparkRead, Table, Writer}
+
+/** The programmatic read and the SQL catalog share one delete engine and
+  * one routing rule ([[graft.table.ReadRoute]]). `SparkRead.read` serves
+  * plain parquet MoR tables from the per-task [[graft.sources.SpjScan]]
+  * readers and sends name-mapped, non-parquet and oversized-backlog
+  * tables to the anti-join pipeline (`SparkRead.readTasks`). Every case
+  * here checks the per-task answer against that independent pipeline.
+  */
+class ReadRouteSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private lazy val wh = Files.createTempDirectory("graft-readroute").toString
+  private lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.conf.set("spark.sql.catalog.grr", classOf[graft.sources.GraftSpjCatalog].getName)
+    s.conf.set("spark.sql.catalog.grr.uri", wh)
+    s
+  }
+  private lazy val catalog = new HadoopCatalog(wh)
+
+  override def afterAll(): Unit = spark.stop()
+
+  private def v2Scan(df: DataFrame): Option[org.apache.spark.sql.connector.read.Scan] =
+    df.queryExecution.optimizedPlan.collectFirst { case r: DataSourceV2ScanRelation => r.scan }
+
+  private def perTask(df: DataFrame): Boolean =
+    v2Scan(df).exists(_.isInstanceOf[graft.sources.SpjScan])
+
+  /** The anti-join pipeline's answer for the same scan. */
+  private def viaReadTasks(scan: Scan): DataFrame = {
+    val meta = scan.table.metadata
+    val timeTravel =
+      scan.snapshotId.isDefined || scan.asOfTimestampMs.isDefined || scan.ref.isDefined
+    val schema = scan.snapshot.filter(_ => timeTravel).flatMap(_.schemaId)
+      .flatMap(meta.schemaById).getOrElse(meta.schema)
+    val df = SparkRead.readTasks(spark, scan.planFiles(), schema,
+      scan.table.nameMapping, scan.rowLineage, meta.specById, residual = scan.filter)
+    if (scan.selected.isEmpty) df else df.select(scan.selected.map(col): _*)
+  }
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  private def base(lo: Long, hi: Long): DataFrame =
+    spark.range(lo, hi).select(col("id"),
+      (col("id") % 4).cast("int").as("seg"),
+      (col("id") * 7 % 100).cast("int").as("v"))
+
+  /** A partitioned table carrying every delete kind of its format version:
+    * positional deletes (v2) or deletion vectors (v3), then an equality
+    * delete and an upsert.
+    */
+  private def morTable(name: String, formatVersion: Int): Table = {
+    import spark.implicits._
+    val b = base(0, 3000)
+    var t = catalog.createTable(name, SchemaBridge.fromSpark(b.schema),
+      PartitionSpec.builder(SchemaBridge.fromSpark(b.schema))
+        .add("seg", Transforms.Identity).build())
+    if (formatVersion >= 3) t = Evolve.upgradeFormatVersion(t, 3)
+    t = Writer.append(spark, t, b.repartition(3))
+    t = Writer.append(spark, t, base(3000, 4000))
+    t = if (formatVersion >= 3) Writer.deleteWhereDV(spark, t, Expr.lt("v", 10))
+      else Writer.deleteWhereMoR(spark, t, Expr.lt("v", 10))
+    t = Writer.equalityDelete(spark, t, Seq(16L, 17L, 18L).toDF("id"), Seq("id"))
+    Writer.upsert(spark, t,
+      Seq((20L, 1, 500), (21L, 2, 501), (9999L, 3, 502)).toDF("id", "seg", "v"), Seq("id"))
+  }
+
+  private lazy val mor2 = morTable("rr_mor2", 2)
+  private lazy val mor3 = morTable("rr_mor3", 3)
+
+  test("read serves plain MoR tables from the per-task engine, same rows as the anti-join pipeline") {
+    Seq(mor2, mor3).foreach { t =>
+      val scans = Seq(t.newScan,
+        t.newScan.select("id", "v").withFilter(Expr.gtEq("v", 50)),
+        t.newScan.withFilter(Expr.eq("seg", 2)))
+      scans.foreach { scan =>
+        val df = SparkRead.read(spark, scan)
+        assert(perTask(df), s"${t.name}: expected the per-task scan in\n${df.queryExecution.optimizedPlan}")
+        assert(rows(df) === rows(viaReadTasks(scan)), s"${t.name} ${scan.filter}")
+      }
+      // the deletes really apply: 4000 rows, v < 10 gone, three eq-deleted
+      // keys gone, one fresh upserted key
+      val live = SparkRead.read(spark, t.newScan).count()
+      assert(live === 4000L - 400L - 3L + 1L, t.name)
+    }
+  }
+
+  test("read plans once: one ScanReport per programmatic query") {
+    val mem = new graft.metrics.InMemoryReporter
+    graft.metrics.Registry.register("rr_plan_once", _ => mem)
+    val t = Evolve.setProperties(catalog.loadTable("rr_mor2"),
+      Map(graft.metrics.Registry.ReporterImplKey -> "rr_plan_once"))
+    mem.reset()
+    SparkRead.read(spark, t.newScan.withFilter(Expr.gtEq("v", 50)))
+      .groupBy("seg").count().collect()
+    assert(mem.reports.count(_.isInstanceOf[graft.metrics.ScanReport]) === 1)
+  }
+
+  test("read takes readTasks for name-mapped, ORC and over-threshold tables") {
+    import spark.implicits._
+    // a name-mapped import: files written without field ids
+    val flat = Files.createTempDirectory("graft-rr-flat").toString + "/flat"
+    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "false")
+    try base(0, 100).write.parquet(flat)
+    finally spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+    val imported = Writer.snapshotImport(spark, catalog, flat, "rr_imported")
+    assert(imported.nameMapping.isDefined)
+
+    // ORC data files, name mapping removed: routed by file format alone
+    val orcDir = Files.createTempDirectory("graft-rr-orc").toString + "/orc"
+    base(0, 100).write.orc(orcDir)
+    val orcFiles = graft.io.FileIO.listFilesRecursive(orcDir).map(_.path)
+      .filter(_.endsWith(".orc"))
+    val orc0 = catalog.createTable("rr_orc",
+      SchemaBridge.fromSpark(base(0, 1).schema), PartitionSpec.Unpartitioned)
+    val orc = Evolve.removeProperties(Writer.addFiles(spark, orc0, orcFiles),
+      Seq(graft.format.NameMapping.PropertyKey))
+    assert(orc.nameMapping.isEmpty)
+
+    // an equality-delete backlog over the fallback threshold
+    var backlog = Writer.append(spark, catalog.createTable("rr_backlog",
+      SchemaBridge.fromSpark(base(0, 1).schema), PartitionSpec.Unpartitioned), base(0, 100))
+    backlog = Writer.equalityDelete(spark, backlog, Seq(1L, 2L).toDF("id"), Seq("id"))
+
+    val saved = spark.conf.getOption("spark.graft.eqDeleteFallbackBytes")
+    try {
+      spark.conf.set("spark.graft.eqDeleteFallbackBytes", "1")
+      Seq(imported -> 100L, orc -> 100L, backlog -> 98L).foreach { case (t, n) =>
+        val df = SparkRead.read(spark, t.newScan)
+        assert(v2Scan(df).isEmpty, s"${t.name}: expected the anti-join pipeline in\n" +
+          df.queryExecution.optimizedPlan)
+        assert(df.count() === n, t.name)
+        assert(rows(df) === rows(viaReadTasks(t.newScan)), t.name)
+      }
+    } finally saved match {
+      case Some(x) => spark.conf.set("spark.graft.eqDeleteFallbackBytes", x)
+      case None => spark.conf.unset("spark.graft.eqDeleteFallbackBytes")
+    }
+    // under the default threshold the same backlog reads per task
+    assert(perTask(SparkRead.read(spark, backlog.newScan)))
+    assert(SparkRead.read(spark, backlog.newScan).count() === 98L)
+  }
+
+  test("time travel, row lineage, limit and unknown columns read the same rows as before") {
+    import spark.implicits._
+    // time travel to every snapshot, including the pre-delete ones
+    mor2.metadata.snapshots.foreach { s =>
+      val scan = mor2.newScan.useSnapshot(s.snapshotId)
+      val df = SparkRead.read(spark, scan)
+      assert(perTask(df))
+      assert(rows(df) === rows(viaReadTasks(scan)), s"snapshot ${s.snapshotId}")
+    }
+    // time travel across a rename: the snapshot's schema names the columns
+    val renamed = Evolve.renameColumn(catalog.loadTable("rr_mor2"), "v", "value")
+    val before = renamed.newScan.useSnapshot(mor2.metadata.currentSnapshotId.get)
+    assert(SparkRead.read(spark, before).columns.toSeq === Seq("id", "seg", "v"))
+    assert(rows(SparkRead.read(spark, before)) === rows(viaReadTasks(before)))
+    assert(SparkRead.read(spark, renamed.newScan).columns.toSeq === Seq("id", "seg", "value"))
+
+    // row lineage over DVs, equality deletes and an upsert
+    val lin = mor3.newScan.withRowLineage
+    val linDf = SparkRead.read(spark, lin)
+    assert(perTask(linDf))
+    assert(linDf.columns.toSeq ===
+      Seq("id", "seg", "v", SchemaBridge.RowIdCol, SchemaBridge.LastUpdatedSeqCol))
+    assert(rows(linDf) === rows(viaReadTasks(lin)))
+    assert(linDf.filter(col(SchemaBridge.RowIdCol).isNull).count() === 0L)
+
+    // limit: exactly n rows, all of them live
+    val all = rows(SparkRead.read(spark, mor2.newScan)).toSet
+    val limited = rows(SparkRead.read(spark, mor2.newScan.withLimit(25)))
+    assert(limited.size === 25 && limited.forall(all))
+
+    // v3 `unknown` columns: never stored, read as a trailing null column
+    var u = Evolve.upgradeFormatVersion(catalog.createTable("rr_unknown",
+      SchemaBridge.fromSpark(base(0, 1).schema), PartitionSpec.Unpartitioned), 3)
+    u = Writer.append(spark, u, base(0, 50))
+    u = Evolve.addColumn(u, "future", graft.core.IcebergTypes.UnknownT)
+    u = Writer.append(spark, u, base(50, 60))
+    u = Writer.equalityDelete(spark, u, Seq(3L).toDF("id"), Seq("id"))
+    val uDf = SparkRead.read(spark, u.newScan)
+    assert(perTask(uDf))
+    assert(uDf.columns.toSeq === Seq("id", "seg", "v", "future"))
+    assert(uDf.filter(col("future").isNotNull).count() === 0L)
+    assert(rows(uDf) === rows(viaReadTasks(u.newScan)))
+    assert(uDf.count() === 59L)
+  }
+
+  test("time travel names equality-delete keys by the snapshot's schema") {
+    import spark.implicits._
+    // the delete files carry the key's name at delete time; a later rename
+    // must not stop a read of that snapshot from applying them
+    Seq("optional" -> true, "required" -> false).foreach { case (kind, optional) =>
+      val rows40 = base(0, 40)
+      val df = if (optional) rows40.withColumn("id", when(col("id") >= 0, col("id")))
+        else rows40
+      val name = s"rr_eqrename_$kind"
+      var t = catalog.createTable(name, SchemaBridge.fromSpark(df.schema),
+        PartitionSpec.Unpartitioned)
+      t = Writer.append(spark, t, df)
+      t = Writer.equalityDelete(spark, t, Seq(3L, 4L).toDF("id"), Seq("id"))
+      val snap = t.metadata.currentSnapshotId.get
+      t = Evolve.renameColumn(t, "id", "ident")
+      val scan = t.newScan.useSnapshot(snap)
+      val got = SparkRead.read(spark, scan)
+      assert(perTask(got), kind)
+      assert(got.count() === 38L, kind)
+      assert(rows(got) === rows(viaReadTasks(scan)), kind)
+      // the SQL route's time travel names them the same way
+      assert(spark.sql(s"SELECT * FROM grr.$name VERSION AS OF $snap").count() === 38L, kind)
+    }
+  }
+
+  test("a graft DSv2 scan of a MoR table reports its input records to listeners") {
+    val records = new java.util.concurrent.atomic.AtomicLong(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) { records.addAndGet(e.taskMetrics.inputMetrics.recordsRead); () }
+    }
+    val sc = spark.sparkContext
+    val t = mor2
+    val live = SparkRead.read(spark, t.newScan).count()
+    org.apache.spark.ListenerBusSync.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      Seq(
+        () => spark.sql(s"SELECT id, seg FROM grr.${t.name}").collect().length.toLong,
+        () => SparkRead.read(spark, t.newScan.select("id", "seg")).collect().length.toLong
+      ).foreach { run =>
+        records.set(0)
+        assert(run() === live)
+        org.apache.spark.ListenerBusSync.drain(sc)
+        assert(records.get >= live,
+          s"input records ${records.get} below the $live live rows read")
+      }
+    } finally sc.removeSparkListener(listener)
+  }
+}
