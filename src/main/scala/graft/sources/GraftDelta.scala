@@ -261,13 +261,21 @@ final class GraftDeltaBatchWrite(op: GraftDeltaOperation, table: GraftTable,
     val delSchema = StructType(Seq(
       StructField("file_path", StringType, nullable = false),
       StructField("pos", LongType, nullable = false)))
-    val posDelReader = org.apache.spark.sql.graft.ParquetRowReadBridge.rowReader(
-      spark, delSchema, ioOpts, Nil)
     // delete format follows the table's format version: v3 → deletion
     // vectors (puffin, supersede-folded); v2 → parquet positional deletes
-    // (additive — readers union them, no fold obligation)
+    // (additive — readers union them, no fold obligation). The reader
+    // broadcasts the Hadoop conf and the writer ships a serialized one in
+    // every task, so each is built only when used: the reader when a DV
+    // folds prior parquet positional deletes, the writer for v2.
     val useDv = table.metadata.formatVersion >= 3
-    val posDelWriter = ParquetRowWriteBridge.writerFactory(spark, delSchema, ioOpts)
+    val posDelReader =
+      if (useDv && existingPosFiles.nonEmpty)
+        Some(org.apache.spark.sql.graft.ParquetRowReadBridge.rowReader(
+          spark, delSchema, ioOpts, Nil))
+      else None
+    val posDelWriter =
+      if (useDv) None
+      else Some(ParquetRowWriteBridge.writerFactory(spark, delSchema, ioOpts))
     new GraftDeltaWriterFactory(inner, existingDvs, existingPosFiles,
       posDelReader, ioOpts, table.location, useDv, posDelWriter,
       table.metadata.properties)
@@ -343,11 +351,11 @@ final class GraftDeltaWriterFactory(
     inner: GraftCowWriterFactory,
     existingDvs: Map[String, (String, Long, Long)],
     existingPosFiles: Map[String, Seq[(String, Long)]],
-    posDelReader: (String, Long) => Iterator[InternalRow],
+    posDelReader: Option[(String, Long) => Iterator[InternalRow]],
     ioOptions: Map[String, String],
     location: String,
     useDv: Boolean,
-    posDelWriter: String => org.apache.spark.sql.graft.RowFileWriter,
+    posDelWriter: Option[String => org.apache.spark.sql.graft.RowFileWriter],
     tableProps: Map[String, String] = Map.empty)
     extends DeltaWriterFactory {
 
@@ -368,11 +376,11 @@ final class GraftDeltaWriter(
     inserts: GraftCowDataWriter,
     existingDvs: Map[String, (String, Long, Long)],
     existingPosFiles: Map[String, Seq[(String, Long)]],
-    posDelReader: (String, Long) => Iterator[InternalRow],
+    posDelReader: Option[(String, Long) => Iterator[InternalRow]],
     ioOptions: Map[String, String],
     location: String,
     useDv: Boolean,
-    posDelWriter: String => org.apache.spark.sql.graft.RowFileWriter,
+    posDelWriter: Option[String => org.apache.spark.sql.graft.RowFileWriter],
     tableProps: Map[String, String] = Map.empty)
     extends DeltaWriter[InternalRow] {
 
@@ -416,7 +424,7 @@ final class GraftDeltaWriter(
             bm.or(DeletionVector.deserialize(bytes))
           }
           existingPosFiles.get(file).foreach(_.foreach { case (p, sz) =>
-            posDelReader(p, sz).foreach { r =>
+            posDelReader.get(p, sz).foreach { r =>
               if (r.getUTF8String(0).toString == file) bm.set(r.getLong(1))
             }
           })
@@ -438,7 +446,7 @@ final class GraftDeltaWriter(
         // (file_path ASC, pos ASC) per spec; additive — no fold needed
         val path = graft.table.Locations.newDataLocation(location,
           tableProps, "", s"pos-delete-${UUID.randomUUID()}.parquet")
-        val w = posDelWriter(path)
+        val w = posDelWriter.get(path)
         var count = 0L
         val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
         bitmaps.toSeq.sortBy(_._1).foreach { case (file, bm) =>

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsDelete, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table => V2Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsRuntimeFiltering}
@@ -20,6 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.catalog.Catalogs
 import graft.core.{Expr, SchemaBridge, Transforms}
+import graft.format.PositionBitmap
 import graft.table.{ReadRoute, Table => GraftTable, Writer}
 
 /** DSv2 read over an identity-partitioned Iceberg table that reports
@@ -551,7 +552,8 @@ object SpjTable {
   * skipped at plan time), parquet row groups (the `sources.Filter`s ride
   * into the reader), and rows. Every filter is also kept by Spark
   * (returned from `pushFilters`), so an untranslatable residual can never
-  * change results.
+  * change results. Predicates on metadata columns (`_file`, `_pos`, row
+  * lineage) prune nothing and stay with Catalyst alone.
   *
   * `build` plans once and routes the planned tasks through
   * [[ReadRoute.choose]]; with `prePlanned` the caller did both
@@ -634,7 +636,8 @@ final class SpjScanBuilder(table: GraftTable, fullSchema: StructType,
         .foldLeft(graft.core.Expr.AlwaysTrue: graft.core.Expr)(graft.core.Expr.and)
       def perTask(planned: Seq[graft.table.FileScanTask]) =
         new SpjScan(table, required, claimKeys, snapshotId, options,
-          fileExpr, pushed.toSeq, withFile = withFile, withPos = withPos,
+          fileExpr, pushed.filterNot(SpjScanBuilder.readsMetadataColumn).toSeq,
+          withFile = withFile, withPos = withPos,
           withRowId = withRowId, withLastUpd = withLastUpd,
           pushedLimit = if (pushed.isEmpty) limit else None,
           prePlanned = Some(planned), keySchema = keySchema)
@@ -858,7 +861,19 @@ object SpjScanBuilder {
     case _ => false
   }
 
+  private val MetadataColumnNames = Set(SpjTable.FileColumnName,
+    SpjTable.PosColumnName, SpjTable.RowIdColumnName, SpjTable.LastUpdatedColumnName)
+
+  /** Whether `f` reads a metadata column (`_file`, `_pos`, row lineage).
+    * Such a predicate is neither a planning filter (the table schema has
+    * no such field to bind) nor a row-group filter (the values are not
+    * parquet statistics); Catalyst evaluates it above the scan.
+    */
+  def readsMetadataColumn(f: Filter): Boolean =
+    f.references.exists(MetadataColumnNames)
+
   def toExpr(f: Filter): Option[Expr] = f match {
+    case _ if readsMetadataColumn(f) => None
     case org.apache.spark.sql.sources.AlwaysTrue() => Some(Expr.AlwaysTrue)
     case org.apache.spark.sql.sources.AlwaysFalse() => Some(Expr.AlwaysFalse)
     case org.apache.spark.sql.sources.EqualTo(a, v) if lit(v) => Some(Expr.eq(a, v))
@@ -1117,18 +1132,36 @@ final class SpjScan(table: GraftTable, sparkSchema: StructType,
   override def planInputPartitions(): Array[InputPartition] =
     grouped.map(identity[InputPartition])
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    SpjScan.readerFactory(table, grouped, sparkSchema, options,
-      rowGroupFilters, withFile, withPos, withRowId, withLastUpd, keySchema)
+  // the factory built for the current plan: Spark asks every BatchScanExec
+  // copy of this scan (the planner's, AQE's) for one, and each build
+  // broadcasts the Hadoop conf once per parquet reader. A runtime filter
+  // re-plans `grouped`, which invalidates it.
+  @volatile private var factoryMemo: (Array[SpjInputPartition], SpjReaderFactory) = _
+
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val parts = grouped
+    val memo = factoryMemo
+    if (memo != null && (memo._1 eq parts)) memo._2
+    else {
+      val built = SpjScan.readerFactory(table, parts, sparkSchema, options,
+        rowGroupFilters, withFile, withPos, withRowId, withLastUpd, keySchema)
+      factoryMemo = (parts, built)
+      built
+    }
+  }
 }
 
 object SpjScan {
+
+  /** Reader factories built, for the one-build-per-planned-scan test. */
+  private[graft] val factoryBuilds = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Build the executor reader closures a partition set needs: the plain
     * data reader always; delete-application machinery (position-carrying
     * data reader over a schema widened with any equality-key columns,
     * pos-delete and eq-delete file readers) only when some file actually
-    * carries deletes — zero overhead on clean tables.
+    * carries deletes — zero overhead on clean tables. Each parquet reader
+    * built here broadcasts the session Hadoop conf once.
     */
   def readerFactory(table: GraftTable, parts: Array[SpjInputPartition],
       dataSchema: StructType, options: Map[String, String],
@@ -1136,6 +1169,7 @@ object SpjScan {
       withPos: Boolean = false, withRowId: Boolean = false,
       withLastUpd: Boolean = false,
       keySchema: Option[graft.core.IcebergSchema] = None): SpjReaderFactory = {
+    factoryBuilds.incrementAndGet()
     val spark = SparkSession.active
     val needLineage = withRowId || withLastUpd
     val anyDeletes = parts.exists(_.files.exists(_.deletes.nonEmpty))
@@ -1188,28 +1222,24 @@ object SpjScan {
       if (anyPosFiles) Some(ParquetRowReadBridge.rowReader(
         spark, delSchema, options, Nil))
       else None
-    // per distinct equality-id set: a reader over the key columns (in id
-    // order) and the matching (index, type) extractors into the widened
-    // data row
+    // per distinct equality-id set: the key layout (delete-file columns in
+    // id order, typed like the data side) and a reader over those columns
+    val eqKeys: Map[Seq[Int], SpjEqKey] = eqIdSets.map { ids =>
+      val ordinals = ids.map(id => widened.fieldIndex(eqFieldsById(id).name)).toArray
+      // read delete files by NAME: they may lack parquet field ids, and
+      // an id-carrying read schema makes the reader reject such files
+      val fields = ids.zip(ordinals).map { case (id, i) =>
+        val f = eqFieldsById(id)
+        org.apache.spark.sql.types.StructField(f.name, widened.fields(i).dataType, f.nullable)
+      }
+      ids -> SpjEqKey(StructType(fields), ordinals)
+    }.toMap
     val eqReaders: Map[Seq[Int], (String, Long) => Iterator[InternalRow]] =
-      eqIdSets.map { ids =>
-        // read delete files by NAME: they may lack parquet field ids, and
-        // an id-carrying read schema makes the reader reject such files
-        val fields = ids.map(eqFieldsById).map(f =>
-          org.apache.spark.sql.types.StructField(f.name, f.dataType, f.nullable))
-        ids -> ParquetRowReadBridge.rowReader(
-          spark, StructType(fields), options, Nil)
-      }.toMap
-    val eqExtract: Map[Seq[Int], Array[(Int, org.apache.spark.sql.types.DataType)]] =
-      eqIdSets.map { ids =>
-        ids -> ids.map { id =>
-          val name = eqFieldsById(id).name
-          val idx = widened.fieldIndex(name)
-          (idx, widened.fields(idx).dataType)
-        }.toArray
-      }.toMap
+      eqKeys.map { case (ids, k) =>
+        ids -> ParquetRowReadBridge.rowReader(spark, k.fileSchema, options, Nil)
+      }
     new SpjReaderFactory(reader, withFile, Some(dataPos), del,
-      dataSchema, options, widened, eqReaders, eqExtract, withPos,
+      dataSchema, options, widened, eqReaders, eqKeys, withPos,
       withRowId, withLastUpd)
   }
   /** Manifest-stored partition values → catalyst representations (the key
@@ -1288,29 +1318,34 @@ final case class SpjInputPartition(key: Array[Any],
   override def partitionKey(): InternalRow = new GenericInternalRow(key)
 }
 
-/** Row values normalized to structurally-comparable JVM values, for
-  * equality-delete key tuples (UTF8String → String, byte[] → Seq, Decimal
-  * → BigDecimal). Null-safe: nulls compare equal per the spec's canonical
-  * key encoding.
+/** One equality-id set's key layout: `fileSchema` reads the delete files
+  * (key columns in id order, named by the read's schema, typed like the
+  * data side) and `dataOrdinals` locates the same columns in the widened
+  * data row. Both projections emit an `UnsafeRow` of the same types, so
+  * equal keys encode to equal bytes and null matches null, as the spec's
+  * key equality requires.
   */
-object SpjValues {
-  def normalize(row: InternalRow, idx: Int,
-      dt: org.apache.spark.sql.types.DataType): Any = {
+final case class SpjEqKey(fileSchema: StructType, dataOrdinals: Array[Int]) {
+  import org.apache.spark.sql.catalyst.expressions.BoundReference
+
+  def fileProjection(): UnsafeProjection = projection(fileSchema.indices)
+  def dataProjection(): UnsafeProjection = projection(dataOrdinals.toSeq)
+
+  // primitive key types, compared by their UnsafeRow bytes (floating-point
+  // keys bitwise; writers refuse them as keys). Anything else (nested,
+  // variant) fails the read rather than matching by an unchecked encoding
+  private def projection(ordinals: Seq[Int]): UnsafeProjection = {
     import org.apache.spark.sql.types._
-    if (row.isNullAt(idx)) null
-    else dt match {
-      case IntegerType | DateType => row.getInt(idx)
-      case LongType | TimestampType | TimestampNTZType => row.getLong(idx)
-      case StringType => row.getUTF8String(idx).toString
-      case BooleanType => row.getBoolean(idx)
-      case DoubleType => row.getDouble(idx)
-      case FloatType => row.getFloat(idx)
-      case d: DecimalType =>
-        row.getDecimal(idx, d.precision, d.scale).toJavaBigDecimal
-      case BinaryType => row.getBinary(idx).toSeq
-      case other => throw new IllegalArgumentException(
-        s"equality-delete key type $other unsupported")
-    }
+    UnsafeProjection.create(ordinals.zip(fileSchema.fields).map { case (o, f) =>
+      f.dataType match {
+        case IntegerType | DateType | LongType | TimestampType | TimestampNTZType |
+            StringType | BooleanType | DoubleType | FloatType | BinaryType |
+            _: DecimalType =>
+          BoundReference(o, f.dataType, nullable = true)
+        case other => throw new IllegalArgumentException(
+          s"equality-delete key type $other unsupported")
+      }
+    })
   }
 }
 
@@ -1320,17 +1355,19 @@ object SpjValues {
   * delete file. Without it a partition-scoped pos-delete file referenced
   * by K data files costs K full parquet reads per executor (the DV and
   * eq-key caches already avoided this; this closes the last re-read).
-  * Entries are immutable; eviction only costs a re-read. `loads` counts
-  * loader invocations for the one-read-per-(executor, file) test.
+  * Positions are held as the same [[graft.format.PositionBitmap]] a DV
+  * deserializes to, so the reader probes both alike. Entries are
+  * immutable; eviction only costs a re-read. `loads` counts loader
+  * invocations for the one-read-per-(executor, file) test.
   */
 object PosDeleteCache {
   private val MaxEntries = 64
   private[graft] val loads = new java.util.concurrent.atomic.AtomicLong(0)
   private val cache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, java.util.Map[String, java.util.HashSet[java.lang.Long]]](
+    new java.util.LinkedHashMap[String, java.util.Map[String, PositionBitmap]](
         16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, java.util.Map[String, java.util.HashSet[java.lang.Long]]]): Boolean =
+          e: java.util.Map.Entry[String, java.util.Map[String, PositionBitmap]]): Boolean =
         size() > MaxEntries
     })
 
@@ -1339,16 +1376,13 @@ object PosDeleteCache {
   // joining the winner's future — without this, simultaneous first touches
   // all miss and all parse (the whole cost the cache exists to avoid)
   private val inflight = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[
-      java.util.Map[String, java.util.HashSet[java.lang.Long]]]]()
+    String, java.util.concurrent.CompletableFuture[java.util.Map[String, PositionBitmap]]]()
 
-  def get(path: String,
-      load: () => java.util.Map[String, java.util.HashSet[java.lang.Long]])
-      : java.util.Map[String, java.util.HashSet[java.lang.Long]] = {
+  def get(path: String, load: () => java.util.Map[String, PositionBitmap])
+      : java.util.Map[String, PositionBitmap] = {
     val hit = cache.get(path)
     if (hit != null) return hit
-    val fut = new java.util.concurrent.CompletableFuture[
-      java.util.Map[String, java.util.HashSet[java.lang.Long]]]()
+    val fut = new java.util.concurrent.CompletableFuture[java.util.Map[String, PositionBitmap]]()
     val prior = inflight.putIfAbsent(path, fut)
     if (prior != null) return prior.join()
     try {
@@ -1371,28 +1405,29 @@ object PosDeleteCache {
 }
 
 /** Executor-wide LRU of equality-delete key sets — each executor reads
-  * each eq-delete file once per (file, key-set) no matter how many data
-  * files it applies to (entries immutable; eviction is re-read cost).
-  * In-flight loads de-duplicate: concurrent first touches join one parse
-  * (same discipline as [[PosDeleteCache]]).
+  * each eq-delete file once per (file, key read schema) no matter how many
+  * data files it applies to (entries immutable; eviction is re-read cost).
+  * The read schema is part of the key because it fixes both the columns
+  * read and the key encoding. In-flight loads de-duplicate: concurrent
+  * first touches join one parse (same discipline as [[PosDeleteCache]]).
   */
 object EqDeleteCache {
+  private type KeySet = java.util.Set[UnsafeRow]
   private val MaxEntries = 256
   private val cache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, Seq[Int]), Set[List[Any]]](
-        32, 0.75f, true) {
+    new java.util.LinkedHashMap[(String, StructType), KeySet](32, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Seq[Int]), Set[List[Any]]]): Boolean =
+          e: java.util.Map.Entry[(String, StructType), KeySet]): Boolean =
         size() > MaxEntries
     })
   private val inflight = new java.util.concurrent.ConcurrentHashMap[
-    (String, Seq[Int]), java.util.concurrent.CompletableFuture[Set[List[Any]]]]()
+    (String, StructType), java.util.concurrent.CompletableFuture[KeySet]]()
 
-  def get(path: String, ids: Seq[Int], load: () => Set[List[Any]]): Set[List[Any]] = {
-    val key = (path, ids)
+  def get(path: String, keySchema: StructType, load: () => KeySet): KeySet = {
+    val key = (path, keySchema)
     val hit = cache.get(key)
     if (hit != null) return hit
-    val fut = new java.util.concurrent.CompletableFuture[Set[List[Any]]]()
+    val fut = new java.util.concurrent.CompletableFuture[KeySet]()
     val prior = inflight.putIfAbsent(key, fut)
     if (prior != null) return prior.join()
     try {
@@ -1413,11 +1448,16 @@ object EqDeleteCache {
 
 /** Executor-side row production: per file, either the plain reader or —
   * when MoR deletes are attached — the position-carrying reader over the
-  * eq-key-widened schema with a delete filter (DV bitmaps via the executor
-  * LRU cache, positional-delete parquet scoped to the file, equality-key
-  * membership against cached key sets), then a codegen'd prefix projection
-  * back to the requested columns. `_file`, when requested, is appended
-  * last.
+  * eq-key-widened schema with a delete filter, then a codegen'd prefix
+  * projection back to the requested columns. `_file`, when requested, is
+  * appended last.
+  *
+  * The delete filter allocates nothing per row. Deleted positions are
+  * [[graft.format.PositionBitmap]]s: DV bitmaps from the executor LRU and
+  * positional-delete files folded into one bitmap per data file. Equality
+  * deletes are `UnsafeRow` key sets ([[EqDeleteCache]]) probed through one
+  * reused key projection per id set, per task ([[SpjEqKey]]); the strip
+  * projection is also created once per task.
   */
 final class SpjReaderFactory(
     reader: (String, Long) => Iterator[InternalRow],
@@ -1428,25 +1468,24 @@ final class SpjReaderFactory(
     ioOptions: Map[String, String] = Map.empty,
     widenedSchema: StructType = new StructType(),
     eqReaders: Map[Seq[Int], (String, Long) => Iterator[InternalRow]] = Map.empty,
-    eqExtract: Map[Seq[Int], Array[(Int, org.apache.spark.sql.types.DataType)]] = Map.empty,
+    eqKeys: Map[Seq[Int], SpjEqKey] = Map.empty,
     withPos: Boolean = false,
     withRowId: Boolean = false,
     withLastUpd: Boolean = false)
     extends PartitionReaderFactory {
 
   // positions targeting `dataPath`, from pos-delete parquets (schema:
-  // file_path string, pos long). Each delete file parses ONCE per executor
-  // into a (referenced file → positions) map via [[PosDeleteCache]]; this
-  // lookup is then a hash probe regardless of how many data files share
-  // the delete file.
-  private def posDeleteSet(files: Array[(String, Long)], dataPath: String): java.util.HashSet[java.lang.Long] = {
+  // file_path string, pos long), or null when none does. Each delete file
+  // parses ONCE per executor into a (referenced file → positions) map via
+  // [[PosDeleteCache]]; this lookup is then a hash probe regardless of how
+  // many data files share the delete file.
+  private def posDeleteBitmap(files: Array[(String, Long)], dataPath: String): PositionBitmap = {
     val want = graft.io.FileIO.canonical(dataPath)
     val rd = delReader.getOrElse(throw new IllegalStateException(
       "pos-delete files present but no pos-delete reader was planned"))
-    val out = new java.util.HashSet[java.lang.Long]()
-    files.foreach { case (p, len) =>
+    val hits = files.flatMap { case (p, len) =>
       val byFile = PosDeleteCache.get(p, () => {
-        val m = new java.util.HashMap[String, java.util.HashSet[java.lang.Long]]()
+        val m = new java.util.HashMap[String, PositionBitmap]()
         rd(p, len).foreach { r =>
           // a null file_path or pos means the delete file is corrupt; a
           // skipped row would RESURRECT the row it should delete — fail
@@ -1456,39 +1495,49 @@ final class SpjReaderFactory(
             s"corrupt positional delete file $p: null file_path or pos")
           m.computeIfAbsent(
               graft.io.FileIO.canonical(r.getUTF8String(0).toString),
-              _ => new java.util.HashSet[java.lang.Long]())
-            .add(r.getLong(1))
-          ()
+              _ => new PositionBitmap)
+            .set(r.getLong(1))
         }
         m
       })
-      val s = byFile.get(want)
-      if (s != null) out.addAll(s)
-      ()
+      Option(byFile.get(want))
     }
-    out
+    hits.length match {
+      case 0 => null
+      case 1 => hits(0) // cached, never mutated
+      case _ =>
+        val union = new PositionBitmap
+        hits.foreach(union.or)
+        union
+    }
   }
 
-  private def eqKeySet(path: String, len: Long, ids: Seq[Int]): Set[List[Any]] =
-    EqDeleteCache.get(path, ids, () => {
-      val rd = eqReaders(ids)
-      val types = eqExtract(ids).map(_._2) // delete-file columns ride in id order
-      rd(path, len).map { r =>
-        var i = 0
-        val b = List.newBuilder[Any]
-        while (i < ids.length) {
-          b += SpjValues.normalize(r, i, types(i))
-          i += 1
-        }
-        b.result()
-      }.toSet
+  private def eqKeySet(path: String, len: Long, ids: Seq[Int]): java.util.Set[UnsafeRow] = {
+    val key = eqKeys(ids)
+    EqDeleteCache.get(path, key.fileSchema, () => {
+      val project = key.fileProjection()
+      val keys = new java.util.HashSet[UnsafeRow]()
+      eqReaders(ids)(path, len).foreach(r => keys.add(project(r).copy()))
+      keys
     })
+  }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[SpjInputPartition]
     new PartitionReader[InternalRow] {
+      private val needLineage = withRowId || withLastUpd
+      private val posIdx = widenedSchema.fields.length
+      // per task: the projection back to the data columns, and one key
+      // projection per equality-id set
+      private lazy val strip = UnsafeProjection.create(
+        dataSchema.fields.zipWithIndex.map { case (sf, i) =>
+          org.apache.spark.sql.catalyst.expressions.BoundReference(i, sf.dataType, sf.nullable)
+        }.toSeq)
+      private val probes = new java.util.HashMap[Seq[Int], UnsafeProjection]()
+      private def probe(ids: Seq[Int]): UnsafeProjection =
+        probes.computeIfAbsent(ids, _ => eqKeys(ids).dataProjection())
+
       private val it = p.files.iterator.flatMap { f =>
-        val needLineage = withRowId || withLastUpd
         val needPosReader = withPos || needLineage || f.deletes.nonEmpty
         if (!needPosReader) {
           val base = reader(f.path, f.len)
@@ -1503,37 +1552,21 @@ final class SpjReaderFactory(
           // pos-carrying read (widened with any eq-key columns, trailing
           // row index); MoR deletes filter here, then the output projects
           // back to data columns + the requested metadata columns
-          val posIdx = widenedSchema.fields.length
-          import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
-          val strip = UnsafeProjection.create(
-            dataSchema.fields.zipWithIndex.map { case (sf, i) =>
-              BoundReference(i, sf.dataType, sf.nullable)
-            }.toSeq)
           val stream = dataPosReader.getOrElse(throw new IllegalStateException(
             "position reader was not planned")).apply(f.path, f.len)
           val filtered = f.deletes match {
             case None => stream
             case Some(del) =>
-              val bitmaps = del.dvs.map { case (path, off, len) =>
+              val dvs = del.dvs.map { case (path, off, len) =>
                 graft.table.SparkRead.DvCache.get(path, off, len, ioOptions)
               }
-              val posSet =
+              val posDeleted =
                 if (del.posFiles.isEmpty) null
-                else posDeleteSet(del.posFiles, f.path)
-              // per eq-delete group: (data-row extractors, key set)
-              val eqGroups: Array[(Array[(Int, org.apache.spark.sql.types.DataType)], Set[List[Any]])] =
-                del.eqFiles.map { case (path, len, ids) =>
-                  (eqExtract(ids), eqKeySet(path, len, ids))
-                }
-              stream.filter { r =>
-                val pos = r.getLong(posIdx)
-                !bitmaps.exists(_.contains(pos)) &&
-                  (posSet == null || !posSet.contains(pos)) &&
-                  !eqGroups.exists { case (extract, keys) =>
-                    keys.contains(extract.map { case (idx, dt) =>
-                      SpjValues.normalize(r, idx, dt) }.toList)
-                  }
-              }
+                else posDeleteBitmap(del.posFiles, f.path)
+              new SpjDeleteFilter(stream, posIdx,
+                if (posDeleted == null) dvs else dvs :+ posDeleted,
+                del.eqFiles.map { case (_, _, ids) => probe(ids) },
+                del.eqFiles.map { case (path, len, ids) => eqKeySet(path, len, ids) })
           }
           val metaArity = (if (withFile) 1 else 0) + (if (withPos) 1 else 0) +
             (if (withRowId) 1 else 0) + (if (withLastUpd) 1 else 0)
@@ -1575,5 +1608,49 @@ final class SpjReaderFactory(
       override def get(): InternalRow = current
       override def close(): Unit = ()
     }
+  }
+}
+
+/** The rows of one data file that survive its MoR deletes: a row goes when
+  * its position (at `posIdx`) is in any of `deleted`, or when the key that
+  * `keys(i)` projects from it is in `keySets(i)`. Consecutive key sets that
+  * share a projection probe with one projected key.
+  */
+private final class SpjDeleteFilter(rows: Iterator[InternalRow], posIdx: Int,
+    deleted: Array[PositionBitmap], keys: Array[UnsafeProjection],
+    keySets: Array[java.util.Set[UnsafeRow]]) extends Iterator[InternalRow] {
+  private var pending: InternalRow = _
+
+  override def hasNext: Boolean = {
+    while (pending == null && rows.hasNext) {
+      val r = rows.next()
+      if (live(r)) pending = r
+    }
+    pending != null
+  }
+
+  override def next(): InternalRow = {
+    if (!hasNext) throw new NoSuchElementException
+    val r = pending
+    pending = null
+    r
+  }
+
+  private def live(r: InternalRow): Boolean = {
+    val pos = r.getLong(posIdx)
+    var i = 0
+    while (i < deleted.length) {
+      if (deleted(i).contains(pos)) return false
+      i += 1
+    }
+    var projected: UnsafeProjection = null
+    var key: UnsafeRow = null
+    i = 0
+    while (i < keySets.length) {
+      if (keys(i) ne projected) { projected = keys(i); key = projected(r) }
+      if (keySets(i).contains(key)) return false
+      i += 1
+    }
+    true
   }
 }

@@ -21,8 +21,11 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
 object ParquetRowReadBridge {
 
   /** A serializable `(path, fileSize) => Iterator[InternalRow]` over files
-    * of `schema`. Built once on the driver; safe to capture in a
-    * `PartitionReaderFactory`.
+    * of `schema`, built on the driver and safe to capture in a
+    * `PartitionReaderFactory`. Not cheap: every call broadcasts the session
+    * Hadoop conf (about a thousand properties, each gzipped by
+    * `Configuration.write`), so callers build each reader once per planned
+    * scan, not once per use.
     */
   def rowReader(spark: SparkSession, schema: StructType,
       options: Map[String, String],
