@@ -8,17 +8,16 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.NamedReference
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.graft.ParquetRowWriteBridge
-import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.core.{Expr, SchemaBridge}
+import graft.core.SchemaBridge
 import graft.format.{DataFile, DataFileContent, DeletionVector, PositionBitmap, Puffin}
-import graft.table.{FileScanTask, Table => GraftTable, Writer}
+import graft.table.{Table => GraftTable, Writer}
 
 /** Merge-on-read SQL DML: `write.delete.mode / write.update.mode /
   * write.merge.mode = 'merge-on-read'` routes DELETE / UPDATE / MERGE
@@ -41,14 +40,9 @@ import graft.table.{FileScanTask, Table => GraftTable, Writer}
   * by row id, and same-file positions land together).
   */
 final class GraftDeltaOperation(table: GraftTable, cmd: Command)
-    extends org.apache.spark.sql.connector.write.SupportsDelta {
+    extends org.apache.spark.sql.connector.write.SupportsDelta with GraftRowLevelScan {
 
-  @volatile private[sources] var scanned: Seq[FileScanTask] = Nil
-
-  /** Static pushed filter of the candidate scan — the commit's conflict-
-    * detection scope under serializable isolation.
-    */
-  @volatile private[sources] var scanFilter: Expr = Expr.AlwaysTrue
+  override def groupFiltered: Boolean = false
 
   override def command(): Command = cmd
   override def description(): String = s"graft merge-on-read $cmd"
@@ -80,8 +74,8 @@ final class GraftDeltaOperation(table: GraftTable, cmd: Command)
     else Array.empty
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftDeltaScanBuilder(this, table, SchemaBridge.toSpark(table.schema),
-      options.asCaseSensitiveMap().asScala.toMap)
+    new SpjScanBuilder(table, SchemaBridge.toSpark(table.schema), None, None,
+      options.asCaseSensitiveMap().asScala.toMap, rowLevel = Some(this))
 
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
@@ -129,78 +123,6 @@ final class GraftDeltaOperation(table: GraftTable, cmd: Command)
               org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)).toArray
       }
     }
-}
-
-/** Candidate scan for the delta operation: pushed filters prune FILES;
-  * rows carry (`_file`, `_pos`) so matches identify their exact source
-  * position. Existing MoR deletes apply in the read.
-  */
-final class GraftDeltaScanBuilder(op: GraftDeltaOperation, table: GraftTable,
-    fullSchema: StructType, options: Map[String, String]) extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-
-  private var pushed: Array[Filter] = Array.empty
-  private var required: StructType = fullSchema
-  private var withFile: Boolean = true
-  private var withPos: Boolean = true
-  private var withRowId: Boolean = false
-  private var withLastUpd: Boolean = false
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters
-    filters // file pruning only; Spark re-evaluates rows above the scan
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    val req = SpjTable.splitRequested(fullSchema, requiredSchema)
-    required = req.data
-    withFile = req.withFile
-    withPos = req.withPos
-    withRowId = req.withRowId
-    withLastUpd = req.withLastUpd
-  }
-
-  override def build(): Scan = new GraftDeltaScan(op, table, required,
-    pushed.flatMap(SpjScanBuilder.toExpr)
-      .foldLeft(Expr.AlwaysTrue: Expr)(Expr.and),
-    options, withFile, withPos, withRowId, withLastUpd)
-}
-
-final class GraftDeltaScan(op: GraftDeltaOperation, table: GraftTable,
-    sparkSchema: StructType, fileFilter: Expr, options: Map[String, String],
-    withFile: Boolean, withPos: Boolean,
-    withRowId: Boolean = false, withLastUpd: Boolean = false)
-    extends Scan with Batch {
-
-  override def readSchema(): StructType = {
-    var fields = sparkSchema.fields
-    if (withFile) fields = fields :+
-      StructField(SpjTable.FileColumnName, StringType, nullable = false)
-    if (withPos) fields = fields :+
-      StructField(SpjTable.PosColumnName, LongType, nullable = false)
-    if (withRowId) fields = fields :+
-      StructField(SpjTable.RowIdColumnName, LongType, nullable = true)
-    if (withLastUpd) fields = fields :+
-      StructField(SpjTable.LastUpdatedColumnName, LongType, nullable = true)
-    StructType(fields)
-  }
-  override def toBatch: Batch = this
-
-  private lazy val parts: Array[SpjInputPartition] = {
-    val tasks = table.newScan.withFilter(fileFilter).planFiles()
-    op.scanned = tasks
-    op.scanFilter = fileFilter
-    tasks.map(t => SpjInputPartition(Array.empty,
-      Array(SpjFileInfo.from(t, "merge-on-read DML")))).toArray
-  }
-
-  override def planInputPartitions(): Array[InputPartition] =
-    parts.map(identity[InputPartition])
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    SpjScan.readerFactory(table, parts, sparkSchema, options, Nil,
-      withFile, withPos, withRowId, withLastUpd)
 }
 
 /** One delete artifact a task produced: a DV blob inside a puffin file

@@ -8,11 +8,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
-import org.apache.spark.sql.graft.{ParquetRowReadBridge, ParquetRowWriteBridge, RowFileWriter}
-import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.graft.{ParquetRowWriteBridge, RowFileWriter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -25,12 +24,13 @@ import graft.table.{FileScanTask, Table => GraftTable, Writer}
   * translate). Spark's `RewriteUpdateTable` / `RewriteMergeIntoTable` /
   * `RewriteDeleteFromTable` drive the protocol:
   *
-  *   1. [[GraftCowScanBuilder]] — the operation scan. Pushed filters prune
-  *      at the FILE level only (a pruned file is left untouched; a kept
-  *      file is replaced whole, so every one of its rows must flow —
-  *      row-group or row filtering here would silently drop the
-  *      non-matching rows a CoW rewrite has to carry). The planned file
-  *      set is recorded on the operation.
+  *   1. [[SpjScanBuilder]] in its row-level form — the operation scan.
+  *      Pushed filters prune at the FILE level only (a pruned file is left
+  *      untouched; a kept file is replaced whole, so every one of its rows
+  *      must flow — row-group or row filtering here would silently drop
+  *      the non-matching rows a CoW rewrite has to carry). The planned
+  *      file set is recorded on the operation, and Spark's runtime `_file`
+  *      filter narrows it to the files holding matched rows.
   *   2. Spark transforms the rows (CASE WHEN for UPDATE, the merge rows
   *      processor for MERGE) and hands the FULL replacement rowset to
   *   3. [[GraftReplaceBatchWrite]] — executor-side DSv2 data writers
@@ -50,19 +50,9 @@ import graft.table.{FileScanTask, Table => GraftTable, Writer}
   * row-level-operation protocol.
   */
 final class GraftRowLevelOperation(table: GraftTable, cmd: Command)
-    extends RowLevelOperation {
+    extends RowLevelOperation with GraftRowLevelScan {
 
-  /** Candidate files planned by the operation scan; consumed at commit as
-    * the replaced set. Written once at plan time (driver), read at commit
-    * (driver).
-    */
-  @volatile private[sources] var scanned: Seq[FileScanTask] = Nil
-
-  /** Static pushed filter of the operation scan — the commit's conflict-
-    * detection scope (concurrent data adds matching it conflict under
-    * serializable isolation).
-    */
-  @volatile private[sources] var scanFilter: Expr = Expr.AlwaysTrue
+  override def groupFiltered: Boolean = true
 
   override def command(): Command = cmd
 
@@ -91,9 +81,8 @@ final class GraftRowLevelOperation(table: GraftTable, cmd: Command)
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftCowScanBuilder(this, table,
-      SchemaBridge.toSpark(table.schema),
-      options.asCaseSensitiveMap().asScala.toMap)
+    new SpjScanBuilder(table, SchemaBridge.toSpark(table.schema), None, None,
+      options.asCaseSensitiveMap().asScala.toMap, rowLevel = Some(this))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
@@ -168,115 +157,21 @@ trait GraftPartitionClusteredWrite
       GraftBatchWrites.tableSortOrdering(clusterTable)
 }
 
-/** The CoW candidate scan: filters prune files (never row groups or rows),
-  * the surviving file set is recorded for the replacing commit, and every
-  * surviving row is read.
+/** What a row-level operation's candidate scan ([[SpjScanBuilder]] with
+  * `rowLevel`) records for its commit, on the driver at plan time:
+  * `scanned`, the candidate tasks — the set a copy-on-write rewrite
+  * replaces, and the files a merge-on-read delta folds prior deletes from —
+  * and `scanFilter`, the static pushed filter they were planned with, the
+  * commit's conflict-detection scope under serializable isolation.
   */
-final class GraftCowScanBuilder(op: GraftRowLevelOperation, table: GraftTable,
-    fullSchema: StructType, options: Map[String, String]) extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
+trait GraftRowLevelScan {
+  @volatile private[sources] var scanned: Seq[FileScanTask] = Nil
+  @volatile private[sources] var scanFilter: Expr = Expr.AlwaysTrue
 
-  private var pushed: Array[Filter] = Array.empty
-  private var required: StructType = fullSchema
-  private var withFile: Boolean = false
-  private var withRowId: Boolean = false
-  private var withLastUpd: Boolean = false
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters
-    filters // group pruning only; Spark keeps row semantics above the scan
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    val req = SpjTable.splitRequested(fullSchema, requiredSchema)
-    required = req.data
-    withFile = req.withFile
-    withRowId = req.withRowId
-    withLastUpd = req.withLastUpd
-  }
-
-  override def build(): Scan = new GraftCowScan(op, table, required,
-    pushed.flatMap(SpjScanBuilder.toExpr)
-      .foldLeft(Expr.AlwaysTrue: Expr)(Expr.and),
-    options, withFile, withRowId, withLastUpd)
-}
-
-final class GraftCowScan(op: GraftRowLevelOperation, table: GraftTable,
-    sparkSchema: StructType, fileFilter: Expr, options: Map[String, String],
-    withFile: Boolean, withRowId: Boolean = false,
-    withLastUpd: Boolean = false)
-    extends Scan with Batch
-    with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
-
-  override def readSchema(): StructType = {
-    var fields = sparkSchema.fields
-    if (withFile) fields = fields :+
-      StructField(SpjTable.FileColumnName, StringType, nullable = false)
-    if (withRowId) fields = fields :+
-      StructField(SpjTable.RowIdColumnName, LongType, nullable = true)
-    if (withLastUpd) fields = fields :+
-      StructField(SpjTable.LastUpdatedColumnName, LongType, nullable = true)
-    StructType(fields)
-  }
-  override def toBatch: Batch = this
-
-  // static candidates (pushed-filter file pruning), planned once. MoR
-  // deletes (DVs, positional, equality) apply in the read — deleted rows
-  // never rewrite, no resurrection; covered DVs fold away at commit, and
-  // old eq-deletes never apply to the rewritten files (higher sequence).
-  private lazy val allTasks: Seq[FileScanTask] = {
-    val tasks = table.newScan.withFilter(fileFilter).planFiles()
-    op.scanned = tasks
-    op.scanFilter = fileFilter
-    tasks
-  }
-
-  /** Runtime group filtering — the 100 TB lever for MERGE/UPDATE with no
-    * static predicate: Spark first runs the condition as a dynamic
-    * subquery over `_file` and hands back the matched-file set; only those
-    * files rewrite (and only those are removed at commit). Without this, a
-    * one-row MERGE would rewrite every candidate file.
+  /** Copy-on-write: Spark's runtime `_file` filter narrows `scanned` to the
+    * files holding matched rows, so only those rewrite.
     */
-  override def filterAttributes():
-      Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(org.apache.spark.sql.connector.expressions.Expressions.column(
-      SpjTable.FileColumnName))
-
-  override def filter(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
-    val keep: Option[Set[String]] = predicates.collectFirst {
-      case p if p.name == "IN" &&
-          p.children.headOption.exists {
-            case r: org.apache.spark.sql.connector.expressions.NamedReference =>
-              r.fieldNames.mkString(".") == SpjTable.FileColumnName
-            case _ => false
-          } =>
-        p.children.drop(1).collect {
-          case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-            String.valueOf(l.value)
-        }.toSet
-    }
-    keep.foreach { paths =>
-      op.scanned = allTasks.filter(t => paths.contains(t.file.path))
-    }
-  }
-
-  private def parts: Array[SpjInputPartition] = {
-    allTasks // force static planning if no runtime filter arrived
-    op.scanned.map(t => SpjInputPartition(Array.empty,
-      Array(SpjFileInfo.from(t, "row-level rewrite")))).toArray
-  }
-
-  override def planInputPartitions(): Array[InputPartition] =
-    parts.map(identity[InputPartition])
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    // no row-group filters: a kept file is replaced whole. Lineage columns
-    // synthesize per file (explicit wins over first_row_id + position) —
-    // the values a rewrite must carry.
-    SpjScan.readerFactory(table, parts, sparkSchema, options, Nil, withFile,
-      withPos = false, withRowId = withRowId, withLastUpd = withLastUpd)
+  def groupFiltered: Boolean
 }
 
 /** One written file, reported from the executor to the driver commit. */

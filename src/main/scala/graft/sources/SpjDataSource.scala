@@ -525,10 +525,24 @@ object SpjTable {
     * layout, so Spark's by-name projection realigns whatever order the
     * plan asked in.
     */
-  final case class RequestedMeta(data: StructType, withFile: Boolean,
-      withPos: Boolean, withRowId: Boolean, withLastUpd: Boolean) {
+  final case class RequestedMeta(data: StructType, withFile: Boolean = false,
+      withPos: Boolean = false, withRowId: Boolean = false,
+      withLastUpd: Boolean = false) {
     def anyMeta: Boolean = withFile || withPos || withRowId || withLastUpd
     def lineage: Boolean = withRowId || withLastUpd
+
+    /** The scan's output: the data columns, then the requested metadata
+      * columns in canonical order.
+      */
+    def readSchema: StructType = {
+      import org.apache.spark.sql.types.{LongType, StringType, StructField}
+      StructType(data.fields ++
+        (if (withFile) Seq(StructField(FileColumnName, StringType, nullable = false)) else Nil) ++
+        (if (withPos) Seq(StructField(PosColumnName, LongType, nullable = false)) else Nil) ++
+        (if (withRowId) Seq(StructField(RowIdColumnName, LongType, nullable = true)) else Nil) ++
+        (if (withLastUpd) Seq(StructField(LastUpdatedColumnName, LongType, nullable = true))
+         else Nil))
+    }
   }
 
   def splitRequested(fullSchema: StructType,
@@ -560,21 +574,24 @@ object SpjTable {
   * and the builder serves those tasks as they are. `keySchema` is the
   * Iceberg schema `fullSchema` came from when it is not the table's current
   * one (time travel): it names the equality-delete key columns.
+  *
+  * With `rowLevel` this is the candidate scan of a SQL DELETE, UPDATE or
+  * MERGE: the planned tasks are recorded on the operation, pushed filters
+  * prune files only (a candidate file is read whole, with no row-group
+  * filter — a rewrite must carry every row it does not change), and no
+  * partitioning is claimed.
   */
 final class SpjScanBuilder(table: GraftTable, fullSchema: StructType,
     claimKeys: Option[Seq[Transform]], snapshotId: Option[Long],
     options: Map[String, String],
     prePlanned: Option[Seq[graft.table.FileScanTask]] = None,
-    keySchema: Option[graft.core.IcebergSchema] = None) extends ScanBuilder
+    keySchema: Option[graft.core.IcebergSchema] = None,
+    rowLevel: Option[GraftRowLevelScan] = None) extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters
     with SupportsPushDownAggregates
     with org.apache.spark.sql.connector.read.SupportsPushDownLimit {
 
-  private var required: StructType = fullSchema
-  private var withFile: Boolean = false
-  private var withPos: Boolean = false
-  private var withRowId: Boolean = false
-  private var withLastUpd: Boolean = false
+  private var requested = SpjTable.RequestedMeta(fullSchema)
   private var pushed: Array[Filter] = Array.empty
   private var limit: Option[Int] = None
   private var aggResult: Option[(StructType, org.apache.spark.sql.catalyst.InternalRow)] = None
@@ -600,7 +617,7 @@ final class SpjScanBuilder(table: GraftTable, fullSchema: StructType,
   // scan (SparkRead.read) may read a time-travel schema, so it never
   // answers from stats.
   private def probeAgg(agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    if (aggResult.isEmpty && pushed.isEmpty && prePlanned.isEmpty)
+    if (aggResult.isEmpty && pushed.isEmpty && prePlanned.isEmpty && rowLevel.isEmpty)
       aggResult = SpjAggPushdown.tryPush(table, baseScan.planFiles(), agg)
     aggResult.isDefined
   }
@@ -611,16 +628,10 @@ final class SpjScanBuilder(table: GraftTable, fullSchema: StructType,
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
     probeAgg(agg)
 
-  override def pruneColumns(requiredSchema: StructType): Unit = {
+  override def pruneColumns(requiredSchema: StructType): Unit =
     // preserve table column order; an empty projection (COUNT(*)) keeps one
     // narrow column so the reader has a concrete schema to materialize
-    val req = SpjTable.splitRequested(fullSchema, requiredSchema)
-    required = req.data
-    withFile = req.withFile
-    withPos = req.withPos
-    withRowId = req.withRowId
-    withLastUpd = req.withLastUpd
-  }
+    requested = SpjTable.splitRequested(fullSchema, requiredSchema)
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters
@@ -635,23 +646,21 @@ final class SpjScanBuilder(table: GraftTable, fullSchema: StructType,
       val fileExpr = pushed.flatMap(SpjScanBuilder.toExpr)
         .foldLeft(graft.core.Expr.AlwaysTrue: graft.core.Expr)(graft.core.Expr.and)
       def perTask(planned: Seq[graft.table.FileScanTask]) =
-        new SpjScan(table, required, claimKeys, snapshotId, options,
-          fileExpr, pushed.filterNot(SpjScanBuilder.readsMetadataColumn).toSeq,
-          withFile = withFile, withPos = withPos,
-          withRowId = withRowId, withLastUpd = withLastUpd,
+        new SpjScan(table, requested, claimKeys, snapshotId, options, fileExpr,
+          if (rowLevel.isDefined) Nil
+          else pushed.filterNot(SpjScanBuilder.readsMetadataColumn).toSeq,
           pushedLimit = if (pushed.isEmpty) limit else None,
-          prePlanned = Some(planned), keySchema = keySchema)
+          prePlanned = Some(planned), keySchema = keySchema, rowLevel = rowLevel)
       prePlanned match {
-        // the caller planned and routed already (SparkRead.read)
+        // the caller planned and routed already (SparkRead.readPlanned)
         case Some(planned) => perTask(planned)
         case None =>
           // plan HERE (once — SpjScan reuses the result) so the eq-delete
           // backlog for this exact scan is measurable before choosing readers
           val planned = baseScan.withFilter(fileExpr).planFiles()
-          val metaReq = SpjTable.RequestedMeta(required, withFile, withPos,
-            withRowId, withLastUpd)
+          rowLevel.foreach { op => op.scanned = planned; op.scanFilter = fileExpr }
           val decision = ReadRoute.choose(SparkSession.active, table, planned,
-            options, positionMeta = metaReq.anyMeta)
+            options, positionMeta = requested.anyMeta, rowLevel = rowLevel.isDefined)
           decision.route match {
             case ReadRoute.PerTask =>
               if (planned.exists(_.eqDeletes.nonEmpty)) recordRoute(decision)
@@ -662,7 +671,7 @@ final class SpjScanBuilder(table: GraftTable, fullSchema: StructType,
               // metadata-column requests ride along (it computes file,
               // pos and lineage natively)
               recordRoute(decision)
-              new SpjAntiJoinScan(table, snapshotId, planned, required, options, metaReq)
+              new SpjAntiJoinScan(table, snapshotId, planned, options, requested)
           }
       }
   }
@@ -716,7 +725,7 @@ object SpjRouting {
 }
 
 /** An already-planned task set as a DSv2 table: the relation behind
-  * [[graft.table.SparkRead.read]] on the per-task route. Its scan builder
+  * [[graft.table.SparkRead.readPlanned]] on the per-task route. Its scan builder
   * prunes columns and takes row-group filters like the catalog's, then
   * serves exactly these tasks through [[SpjScan]] — no second planning
   * pass, no partitioning claim (one input partition per file).
@@ -726,8 +735,8 @@ object SpjRouting {
   * plain projection requests them.
   */
 final class SpjPlannedTable(table: GraftTable, readSchema: graft.core.IcebergSchema,
-    tasks: Seq[graft.table.FileScanTask], snapshotId: Option[Long],
-    rowLineage: Boolean, options: Map[String, String])
+    tasks: Seq[graft.table.FileScanTask], rowLineage: Boolean,
+    options: Map[String, String])
     extends V2Table with SupportsRead {
 
   private val dataSchema: StructType = SchemaBridge.toSpark(readSchema)
@@ -746,7 +755,7 @@ final class SpjPlannedTable(table: GraftTable, readSchema: graft.core.IcebergSch
     util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new SpjScanBuilder(table, dataSchema, None, snapshotId, options,
+    new SpjScanBuilder(table, dataSchema, None, None, options,
       prePlanned = Some(tasks), keySchema = Some(readSchema))
 }
 
@@ -771,38 +780,27 @@ final class SpjPlannedTable(table: GraftTable, readSchema: graft.core.IcebergSch
   * not OOMing.
   */
 final class SpjAntiJoinScan(table: GraftTable, snapshotId: Option[Long],
-    tasks: Seq[graft.table.FileScanTask], dataSchema: StructType,
-    options: Map[String, String],
-    meta: SpjTable.RequestedMeta = SpjTable.RequestedMeta(
-      new StructType(), false, false, false, false))
+    tasks: Seq[graft.table.FileScanTask], options: Map[String, String],
+    meta: SpjTable.RequestedMeta)
     extends org.apache.spark.sql.connector.read.V1Scan {
 
-  override def readSchema(): StructType = {
-    var fields = dataSchema.fields
-    if (meta.withFile) fields = fields :+
-      org.apache.spark.sql.types.StructField(SpjTable.FileColumnName,
-        org.apache.spark.sql.types.StringType, nullable = false)
-    if (meta.withPos) fields = fields :+
-      org.apache.spark.sql.types.StructField(SpjTable.PosColumnName,
-        org.apache.spark.sql.types.LongType, nullable = false)
-    if (meta.withRowId) fields = fields :+
-      org.apache.spark.sql.types.StructField(SpjTable.RowIdColumnName,
-        org.apache.spark.sql.types.LongType, nullable = true)
-    if (meta.withLastUpd) fields = fields :+
-      org.apache.spark.sql.types.StructField(SpjTable.LastUpdatedColumnName,
-        org.apache.spark.sql.types.LongType, nullable = true)
-    StructType(fields)
-  }
+  override def readSchema(): StructType = meta.readSchema
 
   override def description(): String =
     s"GraftEqDeleteAntiJoin(${table.name}, files=${tasks.length})"
+
+  // Spark reads a copy-on-write rewrite's scan as a DSv2 batch, which this
+  // V1 pipeline is not; only a non-parquet table's rewrite gets here
+  override def toBatch: Batch = throw new UnsupportedOperationException(
+    s"${table.name}: copy-on-write row-level operations need parquet data files; " +
+      "this table holds non-parquet files")
 
   /** Streaming reads keep working on backlogged tables: micro-batches plan
     * per offset range through the same stream source as [[SpjScan]].
     */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new SpjMicroBatchStream(table, dataSchema, options)
+    new SpjMicroBatchStream(table, meta.data, options)
 
   override def toV1TableScan[T <: org.apache.spark.sql.sources.BaseRelation
       with org.apache.spark.sql.sources.TableScan](
@@ -899,21 +897,26 @@ object SpjScanBuilder {
   }
 }
 
-final class SpjScan(table: GraftTable, sparkSchema: StructType,
+/** The per-task scan: planned input partitions read by [[SpjReaderFactory]]
+  * with MoR deletes applied per row. `meta` is the requested data columns
+  * and metadata columns; `rowLevel` marks the candidate scan of a SQL
+  * row-level operation (see [[SpjScanBuilder]]), whose tasks are the
+  * operation's recorded candidates.
+  */
+final class SpjScan(table: GraftTable, meta: SpjTable.RequestedMeta,
     claimKeys: Option[Seq[Transform]], snapshotId: Option[Long],
     options: Map[String, String],
     fileFilter: graft.core.Expr = graft.core.Expr.AlwaysTrue,
     rowGroupFilters: Seq[Filter] = Nil,
-    withFile: Boolean = false,
-    withPos: Boolean = false,
-    withRowId: Boolean = false,
-    withLastUpd: Boolean = false,
     pushedLimit: Option[Int] = None,
     prePlanned: Option[Seq[graft.table.FileScanTask]] = None,
-    keySchema: Option[graft.core.IcebergSchema] = None)
+    keySchema: Option[graft.core.IcebergSchema] = None,
+    rowLevel: Option[GraftRowLevelScan] = None)
     extends Scan with Batch with SupportsReportPartitioning
     with SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
+
+  private val sparkSchema = meta.data
 
   /** Manifest-derived scan statistics (post static-pushdown file set) —
     * without these a DSv2 scan defaults to "unknown = huge" and Spark
@@ -943,21 +946,38 @@ final class SpjScan(table: GraftTable, sparkSchema: StructType,
   @volatile private var runtimeFilter: graft.core.Expr = graft.core.Expr.AlwaysTrue
   @volatile private var plannedCache: Array[SpjInputPartition] = _
 
-  override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
-    // only partition source columns the scan actually OUTPUTS — Spark
-    // resolves these against the scan's schema and fails hard on a
-    // reference a pruned projection dropped
-    val present = sparkSchema.fieldNames.toSet
-    table.spec.fields.map(pf => table.schema.idToField(pf.sourceId).name)
-      .distinct.filter(present).map(Expressions.column).toArray
-  }
-
-  override def filter(filters: Array[Filter]): Unit = {
-    val exprs = filters.flatMap(SpjScanBuilder.toExpr)
-    if (exprs.nonEmpty) {
-      runtimeFilter = exprs.foldLeft(runtimeFilter)(graft.core.Expr.and)
-      plannedCache = null // re-plan with the tightened filter
+  override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
+    rowLevel match {
+      // copy-on-write: Spark runs the operation's condition as a subquery
+      // over `_file` and hands back the files holding matched rows; only
+      // those rewrite. Without it a one-row MERGE rewrites every candidate
+      case Some(op) if op.groupFiltered => Array(Expressions.column(SpjTable.FileColumnName))
+      case Some(_) => Array.empty
+      case None =>
+        // only partition source columns the scan actually OUTPUTS — Spark
+        // resolves these against the scan's schema and fails hard on a
+        // reference a pruned projection dropped
+        val present = sparkSchema.fieldNames.toSet
+        table.spec.fields.map(pf => table.schema.idToField(pf.sourceId).name)
+          .distinct.filter(present).map(Expressions.column).toArray
     }
+
+  override def filter(filters: Array[Filter]): Unit = rowLevel match {
+    case Some(op) =>
+      filters.collectFirst {
+        case org.apache.spark.sql.sources.In(SpjTable.FileColumnName, paths) =>
+          paths.map(String.valueOf).toSet
+      }.foreach { keep =>
+        // the narrowed group is also the set the commit replaces
+        op.scanned = prePlanned.getOrElse(Nil).filter(t => keep(t.file.path))
+        plannedCache = null
+      }
+    case None =>
+      val exprs = filters.flatMap(SpjScanBuilder.toExpr)
+      if (exprs.nonEmpty) {
+        runtimeFilter = exprs.foldLeft(runtimeFilter)(graft.core.Expr.and)
+        plannedCache = null // re-plan with the tightened filter
+      }
   }
 
   /** The claim actually reported to Spark, sound under PARTITION-SPEC
@@ -1027,22 +1047,7 @@ final class SpjScan(table: GraftTable, sparkSchema: StructType,
     idx.toSeq.map(t.file.partition(_))
   }
 
-  override def readSchema(): StructType = {
-    var fields = sparkSchema.fields
-    if (withFile) fields = fields :+
-      org.apache.spark.sql.types.StructField(SpjTable.FileColumnName,
-        org.apache.spark.sql.types.StringType, nullable = false)
-    if (withPos) fields = fields :+
-      org.apache.spark.sql.types.StructField(SpjTable.PosColumnName,
-        org.apache.spark.sql.types.LongType, nullable = false)
-    if (withRowId) fields = fields :+
-      org.apache.spark.sql.types.StructField(SpjTable.RowIdColumnName,
-        org.apache.spark.sql.types.LongType, nullable = true)
-    if (withLastUpd) fields = fields :+
-      org.apache.spark.sql.types.StructField(SpjTable.LastUpdatedColumnName,
-        org.apache.spark.sql.types.LongType, nullable = true)
-    StructType(fields)
-  }
+  override def readSchema(): StructType = meta.readSchema
   override def toBatch: Batch = this
 
   /** `spark.readStream.table(...)`: snapshot-log micro-batches. Pruned
@@ -1079,11 +1084,20 @@ final class SpjScan(table: GraftTable, sparkSchema: StructType,
 
   private def planPartitions(): Array[SpjInputPartition] = {
     // the builder already planned this exact (static-filter) file set when
-    // it sized the eq-delete backlog — reuse it; a runtime filter tightens
-    // the plan and forces a fresh pass
-    val allTasks = prePlanned match {
-      case Some(ts) if runtimeFilter == graft.core.Expr.AlwaysTrue => ts
-      case _ =>
+    // it sized the eq-delete backlog — reuse it. A runtime filter prunes
+    // that set by file metrics rather than re-planning it from the table:
+    // a pre-planned set may be any subset of a plan (a rewrite group, one
+    // side of a changelog). A row-level scan reads the operation's
+    // candidates, which its `_file` group filter may have narrowed
+    val allTasks = (rowLevel, prePlanned) match {
+      case (Some(op), _) => op.scanned
+      case (None, Some(ts)) if runtimeFilter == graft.core.Expr.AlwaysTrue => ts
+      case (None, Some(ts)) =>
+        val schema = keySchema.getOrElse(table.schema)
+        val bound = graft.core.Expr.bindNames(
+          graft.core.Expr.rewriteNot(runtimeFilter), schema, caseSensitive = false)
+        ts.filter(t => graft.core.Evaluators.fileMightMatch(schema, bound, t.file))
+      case (None, None) =>
         val base = snapshotId.map(table.newScan.useSnapshot).getOrElse(table.newScan)
         base.withFilter(graft.core.Expr.and(fileFilter, runtimeFilter)).planFiles()
     }
@@ -1105,21 +1119,45 @@ final class SpjScan(table: GraftTable, sparkSchema: StructType,
     }
     plannedTotals = (tasks.map(_.file.fileSize).sum,
       tasks.map(_.file.recordCount).sum)
+    val info = fileInfo(tasks)
     effectiveClaim match {
       case Some((_, proj)) =>
         tasks.groupBy(claimKey(proj, _)).toSeq
           .map { case (partValues, ts) =>
-            SpjInputPartition(partValues.map(SpjScan.toCatalyst).toArray,
-              ts.map(t => SpjFileInfo.from(t, "graft-iceberg-spj")).toArray)
+            SpjInputPartition(partValues.map(SpjScan.toCatalyst).toArray, ts.map(info).toArray)
           }
           .sortBy(_.key.toSeq.map(String.valueOf).mkString(" "))
           .toArray
       case None =>
         // no partitioning claim to honor → one input partition per FILE
         // for maximal parallelism (files are rolling-writer target-sized)
-        tasks.map(t => SpjInputPartition(Array.empty,
-          Array(SpjFileInfo.from(t, "graft-iceberg-spj")))).toArray
+        tasks.map(t => SpjInputPartition(Array.empty, Array(info(t)))).toArray
     }
+  }
+
+  /** Per-task file info. On a name-mapped table (only a row-level scan
+    * reads one per task; plain reads take the anti-join pipeline) a file
+    * written without field ids is read by its mapped names, and the
+    * identity-partition columns a hive-layout file omits take the file's
+    * partition values.
+    */
+  private def fileInfo(tasks: Seq[graft.table.FileScanTask])
+      : graft.table.FileScanTask => SpjFileInfo = table.nameMapping match {
+    case None => SpjFileInfo.from(_, "graft-iceberg-spj")
+    case Some(_) =>
+      val hasIds = graft.table.SparkRead.fieldIdPresence(SparkSession.active,
+        tasks.map(_.file).filter(_.format.equalsIgnoreCase("PARQUET")).map(_.path).distinct)
+      val naming = keySchema.getOrElse(table.schema)
+      t => {
+        val info = SpjFileInfo.from(t, "graft-iceberg-spj")
+        if (hasIds.getOrElse(t.file.path, true)) info
+        else info.copy(nameMapped = true, constants = table.metadata.specById(t.specId)
+          .toSeq.flatMap(_.fields.zipWithIndex).collect {
+            case (pf, i) if pf.transform == Transforms.Identity &&
+                naming.idToField.contains(pf.sourceId) =>
+              naming.idToField(pf.sourceId).name -> SpjScan.toCatalyst(t.file.partition(i))
+          }.toArray)
+      }
   }
 
   override def outputPartitioning(): Partitioning = effectiveClaim match {
@@ -1143,8 +1181,8 @@ final class SpjScan(table: GraftTable, sparkSchema: StructType,
     val memo = factoryMemo
     if (memo != null && (memo._1 eq parts)) memo._2
     else {
-      val built = SpjScan.readerFactory(table, parts, sparkSchema, options,
-        rowGroupFilters, withFile, withPos, withRowId, withLastUpd, keySchema)
+      val built = SpjScan.readerFactory(table, parts, meta, options,
+        rowGroupFilters, keySchema)
       factoryMemo = (parts, built)
       built
     }
@@ -1164,14 +1202,13 @@ object SpjScan {
     * built here broadcasts the session Hadoop conf once.
     */
   def readerFactory(table: GraftTable, parts: Array[SpjInputPartition],
-      dataSchema: StructType, options: Map[String, String],
-      rowGroupFilters: Seq[Filter], withFile: Boolean,
-      withPos: Boolean = false, withRowId: Boolean = false,
-      withLastUpd: Boolean = false,
+      meta: SpjTable.RequestedMeta, options: Map[String, String],
+      rowGroupFilters: Seq[Filter],
       keySchema: Option[graft.core.IcebergSchema] = None): SpjReaderFactory = {
     factoryBuilds.incrementAndGet()
     val spark = SparkSession.active
-    val needLineage = withRowId || withLastUpd
+    val dataSchema = meta.data
+    val needLineage = meta.lineage
     val anyDeletes = parts.exists(_.files.exists(_.deletes.nonEmpty))
     val anyPosFiles = parts.exists(_.files.exists(
       _.deletes.exists(_.posFiles.nonEmpty)))
@@ -1179,8 +1216,23 @@ object SpjScan {
       .flatMap(_.deletes.toSeq.flatMap(_.eqFiles.map(_._3))).distinct.toSeq
     val reader = ParquetRowReadBridge.rowReader(
       spark, dataSchema, options, rowGroupFilters)
-    if (!anyDeletes && !withPos && !needLineage)
-      return new SpjReaderFactory(reader, withFile)
+    // files without field ids (a name-mapped table's imports): the same
+    // columns requested by their mapped names and without ids, so the
+    // reader resolves them by name. No row-group filters — those name the
+    // table's columns
+    val byName: Option[StructType => StructType] =
+      if (!parts.exists(_.files.exists(_.nameMapped))) None
+      else table.nameMapping.map { nm => (schema: StructType) =>
+        StructType(schema.fields.map { f =>
+          if (!f.metadata.contains(SchemaBridge.FieldIdKey)) f
+          else org.apache.spark.sql.types.StructField(nm.idToName.getOrElse(
+            f.metadata.getLong(SchemaBridge.FieldIdKey).toInt, f.name), f.dataType)
+        })
+      }
+    val mappedReader = byName.map(m =>
+      ParquetRowReadBridge.rowReader(spark, m(dataSchema), options, Nil))
+    if (!anyDeletes && !meta.withPos && !needLineage)
+      return new SpjReaderFactory(reader, meta, mappedReader = mappedReader)
 
     // equality-key columns the pruned projection may lack: widen the
     // delete-path read schema (appended AFTER the data columns, so the
@@ -1238,9 +1290,9 @@ object SpjScan {
       eqKeys.map { case (ids, k) =>
         ids -> ParquetRowReadBridge.rowReader(spark, k.fileSchema, options, Nil)
       }
-    new SpjReaderFactory(reader, withFile, Some(dataPos), del,
-      dataSchema, options, widened, eqReaders, eqKeys, withPos,
-      withRowId, withLastUpd)
+    new SpjReaderFactory(reader, meta, Some(dataPos), del,
+      options, widened, eqReaders, eqKeys, mappedReader,
+      byName.map(m => ParquetRowReadBridge.rowReaderWithPos(spark, m(widened), options, Nil)))
   }
   /** Manifest-stored partition values → catalyst representations (the key
     * row Spark groups/compares on). Loud on anything exotic.
@@ -1284,15 +1336,20 @@ final case class SpjFileInfo(path: String, len: Long,
     // block (-1 = none, pre-upgrade file) and its data sequence number —
     // readers compute _row_id = first_row_id + position where the file
     // carries no explicit column
-    firstRowId: Long = -1L, dataSeq: Long = -1L)
+    firstRowId: Long = -1L, dataSeq: Long = -1L,
+    // a file without field ids, read by the table's name mapping, and the
+    // (column, catalyst value) pairs its null columns take: the identity
+    // partition values a hive-layout file omits
+    nameMapped: Boolean = false, constants: Array[(String, Any)] = Array.empty)
 
 object SpjFileInfo {
   def from(t: graft.table.FileScanTask, context: String): SpjFileInfo = {
-    // the executor readers behind this route are parquet bridges; an ORC
-    // file reaching them (a position-carrying row-level op on an
-    // ORC-imported table — plain reads of imported tables take the V1
-    // name-mapping route) must fail HERE with a plain answer, not deep in
-    // a parquet footer parse
+    // the executor readers behind this route are parquet bridges. Every
+    // batch read of planned tasks — SQL scans, row-level operation scans,
+    // SparkRead.readPlanned — sends a set holding a non-parquet file to the
+    // anti-join pipeline (ReadRoute.choose), so an ORC file reaching here
+    // comes from a streaming micro-batch: fail HERE with a plain answer,
+    // not deep in a parquet footer parse
     require(t.file.format.equalsIgnoreCase("PARQUET"),
       s"$context: ${t.file.format} data file ${t.file.path} is not readable " +
         "by this route; ORC tables support reads, filters, equality deletes " +
@@ -1461,18 +1518,47 @@ object EqDeleteCache {
   */
 final class SpjReaderFactory(
     reader: (String, Long) => Iterator[InternalRow],
-    withFile: Boolean = false,
+    meta: SpjTable.RequestedMeta,
     dataPosReader: Option[(String, Long) => Iterator[InternalRow]] = None,
     delReader: Option[(String, Long) => Iterator[InternalRow]] = None,
-    dataSchema: StructType = new StructType(),
     ioOptions: Map[String, String] = Map.empty,
     widenedSchema: StructType = new StructType(),
     eqReaders: Map[Seq[Int], (String, Long) => Iterator[InternalRow]] = Map.empty,
     eqKeys: Map[Seq[Int], SpjEqKey] = Map.empty,
-    withPos: Boolean = false,
-    withRowId: Boolean = false,
-    withLastUpd: Boolean = false)
+    mappedReader: Option[(String, Long) => Iterator[InternalRow]] = None,
+    mappedDataPosReader: Option[(String, Long) => Iterator[InternalRow]] = None)
     extends PartitionReaderFactory {
+
+  import meta.{withFile, withLastUpd, withPos, withRowId}
+
+  /** `f`'s rows from the ID-resolved or the name-mapped reader, with its
+    * constant columns filled where they read null (every row of the file
+    * holds its identity partition value there). `schema` is the reader's
+    * schema by table names; `types` are the row's field types.
+    */
+  private def rows(f: SpjFileInfo, byId: (String, Long) => Iterator[InternalRow],
+      byName: Option[(String, Long) => Iterator[InternalRow]], schema: StructType,
+      types: => Seq[org.apache.spark.sql.types.DataType]): Iterator[InternalRow] = {
+    val read = if (f.nameMapped) byName.getOrElse(throw new IllegalStateException(
+      "name-mapped file but no name-mapped reader was planned")) else byId
+    val fill = f.constants.collect {
+      case (n, v) if schema.fieldNames.contains(n) => schema.fieldIndex(n) -> v
+    }
+    if (fill.isEmpty) read(f.path, f.len)
+    else {
+      val rowTypes = types
+      read(f.path, f.len).map { r =>
+        if (fill.forall { case (i, _) => !r.isNullAt(i) }) r
+        else {
+          // column readers answer a null slot with a zero value: test each
+          val out = new GenericInternalRow(rowTypes.indices.map(i =>
+            if (r.isNullAt(i)) null else r.get(i, rowTypes(i))).toArray)
+          fill.foreach { case (i, v) => if (out.isNullAt(i)) out.update(i, v) }
+          out
+        }
+      }
+    }
+  }
 
   // positions targeting `dataPath`, from pos-delete parquets (schema:
   // file_path string, pos long), or null when none does. Each delete file
@@ -1525,12 +1611,12 @@ final class SpjReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[SpjInputPartition]
     new PartitionReader[InternalRow] {
-      private val needLineage = withRowId || withLastUpd
+      private val needLineage = meta.lineage
       private val posIdx = widenedSchema.fields.length
       // per task: the projection back to the data columns, and one key
       // projection per equality-id set
       private lazy val strip = UnsafeProjection.create(
-        dataSchema.fields.zipWithIndex.map { case (sf, i) =>
+        meta.data.fields.zipWithIndex.map { case (sf, i) =>
           org.apache.spark.sql.catalyst.expressions.BoundReference(i, sf.dataType, sf.nullable)
         }.toSeq)
       private val probes = new java.util.HashMap[Seq[Int], UnsafeProjection]()
@@ -1540,7 +1626,7 @@ final class SpjReaderFactory(
       private val it = p.files.iterator.flatMap { f =>
         val needPosReader = withPos || needLineage || f.deletes.nonEmpty
         if (!needPosReader) {
-          val base = reader(f.path, f.len)
+          val base = rows(f, reader, mappedReader, meta.data, meta.data.fields.map(_.dataType))
           if (!withFile) base
           else {
             val fileRow = new GenericInternalRow(
@@ -1552,8 +1638,9 @@ final class SpjReaderFactory(
           // pos-carrying read (widened with any eq-key columns, trailing
           // row index); MoR deletes filter here, then the output projects
           // back to data columns + the requested metadata columns
-          val stream = dataPosReader.getOrElse(throw new IllegalStateException(
-            "position reader was not planned")).apply(f.path, f.len)
+          val stream = rows(f, dataPosReader.getOrElse(throw new IllegalStateException(
+            "position reader was not planned")), mappedDataPosReader, widenedSchema,
+            widenedSchema.fields.map(_.dataType).toSeq :+ org.apache.spark.sql.types.LongType)
           val filtered = f.deletes match {
             case None => stream
             case Some(del) =>
@@ -1572,8 +1659,8 @@ final class SpjReaderFactory(
             (if (withRowId) 1 else 0) + (if (withLastUpd) 1 else 0)
           if (metaArity == 0) filtered.map(strip)
           else {
-            val meta = new GenericInternalRow(metaArity)
-            if (withFile) meta.update(0, UTF8String.fromString(f.path))
+            val metaRow = new GenericInternalRow(metaArity)
+            if (withFile) metaRow.update(0, UTF8String.fromString(f.path))
             val posSlot = if (withFile) 1 else 0
             val rowIdSlot = posSlot + (if (withPos) 1 else 0)
             val lastUpdSlot = rowIdSlot + (if (withRowId) 1 else 0)
@@ -1586,17 +1673,17 @@ final class SpjReaderFactory(
               if (needLineage) widenedSchema.fieldIndex(SpjTable.LastUpdatedColumnName) else -1
             val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
             filtered.map { r =>
-              if (withPos) meta.setLong(posSlot, r.getLong(posIdx))
-              if (withRowId) meta.update(rowIdSlot,
+              if (withPos) metaRow.setLong(posSlot, r.getLong(posIdx))
+              if (withRowId) metaRow.update(rowIdSlot,
                 if (!r.isNullAt(rowIdReadIdx)) java.lang.Long.valueOf(r.getLong(rowIdReadIdx))
                 else if (f.firstRowId >= 0)
                   java.lang.Long.valueOf(f.firstRowId + r.getLong(posIdx))
                 else null)
-              if (withLastUpd) meta.update(lastUpdSlot,
+              if (withLastUpd) metaRow.update(lastUpdSlot,
                 if (!r.isNullAt(lastReadIdx)) java.lang.Long.valueOf(r.getLong(lastReadIdx))
                 else if (f.firstRowId >= 0) java.lang.Long.valueOf(f.dataSeq)
                 else null)
-              joined(strip(r), meta)
+              joined(strip(r), metaRow)
             }
           }
         }

@@ -102,8 +102,8 @@ final class SpjMicroBatchStream(table: GraftTable, sparkSchema: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    SpjScan.readerFactory(table, planned, sparkSchema, options, Nil,
-      withFile = false)
+    SpjScan.readerFactory(table, planned, SpjTable.RequestedMeta(sparkSchema),
+      options, Nil)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

@@ -2,7 +2,6 @@ package graft.table
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.SchemaBridge
 import graft.format._
 
 /** Incremental (CDC-style) consumption between snapshots: the metadata basis
@@ -120,14 +119,8 @@ object Incremental {
       .flatMap(_.schemaId).getOrElse(meta.currentSchemaId)
     val schema = meta.schemaById(toSchemaId).getOrElse(meta.schema)
     val ioOptions = table.refreshIoCredentials()
-    def readSide(tasks: Seq[FileScanTask]): DataFrame =
-      if (tasks.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          SchemaBridge.toSpark(schema))
-      else SparkRead.readTasks(spark, tasks, schema, table.nameMapping,
-        rowLineage = false, meta.specById, ioOptions)
-    val before = readSide(beforeTasks)
-    val after = readSide(afterTasks)
+    val before = SparkRead.readPlanned(spark, table, beforeTasks, schema, ioOptions = ioOptions)
+    val after = SparkRead.readPlanned(spark, table, afterTasks, schema, ioOptions = ioOptions)
     // groupBy uses null-safe grouping equality, matching exceptAll's
     // null-safe row comparison; |d| per surviving group is the row's net
     // multiplicity (bounded by its per-snapshot duplication, tiny for real
@@ -147,10 +140,7 @@ object Incremental {
   /** Read the incremental append set as a DataFrame. */
   def readAppends(spark: SparkSession, table: Table, fromSnapshotId: Long,
       toSnapshotId: Long): DataFrame = {
-    val tasks = appendsBetween(table, fromSnapshotId, toSnapshotId)
-    if (tasks.isEmpty) {
-      val schema = SchemaBridge.toSpark(table.schema)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else SparkRead.readTasks(spark, tasks, table.schema, table.nameMapping)
+    SparkRead.readPlanned(spark, table, appendsBetween(table, fromSnapshotId, toSnapshotId),
+      table.schema, ioOptions = table.refreshIoCredentials())
   }
 }

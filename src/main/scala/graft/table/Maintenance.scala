@@ -129,31 +129,13 @@ object Maintenance {
     if (selected.isEmpty) return deadOnlyCommit()
 
     val schema = table.schema
-    // v3 row-lineage preservation (reference rewrite_data_files.go:330-390):
-    // files that carry lineage are read with _row_id /
-    // _last_updated_sequence_number synthesized and write them through as
-    // explicit columns — row ids stay stable across compaction. A MIXED
-    // scope (legacy files from before a v3 upgrade) is SPLIT into two
-    // output groups rather than dropping lineage for everyone: the
-    // lineage-carrying subset rewrites with preservation, the legacy subset
-    // without (its outputs take fresh first_row_id blocks at commit). One
-    // mixed output file would put nulls beside real ids, violating per-file
-    // uniqueness — splitting keeps the spec promise for the rows that have
-    // ids at the cost of one extra output group.
-    val v3 = table.metadata.formatVersion >= 3
-    def lineageSplit(scope: Seq[FileScanTask]): Seq[(Seq[FileScanTask], Boolean)] =
-      if (!v3) Seq((scope, false))
-      else {
-        val (lineage, legacy) = scope.partition(_.file.firstRowId.isDefined)
-        if (legacy.nonEmpty && lineage.nonEmpty)
-          System.err.println("[compaction] mixed row lineage in rewrite scope; " +
-            s"splitting into ${lineage.size} lineage-preserving / " +
-            s"${legacy.size} legacy files")
-        Seq((lineage, true), (legacy, false)).filter(_._1.nonEmpty)
-      }
+    val ioOptions = table.refreshIoCredentials()
+    // v3 row-lineage preservation: a MIXED scope (legacy files from before a
+    // v3 upgrade) splits into a lineage-preserving and a legacy output group
+    // (Writer.lineageSplit) rather than dropping lineage for everyone
     def rewriteGroup(group: Seq[FileScanTask], preserve: Boolean): Seq[DataFile] = {
-      val compacted = SparkRead.readTasks(spark, group, schema, table.nameMapping,
-        rowLineage = preserve, specById = table.metadata.specById)
+      val compacted = SparkRead.readPlanned(spark, table, group, schema,
+        rowLineage = preserve, ioOptions)
       // the actual bin-pack: output partition count sized so each lands near
       // target (coalesce merges read splits without a shuffle; the writer's
       // calibrated maxRecordsPerFile still rolls any partition that runs
@@ -223,7 +205,7 @@ object Maintenance {
       }.toSet
       dropped ++= batchDroppable
       val removeKeys = batchDroppable ++ (if (i == 0) deadEqDeletes else Set.empty)
-      val newFiles = lineageSplit(batch).flatMap { case (g, p) => rewriteGroup(g, p) }
+      val newFiles = Writer.lineageSplit(table, batch).flatMap { case (g, p) => rewriteGroup(g, p) }
       cur = Writer.commitSnapshot(cur, "replace",
         addedFiles = newFiles, removedPaths = batchPaths,
         addedDeleteFiles = Nil,

@@ -2,9 +2,12 @@ package graft.table
 
 import org.apache.spark.sql.SparkSession
 
-/** Which engine reads a planned task set — the one routing rule shared by
-  * the programmatic [[SparkRead.read]] and the SQL catalog's scan builder
-  * ([[graft.sources.SpjScanBuilder]]).
+/** Which engine reads a planned task set — the one routing rule for every
+  * read of planned tasks: [[SparkRead.readPlanned]] (behind
+  * [[SparkRead.read]], Writer rewrites, compaction and the changelog) and
+  * the SQL catalog's scan builder ([[graft.sources.SpjScanBuilder]]), whose
+  * row-level form serves the candidate scans of SQL DELETE, UPDATE and
+  * MERGE.
   *
   *  - [[ReadRoute.PerTask]]: the DSv2 [[graft.sources.SpjScan]] readers,
   *    which apply DV bitmaps, positional-delete sets and equality-key sets
@@ -12,10 +15,11 @@ import org.apache.spark.sql.SparkSession
   *    bounded equality-delete backlog takes it.
   *  - everything else reads through [[SparkRead.readTasks]], the anti-join
   *    pipeline: name-mapped (imported) tables, whose files may lack field
-  *    ids or carry pre-rename names; non-parquet data files, which the
-  *    per-task parquet readers cannot open; and equality-delete backlogs
-  *    over `spark.graft.eqDeleteFallbackBytes`, whose key sets would not
-  *    fit in executor memory.
+  *    ids or carry pre-rename names, unless a row-level scan reads them;
+  *    non-parquet data files, which the per-task parquet readers cannot
+  *    open; and equality-delete backlogs over
+  *    `spark.graft.eqDeleteFallbackBytes`, whose key sets would not fit in
+  *    executor memory.
   */
 object ReadRoute {
 
@@ -47,18 +51,25 @@ object ReadRoute {
 
   /** `options`: the read's options (may carry `eq-delete-fallback-bytes`).
     * `positionMeta`: the read asks for `_file`/`_pos`/lineage metadata
-    * columns through the SQL surface. Row-level operations do, and their
-    * group-filtered scans are file-scoped, so an equality-delete backlog
-    * keeps them on the per-task route.
+    * columns through the SQL surface; an equality-delete backlog keeps it
+    * on the per-task route.
+    * `rowLevel`: the candidate scan of a SQL DELETE, UPDATE or MERGE. It
+    * reads whole candidate files, so an equality-delete backlog keeps it on
+    * the per-task route, and so does a name mapping: the per-task readers
+    * resolve a file without field ids through the mapping, and Spark plans
+    * a copy-on-write rewrite only over a DSv2 batch scan, which the
+    * anti-join pipeline is not. Only non-parquet files leave it.
     */
   def choose(spark: SparkSession, table: Table, tasks: Seq[FileScanTask],
-      options: Map[String, String], positionMeta: Boolean = false): Decision = {
+      options: Map[String, String], positionMeta: Boolean = false,
+      rowLevel: Boolean = false): Decision = {
     val eqBytes = tasks.flatMap(_.eqDeletes.map(_._1)).distinctBy(_.path).map(_.fileSize).sum
     val fallbackBytes = eqFallbackBytes(spark, options)
     val route =
-      if (table.metadata.properties.contains(graft.format.NameMapping.PropertyKey)) NameMapping
+      if (!rowLevel &&
+          table.metadata.properties.contains(graft.format.NameMapping.PropertyKey)) NameMapping
       else if (tasks.exists(!_.file.format.equalsIgnoreCase("PARQUET"))) NonParquet
-      else if (eqBytes > fallbackBytes && !positionMeta) AntiJoin
+      else if (eqBytes > fallbackBytes && !positionMeta && !rowLevel) AntiJoin
       else PerTask
     Decision(route, eqBytes, fallbackBytes)
   }

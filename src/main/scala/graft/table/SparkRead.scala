@@ -10,7 +10,9 @@ import graft.format.DataFileContent
 /** Executes a planned scan as a Spark DataFrame (reference read dataflow
   * `table/arrow_scanner.go` §2.3).
   *
-  * [[read]] plans once, then lets [[ReadRoute.choose]] pick the engine:
+  * [[read]] plans once and hands the tasks to [[readPlanned]], the one
+  * entry for every read of a planned task set: scans, Writer rewrites,
+  * compaction and the changelog. [[ReadRoute.choose]] picks the engine:
   *
   *  - the per-task route (every plain parquet read with a bounded
   *    equality-delete backlog): the planned tasks become a DSv2 relation
@@ -21,12 +23,12 @@ import graft.format.DataFileContent
   *    inside Spark's parquet reader) and drops deleted rows as it reads:
   *    DV bitmaps, positional-delete sets and equality-key sets come from
   *    executor LRU caches, sequence-scoped by the planner.
-  *  - [[readTasks]] (name-mapped tables, non-parquet files, oversized
-  *    equality-delete backlogs; also Writer rewrites, compaction and the
-  *    changelog): positional deletes become a left-anti join on
-  *    (file, `_metadata.row_index`), DVs a per-file bitmap filter, and
-  *    equality deletes null-safe left-anti joins — shuffling joins, never
-  *    in-memory hash sets, so an unbounded backlog stays readable.
+  *  - [[readTasks]], the fallback (name-mapped tables, non-parquet files,
+  *    oversized equality-delete backlogs): positional deletes become a
+  *    left-anti join on (file, `_metadata.row_index`), DVs a per-file
+  *    bitmap filter, and equality deletes null-safe left-anti joins —
+  *    shuffling joins, never in-memory hash sets, so an unbounded backlog
+  *    stays readable.
   *
   * Either way projection, the residual row filter (pushed into the parquet
   * reader for row-group pruning) and the limit are Catalyst operators above
@@ -67,22 +69,29 @@ object SparkRead {
       else meta.currentSchemaId
     val schema = meta.schemaById(snapSchemaId).getOrElse(meta.schema)
 
-    if (tasks.isEmpty) {
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], SchemaBridge.toSpark(schema))
-      return project(applyResidual(empty, scan), scan, schema)
-    }
-
-    val route = ReadRoute.choose(spark, scan.table, tasks, ioOptions).route
-    val df =
-      if (route == ReadRoute.PerTask) withUnknownColumns(schema) { stored =>
-        org.apache.spark.sql.GraftSqlShim.readV2(spark, new graft.sources.SpjPlannedTable(
-          scan.table, stored, tasks,
-          scan.snapshot.map(_.snapshotId), scan.rowLineage, ioOptions))
-      }
-      else readTasks(spark, tasks, schema, scan.table.nameMapping, scan.rowLineage,
-        meta.specById, ioOptions)
+    val df = readPlanned(spark, scan.table, tasks, schema, scan.rowLineage, ioOptions)
     project(applyResidual(df, scan), scan, schema)
+  }
+
+  /** Read a planned task set with its MoR deletes applied, through the
+    * engine [[ReadRoute.choose]] picks for it. `tasks` may be any subset of
+    * one snapshot's plan (a rewrite group, one side of a changelog);
+    * `schema` names the columns. Rewrites and compaction must read this way,
+    * never raw parquet, or already-deleted rows would resurrect in the
+    * rewritten files.
+    */
+  def readPlanned(spark: SparkSession, table: Table, tasks: Seq[FileScanTask],
+      schema: IcebergSchema, rowLineage: Boolean = false,
+      ioOptions: Map[String, String] = Map.empty): DataFrame = {
+    configure(spark)
+    if (tasks.nonEmpty &&
+        ReadRoute.choose(spark, table, tasks, ioOptions).route == ReadRoute.PerTask)
+      withUnknownColumns(schema) { stored =>
+        org.apache.spark.sql.GraftSqlShim.readV2(spark, new graft.sources.SpjPlannedTable(
+          table, stored, tasks, rowLineage, ioOptions))
+      }
+    else readTasks(spark, tasks, schema, table.nameMapping, rowLineage,
+      table.metadata.specById, ioOptions)
   }
 
   /** v3 `unknown`-typed columns are never stored in data files (spec:
@@ -97,10 +106,11 @@ object SparkRead {
     unknown.foldLeft(df)((d, f) => d.withColumn(f.name, lit(null)))
   }
 
-  /** Read a specific set of scan tasks with their MoR deletes applied — the
-    * shared dataflow behind full scans, CoW rewrites, and compaction (which
-    * must never read raw parquet directly, or already-deleted rows would
-    * resurrect in the rewritten files).
+  /** The anti-join pipeline: read a set of scan tasks with their MoR
+    * deletes applied as distributed joins. Reached through [[readPlanned]]
+    * as the route's fallback, from [[graft.sources.SpjAntiJoinScan]], and by
+    * callers that hold planned tasks but no `Table` (REST-planned scans).
+    * An empty task set reads as an empty frame of the same columns.
     *
     * When the table carries a name mapping (add_files import), each group is
     * split into ID-resolved and name-mapped subgroups: Spark's fieldId
@@ -117,7 +127,7 @@ object SparkRead {
     * [[graft.io.FileIO]], which applies the same credentials via its
     * prefix-scoped overlay registry.
     */
-  def readTasks(spark: SparkSession, tasks: Seq[FileScanTask],
+  private[graft] def readTasks(spark: SparkSession, tasks: Seq[FileScanTask],
       schema: IcebergSchema,
       nameMapping: Option[graft.format.NameMapping] = None,
       rowLineage: Boolean = false,
@@ -186,7 +196,16 @@ object SparkRead {
         keepFilePos) }
     }
 
-    parts.reduce(_ unionByName _)
+    // no tasks, no groups: an empty frame of the columns a read returns
+    parts.reduceOption(_ unionByName _).getOrElse {
+      val long = org.apache.spark.sql.types.LongType
+      val meta =
+        (if (rowLineage) SchemaBridge.LineageCols.map(c => StructField(c._1, long)) else Nil) ++
+          (if (keepFilePos) Seq(StructField("__file", org.apache.spark.sql.types.StringType),
+            StructField("__pos", long)) else Nil)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType(readSchema.fields ++ meta))
+    }
   }
 
   private def readSubGroup(spark: SparkSession, groupTasks: Seq[FileScanTask],
@@ -447,7 +466,7 @@ object SparkRead {
     } finally reader.close()
   }
 
-  private def fieldIdPresence(spark: SparkSession,
+  private[graft] def fieldIdPresence(spark: SparkSession,
       paths: Seq[String]): Map[String, Boolean] = {
     val canon = paths.map(p => p -> graft.io.FileIO.canonical(p)).toMap
     val misses = paths.filterNot(p => fieldIdProbe.containsKey(canon(p)))

@@ -138,34 +138,43 @@ object Writer {
       Evaluators.fileMustMatch(schema, strictFilter, t.file))
     val candidatePaths = candidates.map(_.file.path)
     // rewrite only partially-matching candidates, without the matching rows,
-    // reading through the MoR pipeline so already-deleted rows stay deleted.
+    // reading with MoR deletes applied so already-deleted rows stay deleted.
     // v3 row lineage survives the rewrite the same way compaction preserves
-    // it: lineage-carrying files read with _row_id synthesized and write it
-    // through as explicit columns (survivor rows are UNCHANGED rows, so
-    // their ids and last-updated sequence numbers are still theirs); a
-    // mixed scope splits into lineage/legacy output groups
-    val newFiles =
-      if (partial.isEmpty) Nil
-      else {
-        val groups: Seq[(Seq[FileScanTask], Boolean)] =
-          if (table.metadata.formatVersion < 3) Seq((partial, false))
-          else {
-            val (lin, leg) = partial.partition(_.file.firstRowId.isDefined)
-            Seq((lin, true), (leg, false)).filter(_._1.nonEmpty)
-          }
-        groups.flatMap { case (g, preserve) =>
-          writeDataFiles(spark, table,
-            SparkRead.readTasks(spark, g, schema, table.nameMapping,
-              rowLineage = preserve, specById = table.metadata.specById)
-              .filter(!Expr.toColumn(filter)))
-        }
-      }
+    // it (survivor rows are UNCHANGED rows, so their ids and last-updated
+    // sequence numbers are still theirs)
+    val ioOptions = table.refreshIoCredentials()
+    val newFiles = lineageSplit(table, partial).flatMap { case (g, preserve) =>
+      writeDataFiles(spark, table,
+        SparkRead.readPlanned(spark, table, g, schema, rowLineage = preserve, ioOptions)
+          .filter(!Expr.toColumn(filter)))
+    }
     commitSnapshot(table, "overwrite", addedFiles = newFiles,
       removedPaths = candidatePaths.toSet, addedDeleteFiles = Nil,
       conflictCheck = Some(ConflictCheck(filter = filter,
         candidatePaths = candidatePaths.toSet,
         rewrittenFiles = candidates.map(t => (t.file, t.specId)))))
   }
+
+  /** A rewrite scope split by v3 row lineage (reference
+    * rewrite_data_files.go:330-390): files that carry lineage form a group
+    * read with `_row_id` / `_last_updated_sequence_number` synthesized and
+    * written through as explicit columns (flag true), so row ids stay
+    * stable across the rewrite. Legacy files from before a v3 upgrade form
+    * a group without (their outputs take fresh first_row_id blocks at
+    * commit): one mixed output file would put nulls beside real ids,
+    * violating per-file uniqueness. Below v3 the scope is one group.
+    */
+  private[table] def lineageSplit(table: Table,
+      scope: Seq[FileScanTask]): Seq[(Seq[FileScanTask], Boolean)] =
+    if (table.metadata.formatVersion < 3) Seq((scope, false)).filter(_._1.nonEmpty)
+    else {
+      val (lineage, legacy) = scope.partition(_.file.firstRowId.isDefined)
+      if (legacy.nonEmpty && lineage.nonEmpty)
+        System.err.println("[rewrite] mixed row lineage in rewrite scope; " +
+          s"splitting into ${lineage.size} lineage-preserving / " +
+          s"${legacy.size} legacy files")
+      Seq((lineage, true), (legacy, false)).filter(_._1.nonEmpty)
+    }
 
   /** Dynamic partition overwrite (Iceberg ReplacePartitions semantics):
     * replace exactly the partitions PRESENT in `df`, atomically — write the
@@ -241,8 +250,8 @@ object Writer {
     val rewritten =
       if (partial.isEmpty) Nil
       else writeDataFiles(spark, table,
-        SparkRead.readTasks(spark, partial, schema, table.nameMapping,
-          specById = table.metadata.specById)
+        SparkRead.readPlanned(spark, table, partial, schema,
+          ioOptions = table.refreshIoCredentials())
           .filter(!Expr.toColumn(filter)))
     commitSnapshot(table, "overwrite", addedFiles = added ++ rewritten,
       removedPaths = candidatePaths.toSet, addedDeleteFiles = Nil,

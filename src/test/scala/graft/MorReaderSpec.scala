@@ -12,7 +12,7 @@ import graft.catalog.HadoopCatalog
 import graft.core.{Expr, SchemaBridge, Transforms}
 import graft.format.PartitionSpec
 import graft.sources.SpjScan
-import graft.table.{Evolve, SparkRead, Table, Writer}
+import graft.table.{Evolve, Maintenance, SparkRead, Table, Writer}
 
 /** The per-task merge-on-read reader ([[graft.sources.SpjScan]] and its
   * reader factory), which serves both the SQL catalog and
@@ -77,6 +77,40 @@ class MorReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(builds {
         assert(SparkRead.read(spark, t.newScan.withFilter(Expr.gtEq("v", 0))).count() === live)
       } === 1L, s"${t.name}: SparkRead.read")
+    }
+  }
+
+  test("SQL MERGE and DELETE on merge-on-read tables build one reader factory each") {
+    Seq(2, 3).foreach { version =>
+      val name = s"mr_dml$version"
+      Evolve.setProperties(morTable(name, version), Seq("delete", "update", "merge")
+        .map(c => s"write.$c.mode" -> "merge-on-read").toMap)
+      def live = spark.sql(s"SELECT count(*) FROM gmr.$name").collect().head.getLong(0)
+      val before = live
+      assert(builds {
+        spark.sql(s"MERGE INTO gmr.$name t USING (SELECT * FROM VALUES (20L, 0, 77) " +
+          "AS s(id, seg, v)) s ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v")
+      } === 1L, s"$name: MERGE")
+      assert(spark.sql(s"SELECT v FROM gmr.$name WHERE id = 20").collect()
+        .map(_.getInt(0)).toSeq === Seq(77), name)
+      assert(builds { spark.sql(s"DELETE FROM gmr.$name WHERE id = 21") } === 1L, s"$name: DELETE")
+      assert(live === before - 1L, name)
+    }
+  }
+
+  test("rewrites on the per-task route build one reader factory per rewrite group") {
+    Seq(2, 3).foreach { version =>
+      val name = s"mr_rewrite$version"
+      val t = morTable(name, version)
+      val live = SparkRead.read(spark, t.newScan).count()
+      assert(builds { Writer.deleteWhere(spark, t, Expr.eq("id", 20L)) } === 1L,
+        s"$name: deleteWhere")
+      assert(builds {
+        Maintenance.rewriteDataFiles(spark, catalog.loadTable(name), rewriteAll = true)
+      } === 1L, s"$name: rewriteDataFiles")
+      val after = catalog.loadTable(name)
+      assert(after.newScan.planFiles().forall(t => t.posDeletes.isEmpty && t.eqDeletes.isEmpty))
+      assert(SparkRead.read(spark, after.newScan).count() === live - 1L, name)
     }
   }
 

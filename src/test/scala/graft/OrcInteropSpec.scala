@@ -99,6 +99,24 @@ class OrcInteropSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(SparkRead.read(spark, t5.newScan).count() === 898)
   }
 
+  test("SQL row-level operations over ORC files are rejected loudly") {
+    val tmp = s"$wh/orc-src-3"
+    spark.range(20).toDF("k").coalesce(1).write.orc(tmp)
+    val t0 = catalog.createTable("orc3",
+      SchemaBridge.fromSpark(spark.range(1).toDF("k").schema), PartitionSpec.Unpartitioned)
+    Writer.addFiles(spark, t0, orcPaths(tmp))
+    def messages(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    // copy-on-write needs a DSv2 batch scan, which only parquet files get
+    val cow = intercept[Exception](spark.sql("UPDATE g.orc3 SET k = -1 WHERE k = 1").collect())
+    assert(messages(cow).contains("need parquet data files"), messages(cow))
+    // merge-on-read deletes by position, which ORC files do not carry
+    spark.sql("ALTER TABLE g.orc3 SET TBLPROPERTIES ('write.delete.mode' = 'merge-on-read')")
+    val mor = intercept[Exception](spark.sql("DELETE FROM g.orc3 WHERE k = 1").collect())
+    assert(messages(mor).contains("ORC"), messages(mor))
+    assert(SparkRead.read(spark, catalog.loadTable("orc3").newScan).count() === 20L)
+  }
+
   test("positional deletes over ORC are rejected loudly, never fabricated") {
     import spark.implicits._
     val df = spark.range(50).toDF("k")

@@ -160,6 +160,97 @@ class ReadRouteSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(SparkRead.read(spark, backlog.newScan).count() === 98L)
   }
 
+  /** A fresh `addFiles` import of one parquet file written without field
+    * ids: 100 rows of [[base]], read through a name mapping.
+    */
+  private def importTable(name: String, formatVersion: Int = 2,
+      props: Map[String, String] = Map.empty): Table = {
+    val dir = Files.createTempDirectory(s"graft-$name").toString + "/src"
+    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "false")
+    try base(0, 100).coalesce(1).write.parquet(dir)
+    finally spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+    val file = graft.io.FileIO.listFilesRecursive(dir).map(_.path)
+      .filter(_.endsWith(".parquet")).head
+    var t = catalog.createTable(name, SchemaBridge.fromSpark(base(0, 1).schema),
+      PartitionSpec.Unpartitioned)
+    if (formatVersion >= 3) t = Evolve.upgradeFormatVersion(t, 3)
+    if (props.nonEmpty) t = Evolve.setProperties(t, props)
+    t = Writer.addFiles(spark, t, Seq(file))
+    assert(t.nameMapping.isDefined)
+    t
+  }
+
+  test("a read whose every file is pruned is empty on every route") {
+    val t = importTable("rr_pruned")
+    assert(spark.sql("SELECT count(*) FROM grr.rr_pruned WHERE id = 1000")
+      .collect().head.getLong(0) === 0L)
+    assert(SparkRead.read(spark, t.newScan.withFilter(Expr.eq("id", 1000L))).count() === 0L)
+    assert(SparkRead.readPlanned(spark, t, Nil, t.schema).count() === 0L)
+    assert(SparkRead.readPlanned(spark, mor3, Nil, mor3.schema, rowLineage = true)
+      .columns.toSeq === Seq("id", "seg", "v", SchemaBridge.RowIdCol, SchemaBridge.LastUpdatedSeqCol))
+  }
+
+  test("a runtime filter prunes a planned task subset, never re-plans it from the table") {
+    // the appends of the second snapshot alone: ids 3000-3999
+    val snaps = mor2.metadata.snapshots.map(_.snapshotId)
+    val appended = graft.table.Incremental.readAppends(spark, mor2, snaps(0), snaps(1))
+    // not a local relation: its filter must survive optimization for
+    // dynamic partition pruning to take it
+    spark.range(1, 4).select(col("id").cast("int").as("seg"),
+      when(col("id") === 1L, "keep").otherwise("drop").as("tag"))
+      .createOrReplaceTempView("rr_dim")
+    val joined = appended.join(spark.table("rr_dim").filter(col("tag") === "keep"), "seg")
+    assert(joined.queryExecution.optimizedPlan.toString.contains("dynamicpruning"))
+    assert(joined.count() === 250L)
+    assert(joined.agg(min("id"), max("id")).collect().head.toSeq === Seq(3001L, 3997L))
+  }
+
+  test("SQL DELETE, UPDATE and MERGE on an addFiles import change exactly the targeted rows") {
+    for (version <- Seq(2, 3); mode <- Seq("copy-on-write", "merge-on-read")) {
+      val name = s"rr_import_dml_v${version}_${mode.replace("-", "_")}"
+      importTable(name, version,
+        Seq("delete", "update", "merge").map(c => s"write.$c.mode" -> mode).toMap)
+      var model: Map[Long, (Int, Int)] =
+        (0L until 100L).map(i => i -> ((i % 4).toInt, (i * 7 % 100).toInt)).toMap
+      def run(stmt: String)(change: Map[Long, (Int, Int)] => Map[Long, (Int, Int)]): Unit = {
+        spark.sql(stmt)
+        model = change(model)
+        val want = model.toSeq.map { case (id, (seg, v)) => s"[$id,$seg,$v]" }.sorted
+        assert(rows(spark.sql(s"SELECT id, seg, v FROM grr.$name")) === want, s"$name SQL: $stmt")
+        assert(rows(SparkRead.read(spark, catalog.loadTable(name).newScan)) === want,
+          s"$name SparkRead.read: $stmt")
+      }
+      run(s"UPDATE grr.$name SET v = -1 WHERE id = 5")(m => m.updated(5L, (1, -1)))
+      run(s"MERGE INTO grr.$name t USING (SELECT * FROM VALUES (7L, 123), (1000L, 9) " +
+        "AS s(id, v)) s ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v " +
+        "WHEN NOT MATCHED THEN INSERT (id, seg, v) VALUES (s.id, 0, s.v)")(
+        m => m.updated(7L, (3, 123)).updated(1000L, (0, 9)))
+      run(s"DELETE FROM grr.$name WHERE id = 9")(_ - 9L)
+      // not translatable to a source filter: the row-level plan on both modes
+      run(s"DELETE FROM grr.$name WHERE id % 50 = 3")(_ -- Seq(3L, 53L))
+    }
+  }
+
+  test("row-level operations on a hive-layout import keep the partition values its files omit") {
+    Seq("copy-on-write", "merge-on-read").foreach { mode =>
+      val name = s"rr_hive_dml_${mode.replace("-", "_")}"
+      val dir = Files.createTempDirectory(s"graft-$name").toString + "/src"
+      spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "false")
+      try base(0, 100).write.partitionBy("seg").parquet(dir)
+      finally spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+      Evolve.setProperties(Writer.snapshotImport(spark, catalog, dir, name),
+        Seq("delete", "update", "merge").map(c => s"write.$c.mode" -> mode).toMap)
+      spark.sql(s"UPDATE grr.$name SET v = -1 WHERE id = 5")
+      spark.sql(s"DELETE FROM grr.$name WHERE id % 50 = 3")
+      val want = (0L until 100L).filterNot(Set(3L, 53L))
+        .map(i => (i, (i % 4).toInt, if (i == 5L) -1 else (i * 7 % 100).toInt))
+        .map { case (id, seg, v) => s"[$id,$v,$seg]" }.sorted
+      assert(rows(spark.sql(s"SELECT id, v, seg FROM grr.$name")) === want, name)
+      assert(rows(SparkRead.read(spark, catalog.loadTable(name).newScan.select("id", "v", "seg"))) ===
+        want, name)
+    }
+  }
+
   test("time travel, row lineage, limit and unknown columns read the same rows as before") {
     import spark.implicits._
     // time travel to every snapshot, including the pre-delete ones
