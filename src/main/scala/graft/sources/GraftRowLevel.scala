@@ -220,11 +220,16 @@ object GraftBatchWrites {
     })
 
   /** Executor-side partition-fanout writer factory over Spark's own
-    * parquet OutputWriter — shared by the CoW row-level replacement write
-    * and the dynamic-overwrite write.
+    * parquet OutputWriter — shared by every DSv2 data write: the CoW
+    * row-level replacement, the merge-on-read inserts, the dynamic
+    * overwrite and the streaming epochs. Files are encrypted under the
+    * table's key and take its `write.parquet.*` settings
+    * ([[Writer.taskWriteOptions]]). `closeOnPartitionChange`: the input
+    * arrives clustered and sorted by partition (see [[GraftCowDataWriter]]).
     */
   def cowWriterFactory(table: GraftTable,
-      lineageMetaIdx: Option[(Int, Int)] = None): DataWriterFactory = {
+      lineageMetaIdx: Option[(Int, Int)] = None,
+      closeOnPartitionChange: Boolean = true): GraftCowWriterFactory = {
     val spark = SparkSession.active
     val schema = table.schema
     val sparkSchema = SchemaBridge.toSpark(schema)
@@ -250,11 +255,10 @@ object GraftBatchWrites {
     val maxRecords = math.max(1L,
       (targetBytes / Writer.estimatedRowBytes(table.location, sparkSchema)).toLong)
     new GraftCowWriterFactory(
-      ParquetRowWriteBridge.writerFactory(spark, writeSchema, ioOpts),
+      ParquetRowWriteBridge.writerFactory(spark, writeSchema,
+        Writer.taskWriteOptions(spark, table, ioOpts)),
       table.location, schema, table.spec, extractors, maxRecords,
-      // the owning writes declare a clustered+sorted distribution, so each
-      // partition arrives as one contiguous run — close on change
-      closeOnPartitionChange = true,
+      closeOnPartitionChange = closeOnPartitionChange,
       tableProps = table.metadata.properties,
       lineageMetaIdx = lineageMetaIdx)
   }

@@ -104,14 +104,7 @@ final class SpjTable(table: GraftTable, sparkSchema: StructType,
     * (`SELECT _file, ...`) and the carrier that engages Spark's projecting
     * write task for row-level operations.
     */
-  override def metadataColumns(): Array[MetadataColumn] = {
-    val base = Array[MetadataColumn](SpjTable.FileMetaColumn, SpjTable.PosMetaColumn)
-    // row lineage exists from format v3; advertising the columns below v3
-    // would promise ids the metadata cannot provide
-    if (table.metadata.formatVersion >= 3)
-      base ++ Array[MetadataColumn](SpjTable.RowIdMetaColumn, SpjTable.LastUpdatedMetaColumn)
-    else base
-  }
+  override def metadataColumns(): Array[MetadataColumn] = SpjTable.metadataColumns(table)
 
   /** Table properties surface to SQL (`SHOW TBLPROPERTIES`,
     * `SHOW CREATE TABLE`): the graft table's own properties plus the
@@ -464,6 +457,17 @@ object SpjTable {
   val RowIdColumnName: String = SchemaBridge.RowIdCol
   val LastUpdatedColumnName: String = SchemaBridge.LastUpdatedSeqCol
 
+  /** The metadata columns a graft table serves. Row lineage exists from
+    * format v3; advertising its columns below v3 would promise ids the
+    * metadata cannot provide.
+    */
+  def metadataColumns(table: GraftTable): Array[MetadataColumn] = {
+    val base = Array[MetadataColumn](FileMetaColumn, PosMetaColumn)
+    if (table.metadata.formatVersion >= 3)
+      base ++ Array[MetadataColumn](RowIdMetaColumn, LastUpdatedMetaColumn)
+    else base
+  }
+
   object FileMetaColumn extends MetadataColumn {
     override def name(): String = FileColumnName
     override def dataType(): org.apache.spark.sql.types.DataType =
@@ -732,12 +736,16 @@ object SpjRouting {
   * `readSchema` is the read's stored schema (a time-travel read's is the
   * snapshot's): it names the columns, equality-delete keys included. With
   * `rowLineage` the v3 lineage columns are part of the table schema, so a
-  * plain projection requests them.
+  * plain projection requests them. The catalog table's metadata columns
+  * are served too: the merge-on-read delete writers read `_file`/`_pos`
+  * through them ([[graft.table.SparkRead.matchedPositions]]).
   */
 final class SpjPlannedTable(table: GraftTable, readSchema: graft.core.IcebergSchema,
     tasks: Seq[graft.table.FileScanTask], rowLineage: Boolean,
     options: Map[String, String])
-    extends V2Table with SupportsRead {
+    extends V2Table with SupportsRead with SupportsMetadataColumns {
+
+  override def metadataColumns(): Array[MetadataColumn] = SpjTable.metadataColumns(table)
 
   private val dataSchema: StructType = SchemaBridge.toSpark(readSchema)
 
@@ -1136,8 +1144,9 @@ final class SpjScan(table: GraftTable, meta: SpjTable.RequestedMeta,
   }
 
   /** Per-task file info. On a name-mapped table (only a row-level scan
-    * reads one per task; plain reads take the anti-join pipeline) a file
-    * written without field ids is read by its mapped names, and the
+    * and the merge-on-read delete writers' position read read one per
+    * task; plain reads take the anti-join pipeline) a file written
+    * without field ids is read by its mapped names, and the
     * identity-partition columns a hive-layout file omits take the file's
     * partition values.
     */

@@ -6,10 +6,8 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.graft.ParquetRowWriteBridge
 import org.apache.spark.sql.types.StructType
 
-import graft.core.SchemaBridge
 import graft.streaming.{IcebergSink, SnapshotOffset}
 import graft.table.{Incremental, Table => GraftTable, Writer}
 
@@ -121,28 +119,11 @@ final class SpjMicroBatchStream(table: GraftTable, sparkSchema: StructType,
 final class GraftStreamingWrite(table: GraftTable, truncate: Boolean)
     extends StreamingWrite {
 
+  // epoch rows arrive unsorted: keep one open writer per partition value
   override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val spark = SparkSession.active
-    val schema = table.schema
-    val sparkSchema = SchemaBridge.toSpark(schema)
-    val ioOpts = table.refreshIoCredentials()
-    val extractors = table.spec.fields.map { pf =>
-      val src = schema.idToField(pf.sourceId)
-      val idx = sparkSchema.fieldIndex(src.name)
-      GraftPartExtractor(idx, sparkSchema.fields(idx).dataType, pf.transform)
-    }
-    val targetBytes = table.metadata.properties
-      .get("write.target-file-size-bytes").map(_.toLong)
-      .getOrElse(512L * 1024 * 1024)
-    val maxRecords = math.max(1L,
-      (targetBytes / math.max(16, sparkSchema.defaultSize).toDouble).toLong)
-    val inner = new GraftCowWriterFactory(
-      ParquetRowWriteBridge.writerFactory(spark, sparkSchema, ioOpts),
-      table.location, schema, table.spec, extractors, maxRecords,
-      tableProps = table.metadata.properties)
-    new GraftStreamingWriterFactory(inner)
-  }
+      info: PhysicalWriteInfo): StreamingDataWriterFactory =
+    new GraftStreamingWriterFactory(
+      GraftBatchWrites.cowWriterFactory(table, closeOnPartitionChange = false))
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val written = messages
@@ -156,14 +137,7 @@ final class GraftStreamingWrite(table: GraftTable, truncate: Boolean)
       written.foreach(f => graft.io.FileIO.delete(f.path))
       return
     }
-    val schema = fresh.schema
-    val props = fresh.metadata.properties
-    val omitBounds = props.contains(graft.encryption.ParquetEncryption.KeyIdProp)
-    import scala.collection.parallel.CollectionConverters._
-    val added = written.par
-      .map(f => Writer.harvestStats(f.path, schema, f.partValues,
-        omitBounds = omitBounds, props = props))
-      .seq.filter(_.recordCount > 0)
+    val added = GraftBatchWrites.harvest(fresh, written)
     val removedPaths =
       if (truncate) fresh.newScan.planFiles().map(_.file.path).toSet
       else Set.empty[String]

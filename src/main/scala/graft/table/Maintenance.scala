@@ -234,7 +234,11 @@ object Maintenance {
     * delete file's targets), and DV puffins whose referenced file is gone.
     * An uncompacted pos-delete backlog taxes every read (each data file
     * probes every applicable delete file); this folds it to
-    * ~Σbytes/target files in ONE snapshot.
+    * ~Σbytes/target files in ONE snapshot. The live rows go through the
+    * shared [[PositionDeleteWriter]]: parquet files on v2 (a file that
+    * covers one data file references it), per-file deletion vectors on
+    * v3, which forbids new parquet positional deletes, and on a table that
+    * already carries DVs.
     *
     * Only POSITION deletes rewrite: their rows are (file_path, pos)-keyed,
     * so taking the new commit's sequence number cannot widen what they
@@ -250,8 +254,8 @@ object Maintenance {
       if (targetFileSizeBytes > 0) targetFileSizeBytes
       else table.metadata.properties.get("write.target-file-size-bytes")
         .map(_.toLong).getOrElse(512L * 1024 * 1024)
-    val livePaths = table.newScan.planFiles()
-      .map(t => graft.io.FileIO.canonical(t.file.path)).toSet
+    val live = table.newScan.planFiles()
+    val livePaths = live.map(t => graft.io.FileIO.canonical(t.file.path)).toSet
     // ALL live delete entries from the delete manifests — a dangling
     // delete file never surfaces through planFiles (nothing live
     // references it), so the manifest walk is the source of truth
@@ -271,76 +275,47 @@ object Maintenance {
     if (posParquet.isEmpty && danglingDvs.isEmpty)
       return DeleteCompactionResult(table, 0, 0, 0)
 
-    var added: Seq[DataFile] = Nil
-    if (posParquet.nonEmpty) {
+    val added: Seq[DataFile] = if (posParquet.isEmpty) Nil else {
       import org.apache.spark.sql.functions.{col, regexp_replace}
       import spark.implicits._
-      // live-target rows only. livePaths holds FileIO.canonical spellings,
-      // so the delete-row file_path column must be folded to the SAME form
-      // before the semi join — on scheme-prefixed locations (hdfs:///p,
-      // file:/p) the raw spelling never matches canonical and every live
-      // delete row would be misclassified dangling and dropped (rows
-      // previously deleted would resurrect). Column-side equivalent of
-      // FileIO.canonical: file: → rooted path; empty-authority
-      // scheme:///p|scheme:// → scheme:/p; real authorities untouched.
+      // live-target rows only, keyed by the data file's manifest path. The
+      // delete rows' file_path folds to FileIO.canonical's form before the
+      // join — on scheme-prefixed locations (hdfs:///p, file:/p) the raw
+      // spelling never matches and every live delete row would be
+      // misclassified dangling and dropped (rows previously deleted would
+      // resurrect). Column-side equivalent of FileIO.canonical: file: →
+      // rooted path; empty-authority scheme:///p|scheme:// → scheme:/p;
+      // real authorities untouched.
       val canonPath = regexp_replace(
         regexp_replace(col("file_path"), "^file:/*", "/"),
         "^([A-Za-z][A-Za-z0-9+.-]*):(///+|//$)", "$1:/")
-      val liveDf = livePaths.toSeq.toDF("file_path")
-      val rows = SparkRead.metadataParquet(spark,
-          posParquet.map(d => (d.path, d.fileSize)).distinctBy(_._1),
-          SparkRead.PosDeleteSchema)
-        .select(canonPath.as("file_path"), col("pos"))
-        .join(liveDf, Seq("file_path"), "left_semi")
-      if (table.metadata.formatVersion >= 3) {
-        // v3 forbids NEW parquet pos-delete files: fold the legacy backlog
-        // into per-file deletion vectors instead, OR-ing any existing DV
-        // for the same file (which the new blob then supersedes; the
-        // commit removes the old one)
-        // keyed canonically to match the folded file_path column above
-        val dvByFile: Map[String, (String, Long, Long)] = deleteEntries
-          .filter(f => f.content == DataFileContent.PositionDeletes &&
-            f.format == "PUFFIN")
-          .flatMap(d => d.referencedDataFile.map(r =>
-            graft.io.FileIO.canonical(r) ->
-              ((d.path, d.contentOffset.get, d.contentSize.get)))).toMap
-        added = Writer.writeDvBlobs(spark, rows, dvByFile, table.location,
-          table.metadata.properties)
-      } else {
-        // v2: re-clustered (file_path, pos)-ordered parquet into
-        // ~Σbytes/target output files — the spec's pos-delete layout
-        val nOut = math.max(1, math.ceil(
-          posParquet.map(_.fileSize).sum.toDouble / targetSize).toInt)
-        val ordered = rows
-          .repartition(nOut, col("file_path"))
-          .sortWithinPartitions("file_path", "pos")
-        val tmpDir = s"${table.location}/tmp-rewrite-deletes-${UUID.randomUUID()}"
-        ordered.write.options(Writer.encryptionOptions(spark, table)).parquet(tmpDir)
-        added = Writer.listParquet(tmpDir).map { src =>
-          val target = Locations.newDataLocation(table.location,
-            table.metadata.properties, "", s"delete-${UUID.randomUUID()}.parquet")
-          Writer.moveFile(src, target)
-          val (rowCount, size, _) = Writer.footerBasics(target)
-          DataFile(DataFileContent.PositionDeletes, target, "PARQUET",
-            partition = Seq.empty, recordCount = rowCount, fileSize = size)
-        }.filter(_.recordCount > 0)
-        Writer.deleteTree(tmpDir)
-      }
+      val liveDf = live.map(t => (graft.io.FileIO.canonical(t.file.path), t.file.path))
+        .distinct.toDF("canon", "data_file")
+      val rows = MetadataRead.parquet(spark,
+          posParquet.map(d => (d.path, d.fileSize)), SparkRead.PosDeleteSchema)
+        .select(canonPath.as("canon"), col("pos"))
+        .join(liveDf, "canon")
+        .select("data_file", "pos")
+      // DVs (v3, or a table already carrying DVs): the backlog folds into
+      // per-file DVs, each OR-ing the file's prior DV (which the commit
+      // then removes). Otherwise ~Σbytes/target (file_path, pos)-ordered
+      // parquet files, the spec's layout
+      val writer = PositionDeleteWriter(spark, table, live,
+        table.refreshIoCredentials(), foldParquet = false)
+      PositionDeleteWriter.dataFiles(PositionDeleteWriter.write(rows, writer,
+        files = if (writer.useDv) None else Some(math.max(1, math.ceil(
+          posParquet.map(_.fileSize).sum.toDouble / targetSize).toInt))))
     }
     val removedKeys = (posParquet ++ danglingDvs)
       .map(f => (f.path, f.contentOffset)).toSet
-    // the v3 branch writes DVs that SUPERSEDE the per-file delete state it
-    // folded at scan time — a delete committed concurrently on the same
-    // files would be dropped by this rewrite, so it must conflict
+    // new DVs SUPERSEDE the per-file delete state they folded at scan
+    // time — a delete committed concurrently on the same files would be
+    // dropped by this rewrite, so it must conflict
+    val dvRefs = added.filter(_.format == "PUFFIN").flatMap(_.referencedDataFile).toSet
     val dvGuard =
-      if (table.metadata.formatVersion >= 3 && added.nonEmpty) {
-        val refs = added.flatMap(_.referencedDataFile)
-          .map(graft.io.FileIO.canonical).toSet
-        val tasks = table.newScan.planFiles()
-          .filter(t => refs(graft.io.FileIO.canonical(t.file.path)))
-        Some(Writer.ConflictCheck(
-          dvReadFiles = tasks.map(t => (t.file, t.specId))))
-      } else None
+      if (dvRefs.isEmpty) None
+      else Some(Writer.ConflictCheck(dvReadFiles =
+        live.filter(t => dvRefs(t.file.path)).map(t => (t.file, t.specId))))
     val committed = Writer.commitSnapshot(table, "replace",
       addedFiles = Nil, removedPaths = Set.empty,
       addedDeleteFiles = added, removedDeleteKeys = removedKeys,

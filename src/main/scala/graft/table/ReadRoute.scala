@@ -20,6 +20,10 @@ import org.apache.spark.sql.SparkSession
   *    open; and equality-delete backlogs over
   *    `spark.graft.eqDeleteFallbackBytes`, whose key sets would not fit in
   *    executor memory.
+  *
+  * [[SparkRead.matchedPositions]], which finds the rows a programmatic
+  * merge-on-read delete removes, always reads per task, as a row-level
+  * scan does.
   */
 object ReadRoute {
 

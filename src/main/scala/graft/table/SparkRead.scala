@@ -94,6 +94,26 @@ object SparkRead {
       table.metadata.specById, ioOptions)
   }
 
+  /** The (`_file`, `_pos`) of every live row of `tasks` that matches
+    * `filter` — what a merge-on-read delete turns into delete files. Always
+    * read by the per-task readers ([[graft.sources.SpjPlannedTable]]),
+    * whatever [[ReadRoute.choose]] would pick for a plain read: they yield
+    * each file's manifest path, resolve a name-mapped file without field
+    * ids through the mapping, and drop rows deleted already, so those never
+    * match again. Non-parquet files fail there with a plain message.
+    */
+  private[table] def matchedPositions(spark: SparkSession, table: Table,
+      tasks: Seq[FileScanTask], filter: Expr,
+      ioOptions: Map[String, String]): DataFrame = {
+    import graft.sources.SpjTable.{FileColumnName, PosColumnName}
+    val stored = table.schema.copy(fields =
+      table.schema.fields.filterNot(_.fieldType == graft.core.IcebergTypes.UnknownT))
+    org.apache.spark.sql.GraftSqlShim.readV2(spark, new graft.sources.SpjPlannedTable(
+        table, stored, tasks, rowLineage = false, ioOptions))
+      .filter(Expr.toColumn(filter))
+      .select(col(FileColumnName), col(PosColumnName))
+  }
+
   /** v3 `unknown`-typed columns are never stored in data files (spec:
     * always-null forward-compat placeholder, reference types.go:903): read
     * the stored columns, then append the unknown ones as null columns.
@@ -498,19 +518,6 @@ object SparkRead {
     else df.select(scan.selected.map(col): _*)
   }
 
-  /** `_metadata.file_path` is a URI (file:///...); manifests store plain
-    * absolute paths — normalize to compare. Empty-authority URIs of other
-    * schemes fold to the single-slash form, the column twin of
-    * [[graft.io.FileIO.canonical]].
-    */
-  /** Listing-free parquet read over manifest-known (path, size) pairs —
-    * see [[MetadataRead.parquet]].
-    */
-  private[table] def metadataParquet(spark: SparkSession,
-      files: Seq[(String, Long)], schema: StructType,
-      options: Map[String, String] = Map.empty): DataFrame =
-    MetadataRead.parquet(spark, files, schema, options)
-
   /** Spec-fixed positional-delete file schema (by-name resolution; the
     * optional `row` payload column prunes away untouched).
     */
@@ -518,6 +525,11 @@ object SparkRead {
     StructField("file_path", org.apache.spark.sql.types.StringType, nullable = true),
     StructField("pos", org.apache.spark.sql.types.LongType, nullable = true)))
 
+  /** `_metadata.file_path` is a URI (file:///...); manifests store plain
+    * absolute paths — normalize to compare. Empty-authority URIs of other
+    * schemes fold to the single-slash form, the column twin of
+    * [[graft.io.FileIO.canonical]].
+    */
   private def normalizePath(c: Column): Column =
     regexp_replace(
       regexp_replace(c, "^file:/*", "/"),

@@ -260,205 +260,54 @@ object Writer {
         rewrittenFiles = candidates.map(t => (t.file, t.specId)))))
   }
 
-  /** Merge-on-read DELETE WHERE: write positional delete files for matching
-    * rows (reference `table/transaction.go:2121-2339`), leaving data files
-    * in place.
+  /** Merge-on-read DELETE WHERE (reference `table/transaction.go:2121-2339`):
+    * the matching rows' positions become delete files, data files stay in
+    * place. Parquet positional-delete files on v2 tables; deletion vectors
+    * on v3 tables and whenever a candidate already carries a DV (see
+    * [[PositionDeleteWriter.apply]] and [[deletePositions]]).
     */
-  def deleteWhereMoR(spark: SparkSession, table: Table, filter: Expr): Table = {
-    SparkRead.configure(spark)
-    val candidates = table.newScan.withFilter(filter).planFiles()
-    if (candidates.isEmpty) return table
-    // supersedence guard: a parquet pos-delete landing on a file that
-    // already carries a DV is IGNORED by every spec-compliant reader (the
-    // DV supersedes) — writing one would silently lose this delete. Route
-    // the whole call through the DV writer, which unions into existing DVs.
-    // v3 routes unconditionally: the spec forbids NEW parquet positional
-    // deletes at format-version 3 regardless of current delete state.
-    if (table.metadata.formatVersion >= 3 ||
-        candidates.exists(_.posDeletes.exists(_.format == "PUFFIN")))
-      return deleteWhereDV(spark, table, filter)
-    val schema = table.schema
-    val readSchema = SchemaBridge.toSpark(schema)
-    // one writer task per data file (not coalesce(1)): pos-delete files must
-    // be sorted by (file_path, pos), which sortWithinPartitions preserves per
-    // output file while keeping the write fully parallel (reference fanout
-    // position writer `table/position_delta_writer.go`)
-    val matched = SparkRead.metadataParquet(spark,
-        candidates.map(t => (t.file.path, t.file.fileSize)), readSchema)
-      .filter(Expr.toColumn(filter))
-      .select(
-        regexp_replace(col("_metadata.file_path"), "^file:/*", "/").as("file_path"),
-        col("_metadata.row_index").as("pos"))
-      .repartition(col("file_path"))
-      .sortWithinPartitions("file_path", "pos")
-    val tmpDir = s"${table.location}/tmp-delete-${UUID.randomUUID()}"
-    matched.write.options(encryptionOptions(spark, table)).parquet(tmpDir)
-    val written = listParquet(tmpDir)
-    // a delete file covering exactly one data file references it, so
-    // planning attaches it to that file alone instead of to every file
-    val candidateByCanon = candidates.map(t =>
-      graft.io.FileIO.canonical(t.file.path) -> t.file.path).toMap
-    val deleteFiles = written.map { src =>
-      val target = Locations.newDataLocation(table.location,
-        table.metadata.properties, "", s"delete-${UUID.randomUUID()}.parquet")
-      moveFile(src, target)
-      val (rowCount, size, single) = footerBasics(target)
-      DataFile(DataFileContent.PositionDeletes, target, "PARQUET",
-        partition = Seq.empty, // global delete: unpartitioned spec (see commitSnapshotOnce)
-        recordCount = rowCount, fileSize = size,
-        referencedDataFile = single.flatMap(p =>
-          candidateByCanon.get(graft.io.FileIO.canonical(p))))
-    }
-    deleteTree(tmpDir)
-    if (deleteFiles.forall(_.recordCount == 0))
-      return table
-    commitSnapshot(table, "delete", addedFiles = Nil, removedPaths = Set.empty,
-      addedDeleteFiles = deleteFiles.filter(_.recordCount > 0),
-      conflictCheck = Some(ConflictCheck(filter = filter,
-        candidatePaths = candidates.map(_.file.path).toSet,
-        referencedDataFiles = candidates.map(_.file.path).toSet)),
-      globalDeleteSpec = true)
-  }
+  def deleteWhereMoR(spark: SparkSession, table: Table, filter: Expr): Table =
+    deletePositions(spark, table, filter, forceDv = false)
 
-  /** Merge-on-read DELETE WHERE via v3 deletion vectors: one puffin file per
-    * commit holding one DV blob per referenced data file; an existing DV for
-    * a file is unioned in (reference `table/dv/dv_writer.go`, supersedence
+  /** [[deleteWhereMoR]] that writes deletion vectors on any format version
+    * (reference `table/dv/dv_writer.go`, supersedence
     * `table/scanner.go:529-636`).
     */
-  def deleteWhereDV(spark: SparkSession, table: Table, filter: Expr): Table = {
+  def deleteWhereDV(spark: SparkSession, table: Table, filter: Expr): Table =
+    deletePositions(spark, table, filter, forceDv = true)
+
+  /** The candidates' live rows are read by the per-task readers with their
+    * `_file` and `_pos` columns ([[SparkRead.matchedPositions]]: name-mapped
+    * files resolve through the mapping, rows deleted already do not match
+    * again). The matches fold into one bitmap per data file map-side, and
+    * each shuffle partition writes its files through the shared
+    * [[PositionDeleteWriter]]: one parquet file, or one puffin file whose
+    * DVs fold each file's prior DV and parquet positional deletes. The
+    * commit removes each superseded DV (one DV per data file).
+    */
+  private def deletePositions(spark: SparkSession, table: Table, filter: Expr,
+      forceDv: Boolean): Table = {
     SparkRead.configure(spark)
     val candidates = table.newScan.withFilter(filter).planFiles()
     if (candidates.isEmpty) return table
-    val schema = table.schema
-    val readSchema = SchemaBridge.toSpark(schema)
-
-    // existing DV blob locations (metadata only) broadcast to executors so
-    // each task folds the prior bitmap for its files into the new one
-    val existingDvs: Map[String, (String, Long, Long)] = candidates
-      .flatMap(t => t.posDeletes.filter(_.format == "PUFFIN"))
-      .flatMap(d => d.referencedDataFile.map(f =>
-        f -> ((d.path, d.contentOffset.get, d.contentSize.get)))).toMap
-    val location = table.location
-
-    import spark.implicits._
-    // a DV SUPERSEDES parquet pos-deletes for its file at read time
-    // (table/scanner.go:529-636), so the spec requires the writer to fold
-    // every existing applicable pos-delete position into the new DV — else
-    // previously-deleted rows resurrect the moment the DV lands
-    val newMatches = SparkRead.metadataParquet(spark,
-        candidates.map(t => (t.file.path, t.file.fileSize)), readSchema)
-      .filter(Expr.toColumn(filter))
-      .select(
-        regexp_replace(col("_metadata.file_path"), "^file:/*", "/").as("file_path"),
-        col("_metadata.row_index").as("pos"))
-    val parquetDeletePaths = candidates
-      .flatMap(_.posDeletes.filter(_.format == "PARQUET")).map(_.path).distinct
-    val withExisting =
-      if (parquetDeletePaths.isEmpty) newMatches
-      else {
-        val candDf = candidates.map(_.file.path).toDF("file_path")
-        val existing = SparkRead.metadataParquet(spark,
-            candidates.flatMap(_.posDeletes.filter(_.format == "PARQUET"))
-              .map(d => (d.path, d.fileSize)).distinctBy(_._1),
-            SparkRead.PosDeleteSchema)
-          .select(regexp_replace(col("file_path"), "^file:/*", "/").as("file_path"),
-            col("pos"))
-          .join(candDf, Seq("file_path"), "left_semi")
-        newMatches.unionByName(existing) // duplicates collapse in the bitmap
-      }
-
-    // shuffle positions per data file, then each non-empty task writes ONE
-    // puffin file holding the DV blobs for the files it owns — only blob
-    // metadata (path/offset/length/cardinality) returns to the driver,
-    // bounded by data-file count, never by delete row count. Positions fold
-    // incrementally into roaring bitmaps via a typed Aggregator (map-side
-    // partial build, reduce-side OR-merge): a 10M-row delete never
-    // materializes a 10M-element position array in any task's heap
-    // (reference streams the same way, table/dv/dv_writer.go).
-    val deleteFiles = writeDvBlobs(spark, withExisting, existingDvs, location,
-      table.metadata.properties)
-    if (deleteFiles.isEmpty) return table
-    // the commit removes each folded prior DV (one DV per data file)
-    commitSnapshot(table, "delete", Nil, Set.empty, deleteFiles,
+    val ioOptions = table.refreshIoCredentials()
+    val writer = PositionDeleteWriter(spark, table, candidates, ioOptions, forceDv)
+    val msgs = PositionDeleteWriter.write(
+      SparkRead.matchedPositions(spark, table, candidates, filter, ioOptions), writer)
+    if (msgs.isEmpty) return table
+    val touched = msgs.flatMap(_.dataFiles).toSet
+    commitSnapshot(table, "delete", Nil, Set.empty, PositionDeleteWriter.dataFiles(msgs),
       conflictCheck = Some(ConflictCheck(filter = filter,
         candidatePaths = candidates.map(_.file.path).toSet,
-        referencedDataFiles = deleteFiles.flatMap(_.referencedDataFile).toSet,
-        // each new DV SUPERSEDES the per-file DV it folded at scan time —
-        // a concurrent delete landing on the same files between scan and
-        // commit would be silently dropped, so it must conflict
-        dvReadFiles = {
-          val refs = deleteFiles.flatMap(_.referencedDataFile)
-            .map(graft.io.FileIO.canonical).toSet
-          candidates.filter(t => refs(graft.io.FileIO.canonical(t.file.path)))
-            .map(t => (t.file, t.specId))
-        })),
+        referencedDataFiles = touched,
+        // a new DV SUPERSEDES the DV it folded at scan time: a concurrent
+        // delete landing on the same files between scan and commit would
+        // be silently dropped, so it must conflict
+        dvReadFiles = if (!writer.useDv) Nil
+          else candidates.filter(t => touched(t.file.path)).map(t => (t.file, t.specId)))),
       globalDeleteSpec = true)
   }
 
-  /** Write deletion-vector puffins from a (file_path, pos) frame: shuffle
-    * positions per data file, each non-empty task writes ONE puffin
-    * holding the DV blobs for the files it owns — only blob metadata
-    * (path/offset/length/cardinality) returns to the driver, bounded by
-    * data-file count, never by delete row count. Positions fold
-    * incrementally into roaring bitmaps via a typed Aggregator (map-side
-    * partial build, reduce-side OR-merge): a 10M-row delete never
-    * materializes a 10M-element position array in any task's heap
-    * (reference streams the same way, table/dv/dv_writer.go). Any prior
-    * DV in `existingDvs` ORs into the new blob for its file (the
-    * supersedence fold). Shared by [[deleteWhereDV]] and
-    * [[Maintenance.rewritePositionDeleteFiles]]'s v3 branch.
-    */
-  private[table] def writeDvBlobs(spark: SparkSession,
-      positions: org.apache.spark.sql.DataFrame,
-      existingDvs: Map[String, (String, Long, Long)],
-      location: String,
-      tableProps: Map[String, String]): Seq[DataFile] = {
-    import spark.implicits._
-    val bcDvs = spark.sparkContext.broadcast(existingDvs)
-    val blobMeta: Seq[(String, String, Long, Long, Long)] =
-      positions.as[(String, Long)]
-        .groupByKey(_._1)
-        .agg(PositionBitmapAgg.toColumn.name("bitmap"))
-        .mapPartitions { it =>
-          val blobs = it.map { case (file, bitmapBytes) =>
-            val bm = PositionBitmap.deserialize(bitmapBytes)
-            bcDvs.value.get(file).foreach { case (p, off, len) =>
-              val bytes = Puffin.readBlob(p, Puffin.BlobMetadata(
-                DeletionVector.BlobType, Nil, -1, -1, off, len, Map.empty))
-              bm.or(DeletionVector.deserialize(bytes))
-            }
-            (file, bm)
-          }.toSeq
-          if (blobs.isEmpty) Iterator.empty
-          else {
-            val puffinPath = Locations.newDataLocation(location, tableProps,
-              "", s"dv-${UUID.randomUUID()}.puffin")
-            val metas = Puffin.write(puffinPath, blobs.map { case (file, bm) =>
-              (DeletionVector.BlobType, DeletionVector.serialize(bm), Map(
-                "referenced-data-file" -> file,
-                "cardinality" -> bm.cardinality.toString))
-            })
-            blobs.zip(metas).iterator.map { case ((file, bm), meta) =>
-              (file, puffinPath, meta.offset, meta.length, bm.cardinality)
-            }
-          }
-        }.collect().toSeq
-    if (blobMeta.isEmpty) return Nil
-
-    val puffinSizes = blobMeta.map(_._2).distinct
-      .map(p => p -> graft.io.FileIO.size(p)).toMap
-    blobMeta.map { case (file, puffinPath, off, len, card) =>
-      DataFile(DataFileContent.PositionDeletes, puffinPath, "PUFFIN",
-        partition = Seq.empty, // global delete: unpartitioned spec (see commitSnapshotOnce)
-        recordCount = card, fileSize = puffinSizes(puffinPath),
-        referencedDataFile = Some(file),
-        contentOffset = Some(off), contentSize = Some(len))
-    }
-  }
-
-  /** Equality-delete write (reference `table/equality_delete_writer.go`):
-    * the delete keys frame must contain exactly the equality columns.
-    */
   /** Resolve + validate equality-delete key fields (reference
     * `table/equality_delete_writer.go:60-83`): float/double keys are
     * rejected at the writer because NaN != NaN under IEEE comparison, so a
@@ -479,30 +328,40 @@ object Writer {
       }
     }
 
+  /** Equality-delete write (reference `table/equality_delete_writer.go`):
+    * the delete keys frame must contain exactly the equality columns.
+    */
   def equalityDelete(spark: SparkSession, table: Table, keys: DataFrame,
       equalityFieldNames: Seq[String]): Table = {
-    val schema = table.schema
-    val eqIds = resolveEqualityIds(schema, equalityFieldNames)
+    val deleteFiles = writeEqualityDeletes(spark, table, keys, equalityFieldNames)
+    // eq-deletes here are globally scoped (unpartitioned delete spec), so
+    // under serializable any concurrent data add conflicts
+    commitSnapshot(table, "delete", Nil, Set.empty, deleteFiles,
+      conflictCheck = Some(ConflictCheck(eqDeleteScope = Some(Nil))),
+      globalDeleteSpec = true)
+  }
+
+  /** Write the key columns of `keys` as global equality-delete files and
+    * return the non-empty ones. Distributed: each task emits its own file;
+    * all carry the same equality-id set, so the file count does not matter.
+    */
+  private def writeEqualityDeletes(spark: SparkSession, table: Table, keys: DataFrame,
+      equalityFieldNames: Seq[String]): Seq[DataFile] = {
+    val eqIds = resolveEqualityIds(table.schema, equalityFieldNames)
     val tmpDir = s"${table.location}/tmp-eqdelete-${UUID.randomUUID()}"
-    // distributed write: each task emits its own delete file; all files carry
-    // the same equality-id set so correctness is unaffected by file count
     keys.select(equalityFieldNames.map(col): _*).write
       .options(encryptionOptions(spark, table)).parquet(tmpDir)
     val deleteFiles = listParquet(tmpDir).map { src =>
       val target = Locations.newDataLocation(table.location,
         table.metadata.properties, "", s"eq-delete-${UUID.randomUUID()}.parquet")
       moveFile(src, target)
-      val (rowCount, size, _) = footerBasics(target)
+      val (rowCount, size) = footerBasics(target)
       DataFile(DataFileContent.EqualityDeletes, target, "PARQUET",
         partition = Seq.empty, // global delete: unpartitioned spec (see commitSnapshotOnce)
         recordCount = rowCount, fileSize = size, equalityIds = eqIds)
     }
     deleteTree(tmpDir)
-    // eq-deletes here are globally scoped (unpartitioned delete spec), so
-    // under serializable any concurrent data add conflicts
-    commitSnapshot(table, "delete", Nil, Set.empty, deleteFiles.filter(_.recordCount > 0),
-      conflictCheck = Some(ConflictCheck(eqDeleteScope = Some(Nil))),
-      globalDeleteSpec = true)
+    deleteFiles.filter(_.recordCount > 0)
   }
 
   /** RowDelta (reference `table/row_delta.go:65-290`): inserts + equality
@@ -514,32 +373,16 @@ object Writer {
   def rowDelta(spark: SparkSession, table: Table, addRows: DataFrame,
       deleteKeys: DataFrame, equalityFieldNames: Seq[String],
       extraSummary: Map[String, String] = Map.empty): Table = {
-    val schema = table.schema
-    val eqIds = resolveEqualityIds(schema, equalityFieldNames)
+    resolveEqualityIds(table.schema, equalityFieldNames) // fail before writing data
     val dataFiles = writeDataFiles(spark, table, addRows)
-
-    val tmpDir = s"${table.location}/tmp-eqdelete-${UUID.randomUUID()}"
-    deleteKeys.select(equalityFieldNames.map(col): _*).write
-      .options(encryptionOptions(spark, table)).parquet(tmpDir)
-    val deleteFiles = listParquet(tmpDir).map { src =>
-      val target = Locations.newDataLocation(table.location,
-        table.metadata.properties, "", s"eq-delete-${UUID.randomUUID()}.parquet")
-      moveFile(src, target)
-      val (rowCount, size, _) = footerBasics(target)
-      DataFile(DataFileContent.EqualityDeletes, target, "PARQUET",
-        partition = Seq.empty, // global delete: unpartitioned spec (see commitSnapshotOnce)
-        recordCount = rowCount, fileSize = size, equalityIds = eqIds)
-    }
-    deleteTree(tmpDir)
-    val op =
-      if (deleteFiles.exists(_.recordCount > 0)) "overwrite" else "append"
+    val deleteFiles = writeEqualityDeletes(spark, table, deleteKeys, equalityFieldNames)
+    val op = if (deleteFiles.nonEmpty) "overwrite" else "append"
     val check =
-      if (deleteFiles.exists(_.recordCount > 0))
+      if (deleteFiles.nonEmpty)
         Some(ConflictCheck(eqDeleteScope = Some(Nil),
           isolationKey = "write.update.isolation-level"))
       else None
-    commitSnapshot(table, op, dataFiles, Set.empty,
-      deleteFiles.filter(_.recordCount > 0), conflictCheck = check,
+    commitSnapshot(table, op, dataFiles, Set.empty, deleteFiles, conflictCheck = check,
       extraSummary = extraSummary, globalDeleteSpec = true)
   }
 
@@ -629,23 +472,6 @@ object Writer {
     addFiles(spark, t, files)
   }
 
-  /** Incremental (pos -> roaring bitmap) accumulation for the DV writer:
-    * each input row sets one bit in the partial buffer, buffers OR-merge
-    * across partitions, and only the compact serialized bitmap crosses the
-    * shuffle — never a materialized position array.
-    */
-  private object PositionBitmapAgg
-      extends org.apache.spark.sql.expressions.Aggregator[(String, Long), PositionBitmap, Array[Byte]] {
-    def zero: PositionBitmap = new PositionBitmap
-    def reduce(b: PositionBitmap, row: (String, Long)): PositionBitmap = { b.set(row._2); b }
-    def merge(a: PositionBitmap, b: PositionBitmap): PositionBitmap = { a.or(b); a }
-    def finish(b: PositionBitmap): Array[Byte] = b.serialize()
-    def bufferEncoder: org.apache.spark.sql.Encoder[PositionBitmap] =
-      org.apache.spark.sql.Encoders.javaSerialization[PositionBitmap]
-    def outputEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-      org.apache.spark.sql.Encoders.BINARY
-  }
-
   // --------------------------------------------------------------- internals
 
   /** Write df as table data files (partition fanout if spec is partitioned),
@@ -655,8 +481,18 @@ object Writer {
     * `encryption.key-id`; empty (plaintext) otherwise. Applied per-write so
     * encryption stays table-scoped.
     */
-  private[table] def encryptionOptions(spark: SparkSession, table: Table): Map[String, String] =
+  private def encryptionOptions(spark: SparkSession, table: Table): Map[String, String] =
     graft.encryption.ParquetEncryption.writeOptions(spark, table.metadata.properties)
+
+  /** Options for a task-side parquet writer
+    * ([[org.apache.spark.sql.graft.ParquetRowWriteBridge]]) of `table`:
+    * the storage options, encryption under the table's key and the
+    * `write.parquet.*` settings, the same as a DataFrame write gets.
+    */
+  private[graft] def taskWriteOptions(spark: SparkSession, table: Table,
+      ioOptions: Map[String, String]): Map[String, String] =
+    ioOptions ++ encryptionOptions(spark, table) ++
+      parquetWriteOptions(table.metadata.properties)
 
   /** Map the spec's `write.parquet.*` table properties onto the parquet-mr
     * writer keys Spark forwards from DataFrameWriter options (reference
@@ -665,7 +501,7 @@ object Writer {
     * column), bloom filters per column + size cap. Per-column suffixes
     * address the PARQUET column path, as in the reference.
     */
-  private[table] def parquetWriteOptions(props: Map[String, String]): Map[String, String] = {
+  private def parquetWriteOptions(props: Map[String, String]): Map[String, String] = {
     val out = Map.newBuilder[String, String]
     props.get("write.parquet.compression-codec")
       .foreach(c => out += "compression" -> c.toLowerCase)
@@ -1338,31 +1174,11 @@ object Writer {
     case _ => v
   }
 
-  /** Row count and byte size of a written file, plus — for a
-    * positional-delete file — the one data file it targets when its
-    * `file_path` column stats have min = max in every row group (the
-    * spec's inference of `referenced_data_file`); None otherwise.
-    */
-  private[table] def footerBasics(path: String): (Long, Long, Option[String]) = {
+  /** Row count and byte size of a written parquet file. */
+  private def footerBasics(path: String): (Long, Long) = {
     val reader = graft.encryption.ParquetEncryption.openFooterReader(path)
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      // a positional-delete file's `file_path` stats: one value across
-      // every row group means the file targets exactly one data file
-      val bounds = blocks.map(_.getColumns.asScala
-        .find(_.getPath.toDotString == "file_path").map(_.getStatistics)
-        .filter(st => !st.isEmpty && st.hasNonNullValue && st.getNumNulls == 0)
-        .map(st => (st.genericGetMin, st.genericGetMax)))
-      val single = bounds match {
-        case bs if bs.nonEmpty && bs.forall(_.isDefined) =>
-          bs.flatMap(_.toSeq).flatMap { case (lo, hi) => Seq(lo, hi) }.distinct match {
-            case Seq(b: org.apache.parquet.io.api.Binary) => Some(b.toStringUsingUTF8)
-            case _ => None
-          }
-        case _ => None
-      }
-      (blocks.map(_.getRowCount).sum, graft.io.FileIO.size(path), single)
-    } finally reader.close()
+    try (reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum, graft.io.FileIO.size(path))
+    finally reader.close()
   }
 
   /** Concurrent-writer conflict scope (reference
@@ -2110,10 +1926,10 @@ object Writer {
   private[graft] def listParquet(dir: String): Seq[String] =
     graft.io.FileIO.listFilesRecursive(dir).map(_.path).filter(_.endsWith(".parquet"))
 
-  private[table] def moveFile(src: String, target: String): Unit =
+  private def moveFile(src: String, target: String): Unit =
     graft.io.FileIO.move(src, target)
 
-  private[table] def deleteTree(dir: String): Unit = {
+  private def deleteTree(dir: String): Unit = {
     graft.io.FileIO.deleteTree(dir)
     ()
   }

@@ -107,6 +107,66 @@ class EncryptionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(SparkRead.read(spark, t2.newScan).count() === 99)
   }
 
+  /** Every parquet file under `location` (data and positional-delete
+    * files) fails to open without the KMS.
+    */
+  private def assertEncrypted(location: String, what: String): Unit = {
+    val files = graft.io.FileIO.listFilesRecursive(location).map(_.path)
+      .filter(_.endsWith(".parquet"))
+    assert(files.nonEmpty, what)
+    val bare = new org.apache.hadoop.conf.Configuration()
+    files.foreach { f =>
+      val opened = scala.util.Try {
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f), bare))
+        try r.getFooter finally r.close()
+      }
+      assert(opened.isFailure, s"$what: $f opens without the KMS")
+    }
+  }
+
+  test("SQL row-level writes, dynamic overwrite and MoR deletes encrypt every data and delete file") {
+    val wh = Files.createTempDirectory("graft-enc-sql").toString
+    spark.conf.set("spark.sql.catalog.genc", classOf[graft.sources.GraftSpjCatalog].getName)
+    spark.conf.set("spark.sql.catalog.genc.uri", wh)
+    val catalog = new HadoopCatalog(wh)
+    Seq(("enc_cow", "copy-on-write", 2), ("enc_mor2", "merge-on-read", 2),
+        ("enc_mor3", "merge-on-read", 3)).foreach { case (name, mode, version) =>
+      spark.sql(s"""CREATE TABLE genc.$name (id BIGINT, seg INT, payload STRING)
+        PARTITIONED BY (identity(seg))
+        TBLPROPERTIES ('${ParquetEncryption.KeyIdProp}' = 'k1',
+          'write.delete.mode' = '$mode', 'write.update.mode' = '$mode')""")
+      if (version >= 3) graft.table.Evolve.upgradeFormatVersion(catalog.loadTable(name), 3)
+      var model: Map[Long, (Int, String)] = (0L until 20L).map(i => i -> ((i % 2).toInt, s"row$i")).toMap
+      def check(what: String)(change: Map[Long, (Int, String)] => Map[Long, (Int, String)]): Unit = {
+        model = change(model)
+        val want = model.toSeq.map { case (id, (seg, p)) => s"[$id,$seg,$p]" }.sorted
+        def rows(df: org.apache.spark.sql.DataFrame) =
+          df.select("id", "seg", "payload").collect().map(_.toString).toSeq.sorted
+        assert(rows(spark.table(s"genc.$name")) === want, s"$name SQL after $what")
+        assert(rows(SparkRead.read(spark, catalog.loadTable(name).newScan)) === want,
+          s"$name SparkRead.read after $what")
+        assertEncrypted(catalog.loadTable(name).location, s"$name after $what")
+      }
+      spark.sql(s"INSERT INTO genc.$name SELECT id, CAST(id % 2 AS INT), concat('row', id) FROM range(20)")
+      check("INSERT")(identity)
+      spark.sql(s"UPDATE genc.$name SET payload = 'updated' WHERE id = 3")
+      check("UPDATE")(_.updated(3L, (1, "updated")))
+      spark.sql(s"DELETE FROM genc.$name WHERE id = 4")
+      check("DELETE")(_ - 4L)
+      if (mode == "copy-on-write") {
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try spark.sql(s"INSERT OVERWRITE genc.$name SELECT 100L, 1, 'over'")
+        finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+        check("dynamic INSERT OVERWRITE")(m => m.filter(_._2._1 != 1) + (100L -> ((1, "over"))))
+      } else {
+        Writer.deleteWhereMoR(spark, catalog.loadTable(name), Expr.eq("id", 7L))
+        check("Writer.deleteWhereMoR")(_ - 7L)
+      }
+    }
+  }
+
   test("table demanding encryption without a session KMS fails closed") {
     val bareSession = spark.newSession()
     // a fresh session without graft.encryption.* conf

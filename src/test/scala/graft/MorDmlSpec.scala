@@ -110,6 +110,33 @@ class MorDmlSpec extends AnyFunSuite with BeforeAndAfterAll {
   // don't shift it; this pins that end-to-end on both the write side (delete
   // generation) and the read side (delete application under a row-group-
   // pruning residual filter).
+  test("v2 table carrying a DV: MoR DELETE, UPDATE and compaction keep writing DVs") {
+    spark.sql("""CREATE TABLE g.m2dv (k BIGINT, v STRING)
+      TBLPROPERTIES ('write.delete.mode' = 'merge-on-read',
+        'write.update.mode' = 'merge-on-read')""")
+    spark.sql("INSERT INTO g.m2dv SELECT id, 'a' FROM range(40)")
+    graft.table.Writer.deleteWhereMoR(spark, catalog.loadTable("m2dv"),
+      graft.core.Expr.eq("k", 1L))
+    graft.table.Writer.deleteWhereDV(spark, catalog.loadTable("m2dv"),
+      graft.core.Expr.eq("k", 3L))
+    // the DV supersedes the file's parquet deletes at read time: a parquet
+    // delete written beside it would be lost
+    spark.sql("DELETE FROM g.m2dv WHERE k = 5")
+    spark.sql("UPDATE g.m2dv SET v = 'b' WHERE k = 7")
+    def check(): Unit = {
+      assert(spark.sql("SELECT k FROM g.m2dv WHERE k IN (1, 3, 5)").count() === 0)
+      assert(spark.sql("SELECT count(*) FROM g.m2dv").head.getLong(0) === 37)
+      assert(spark.sql("SELECT v FROM g.m2dv WHERE k = 7").collect().map(_.getString(0)).toSeq ===
+        Seq("b"))
+    }
+    check()
+    val r = graft.table.Maintenance.rewritePositionDeleteFiles(spark, catalog.loadTable("m2dv"))
+    assert(r.rewrittenDeleteFiles === 1)
+    check()
+    assert(catalog.loadTable("m2dv").newScan.planFiles().flatMap(_.posDeletes)
+      .forall(_.format == "PUFFIN"))
+  }
+
   test("MoR DELETE across pruned row groups targets physical positions") {
     spark.sql("""CREATE TABLE g.rg (k BIGINT, pad STRING)
       TBLPROPERTIES ('write.delete.mode' = 'merge-on-read',

@@ -231,6 +231,26 @@ class ReadRouteSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("Writer.deleteWhereMoR and deleteWhereDV on a snapshotImport remove exactly the matched row") {
+    for (version <- Seq(2, 3); dv <- Seq(false, true)) {
+      val name = s"rr_import_del_v${version}_${if (dv) "dv" else "mor"}"
+      val dir = Files.createTempDirectory(s"graft-$name").toString + "/src"
+      spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "false")
+      try base(0, 100).coalesce(1).write.parquet(dir)
+      finally spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+      var t = Writer.snapshotImport(spark, catalog, dir, name)
+      assert(t.nameMapping.isDefined)
+      if (version >= 3) t = Evolve.upgradeFormatVersion(t, 3)
+      t = if (dv) Writer.deleteWhereDV(spark, t, Expr.eq("id", 5L))
+        else Writer.deleteWhereMoR(spark, t, Expr.eq("id", 5L))
+      val want = (0L until 100L).filterNot(_ == 5L)
+        .map(i => s"[$i,${i % 4},${i * 7 % 100}]").sorted
+      assert(rows(spark.sql(s"SELECT id, seg, v FROM grr.$name")) === want, s"$name SQL")
+      assert(rows(SparkRead.read(spark, catalog.loadTable(name).newScan.select("id", "seg", "v"))) ===
+        want, s"$name SparkRead.read")
+    }
+  }
+
   test("row-level operations on a hive-layout import keep the partition values its files omit") {
     Seq("copy-on-write", "merge-on-read").foreach { mode =>
       val name = s"rr_hive_dml_${mode.replace("-", "_")}"
