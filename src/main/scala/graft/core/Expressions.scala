@@ -263,6 +263,27 @@ object Expr {
     case other => other
   }
 
+  /** Re-express a NOT-free expression bound to `from`'s names in `to`'s
+    * names, matching fields by id — the bridge from a read's schema to the
+    * schema its files' statistics were written under, across renames. A
+    * term on a field `to` lacks (added since) might match, so it becomes
+    * AlwaysTrue; so does a NOT, which [[rewriteNot]] has pushed away.
+    */
+  def renameByIds(e: Expr, from: IcebergSchema, to: IcebergSchema): Expr = {
+    def leaf(ref: String)(rebuild: String => Expr): Expr =
+      from.nameToId.get(ref).flatMap(to.idToName.get).map(rebuild).getOrElse(AlwaysTrue)
+    e match {
+      case And(l, r) => and(renameByIds(l, from, to), renameByIds(r, from, to))
+      case Or(l, r) => or(renameByIds(l, from, to), renameByIds(r, from, to))
+      case Not(_) => AlwaysTrue
+      case p: Predicate => leaf(p.ref)(n => p.copy(ref = n))
+      case tp: TransformPredicate => leaf(tp.ref)(n => tp.copy(ref = n))
+      case bp: BBoxPredicate => leaf(bp.ref)(n => bp.copy(ref = n))
+      case vp: VariantPredicate => leaf(vp.ref)(n => vp.copy(ref = n))
+      case other => other
+    }
+  }
+
   /** Redact literal values for log/error strings (reference
     * `SanitizeExpression`, `visitors.go:616-697`): shape survives, payloads
     * don't leak. Type-shaped masks aid debugging ("(hash-redacted)" for

@@ -263,7 +263,8 @@ object IcebergQueries {
       val t1 = Writer.addFiles(s, t0, paths)
       SparkRead.clearFieldIdCache() // simulate a fresh driver
       SparkRead.driverFooterProbes.set(0)
-      val df = SparkRead.read(s, t1.newScan) // plans eagerly -> probe runs here
+      val df = SparkRead.read(s, t1.newScan)
+      df.rdd.getNumPartitions // plans the scan's input partitions -> probe runs here
       val zeroProbes = SparkRead.driverFooterProbes.get() == 0L
       () => df.groupBy(col("c_nationkey"))
         .agg(count(lit(1)).as("n"), sum(col("c_custkey").cast("long")).as("key_sum"))
@@ -1048,7 +1049,7 @@ object IcebergQueries {
       }
       val carried = decoded.exists(t =>
         t.posDeletes.exists(_.format == "PUFFIN") && t.eqDeletes.nonEmpty)
-      () => SparkRead.readTasks(s, decoded, t3.schema, specById = t3.metadata.specById)
+      () => SparkRead.readTasks(s, decoded, t3.schema)
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n"))
         .withColumn("codec_mor", lit(carried.toString))
@@ -1129,7 +1130,7 @@ object IcebergQueries {
         new graft.catalog.HadoopCatalog(gatedWh),
         credentials = Map("gate" -> "gate-secret"),
         vendCredentials = Some(vendor)).start()
-      val (tasks, planSchema, specById, ioOpts, remotePlanned, authOk, txnOk, metricsOk) =
+      val (tasks, planSchema, ioOpts, remotePlanned, authOk, txnOk, metricsOk) =
         try {
           val anon = new graft.rest.RestCatalog(server.uri)
           val authRejected =
@@ -1144,7 +1145,7 @@ object IcebergQueries {
           val schema = SchemaBridge.fromSpark(c.schema)
           val t1 = Writer.append(s,
             client.createTable("cust", schema, PartitionSpec.Unpartitioned), c)
-          val t2 = Writer.deleteWhereDV(s, t1, Expr.eq("c_mktsegment", "MACHINERY"))
+          Writer.deleteWhereDV(s, t1, Expr.eq("c_mktsegment", "MACHINERY"))
           // spec transactions endpoint: a 2-table append commits atomically
           client.createTable("tx1", schema, PartitionSpec.Unpartitioned)
           client.createTable("tx2", schema, PartitionSpec.Unpartitioned)
@@ -1182,7 +1183,7 @@ object IcebergQueries {
               case _ => false
             }
           val metricsOk = manualRt && autoShipped
-          (planned.tasks, planned.schema, t2.metadata.specById _,
+          (planned.tasks, planned.schema,
             planned.credentials.ioOptions(), remotePlanned, authRejected, txnOk, metricsOk)
         } finally server.stop()
       // strip the fixture's storage identity: from here on the gated store
@@ -1194,13 +1195,12 @@ object IcebergQueries {
       // this is the whole point of credential vending
       val deniedWithoutCreds =
         try {
-          SparkRead.readTasks(s, tasks, planSchema, specById = specById).count()
+          SparkRead.readTasks(s, tasks, planSchema).count()
           false
         } catch { case _: Throwable => true }
       // the decoded tasks are self-contained — the read needs no live
       // server, only the plan-scoped credentials
-      () => SparkRead.readTasks(s, tasks, planSchema, specById = specById,
-          ioOptions = ioOpts)
+      () => SparkRead.readTasks(s, tasks, planSchema, ioOptions = ioOpts)
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n"))
         .withColumn("remote_planned", lit(remotePlanned.toString))
@@ -4345,7 +4345,7 @@ object IcebergQueries {
       val backing = new HadoopCatalog(wh)
       val server = new graft.rest.RestCatalogServer(backing,
         asyncPlanThreshold = 1, planTaskShardSize = 2).start()
-      val (tasks, schema, specById, polls, fetches) = try {
+      val (tasks, schema, polls, fetches) = try {
         val client = new graft.rest.RestCatalog(server.uri)
         val c = tbl(s, dir, "customer")
         client.createTable("cust", SchemaBridge.fromSpark(c.schema),
@@ -4355,12 +4355,10 @@ object IcebergQueries {
             c.filter(col("c_custkey") % 3 === i))
         }
         val planned = client.planScan("cust")
-        (planned.tasks, planned.schema,
-          client.loadTable("cust").metadata.specById _,
-          server.planPolls.get, server.taskFetches.get)
+        (planned.tasks, planned.schema, server.planPolls.get, server.taskFetches.get)
       } finally server.stop()
       val flags = Seq(polls >= 2, fetches >= 1, tasks.size == 3).mkString(",")
-      () => SparkRead.readTasks(s, tasks, schema, specById = specById)
+      () => SparkRead.readTasks(s, tasks, schema)
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n"),
           countDistinct(col("c_custkey")).as("n_keys"))
@@ -4597,7 +4595,7 @@ object IcebergQueries {
       val wh = s"/root/repo/target/graft-wh/ttl_${UUID.randomUUID().toString.take(8)}"
       val server = new graft.rest.RestCatalogServer(new HadoopCatalog(wh),
         asyncPlanThreshold = 1, planTaskShardSize = 2, planTtlMs = 300L).start()
-      val (tasks, schema, specById, flags) = try {
+      val (tasks, schema, flags) = try {
         val client = new graft.rest.RestCatalog(server.uri)
         val n = tbl(s, dir, "nation")
         client.createTable("nat", SchemaBridge.fromSpark(n.schema),
@@ -4620,10 +4618,9 @@ object IcebergQueries {
         // expiry means retry-with-a-new-plan, and the retry must succeed
         val planned = client.planScan("nat")
         (planned.tasks, planned.schema,
-          client.loadTable("nat").metadata.specById _,
           Seq(wasAsync, lateExpired, cancelExpired).mkString(","))
       } finally server.stop()
-      () => SparkRead.readTasks(s, tasks, schema, specById = specById)
+      () => SparkRead.readTasks(s, tasks, schema)
         .groupBy(col("n_regionkey"))
         .agg(count(lit(1)).as("n"))
         .select(col("n_regionkey"), col("n"), lit(flags).as("ttl_ok"))

@@ -663,17 +663,15 @@ final class SpjScanBuilder(table: GraftTable, fullSchema: StructType,
           // backlog for this exact scan is measurable before choosing readers
           val planned = baseScan.withFilter(fileExpr).planFiles()
           rowLevel.foreach { op => op.scanned = planned; op.scanFilter = fileExpr }
-          val decision = ReadRoute.choose(SparkSession.active, table, planned,
+          val decision = ReadRoute.choose(SparkSession.active, planned,
             options, positionMeta = requested.anyMeta, rowLevel = rowLevel.isDefined)
           decision.route match {
             case ReadRoute.PerTask =>
               if (planned.exists(_.eqDeletes.nonEmpty)) recordRoute(decision)
               perTask(planned)
             case _ =>
-              // name-mapped files, non-parquet files and oversized
-              // eq-delete backlogs read through the SparkRead pipeline;
-              // metadata-column requests ride along (it computes file,
-              // pos and lineage natively)
+              // non-parquet files and oversized eq-delete backlogs read
+              // through the SparkRead pipeline
               recordRoute(decision)
               new SpjAntiJoinScan(table, snapshotId, planned, options, requested)
           }
@@ -732,7 +730,7 @@ object SpjRouting {
   * [[graft.table.SparkRead.readPlanned]] on the per-task route. Its scan builder
   * prunes columns and takes row-group filters like the catalog's, then
   * serves exactly these tasks through [[SpjScan]] — no second planning
-  * pass, no partitioning claim (one input partition per file).
+  * pass, no partitioning claim (files packed into splits).
   * `readSchema` is the read's stored schema (a time-travel read's is the
   * snapshot's): it names the columns, equality-delete keys included. With
   * `rowLineage` the v3 lineage columns are part of the table schema, so a
@@ -768,7 +766,8 @@ final class SpjPlannedTable(table: GraftTable, readSchema: graft.core.IcebergSch
 }
 
 /** The oversized-equality-delete-backlog read: a V1 scan whose relation
-  * executes [[graft.table.SparkRead.readTasks]] — data files anti-joined
+  * executes the anti-join pipeline
+  * ([[graft.table.SparkRead.readOffRoute]]) — data files anti-joined
   * against the delete files as a DISTRIBUTED join (null-safe on the
   * equality ids, sequence-scoped by the planner), with parquet
   * pos-deletes and DV bitmaps applied in the same pipeline. No executor
@@ -778,14 +777,18 @@ final class SpjPlannedTable(table: GraftTable, readSchema: graft.core.IcebergSch
   * the reference's own documented weakness (its eq-delete reader is
   * in-memory: `table/equality_delete_reader.go:43-52`).
   *
-  * Chosen at plan time by [[ReadRoute.choose]] when Σ
-  * eq-delete bytes exceeds the fallback threshold, and for name-mapped or
-  * non-parquet tables; the file set was already pruned by the
-  * pushed filters, and Spark re-applies every filter above the scan (all
-  * pushdown is residual), so routing can never change results — only the
-  * execution strategy. Trade-offs vs the key-set route: no SPJ claim, no
-  * runtime file pruning, no parquet row-group pushdown — all dominated by
-  * not OOMing.
+  * Chosen at plan time by [[ReadRoute.choose]] when Σ eq-delete bytes
+  * exceeds the fallback threshold, and for tables holding non-parquet
+  * files; the file set was already pruned by the pushed filters, and
+  * Spark re-applies every filter above the scan (all pushdown is
+  * residual), so routing can never change results — only the execution
+  * strategy. Trade-offs vs the key-set route: no SPJ claim, no runtime
+  * file pruning, no parquet row-group pushdown — all dominated by not
+  * OOMing. An import's parquet files without field ids read per task
+  * beside it, through the name mapping. Metadata columns never reach it
+  * over parquet files (a backlog stays on the per-task route when they
+  * are requested), and ORC files carry no row positions, so it serves data
+  * columns only.
   */
 final class SpjAntiJoinScan(table: GraftTable, snapshotId: Option[Long],
     tasks: Seq[graft.table.FileScanTask], options: Map[String, String],
@@ -824,29 +827,12 @@ final class SpjAntiJoinScan(table: GraftTable, snapshotId: Option[Long],
       override def schema: StructType = outSchema
       override def toString: String = "GraftEqDeleteAntiJoin"
       override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-        val spark = context.sparkSession
-        val tm = tbl.metadata
-        // time travel pins the snapshot's schema; current reads use the
-        // current schema (mirrors SparkRead.read's resolution)
-        val schemaId =
-          if (snapId.isDefined)
-            snapId.map(id => tbl.newScan.useSnapshot(id)).get
-              .snapshot.flatMap(_.schemaId).getOrElse(tm.currentSchemaId)
-          else tm.currentSchemaId
-        val gSchema = tm.schemaById(schemaId).getOrElse(tm.schema)
-        val df = graft.table.SparkRead.readTasks(spark, planned, gSchema,
-          tbl.nameMapping, rowLineage = m.lineage, specById = tm.specById,
-          ioOptions = tbl.refreshIoCredentials(),
-          keepFilePos = m.withFile || m.withPos)
-        // canonical output order: data cols, then the requested metadata
-        // columns (the V1 pipeline computes __file/__pos internally and
-        // _row_id/_last_updated under their public names)
-        val cols = outSchema.fieldNames.map {
-          case SpjTable.FileColumnName => df.col("__file").as(SpjTable.FileColumnName)
-          case SpjTable.PosColumnName => df.col("__pos").as(SpjTable.PosColumnName)
-          case n => df.col(s"`$n`")
-        }
-        df.select(cols.toSeq: _*).rdd
+        require(!m.withFile && !m.withPos, s"${tbl.name}: _file/_pos metadata " +
+          "columns are not supported over ORC data files, which carry no row positions")
+        val schema = snapId.map(tbl.newScan.useSnapshot).getOrElse(tbl.newScan).readSchema
+        val df = graft.table.SparkRead.readOffRoute(context.sparkSession, tbl, planned,
+          schema, m.lineage, tbl.refreshIoCredentials())
+        df.select(outSchema.fieldNames.map(n => df.col(s"`$n`")).toSeq: _*).rdd
       }
     }.asInstanceOf[T]
   }
@@ -1002,7 +988,7 @@ final class SpjScan(table: GraftTable, meta: SpjTable.RequestedMeta,
     * that common key, projected per-spec from each file's own tuple
     * positions. Single-spec tables keep the full claim; a bucket-width
     * change or unpartitioned history empties the intersection and the scan
-    * degrades to one-partition-per-file under `UnknownPartitioning` —
+    * degrades to packed file splits under `UnknownPartitioning` —
     * Spark shuffles, answers stay right. Decided ONCE from the static
     * (pre-runtime-filter) file set so the reported partitioning never
     * changes mid-execution; runtime filters only prune that set, so a
@@ -1127,46 +1113,8 @@ final class SpjScan(table: GraftTable, meta: SpjTable.RequestedMeta,
     }
     plannedTotals = (tasks.map(_.file.fileSize).sum,
       tasks.map(_.file.recordCount).sum)
-    val info = fileInfo(tasks)
-    effectiveClaim match {
-      case Some((_, proj)) =>
-        tasks.groupBy(claimKey(proj, _)).toSeq
-          .map { case (partValues, ts) =>
-            SpjInputPartition(partValues.map(SpjScan.toCatalyst).toArray, ts.map(info).toArray)
-          }
-          .sortBy(_.key.toSeq.map(String.valueOf).mkString(" "))
-          .toArray
-      case None =>
-        // no partitioning claim to honor → one input partition per FILE
-        // for maximal parallelism (files are rolling-writer target-sized)
-        tasks.map(t => SpjInputPartition(Array.empty, Array(info(t)))).toArray
-    }
-  }
-
-  /** Per-task file info. On a name-mapped table (only a row-level scan
-    * and the merge-on-read delete writers' position read read one per
-    * task; plain reads take the anti-join pipeline) a file written
-    * without field ids is read by its mapped names, and the
-    * identity-partition columns a hive-layout file omits take the file's
-    * partition values.
-    */
-  private def fileInfo(tasks: Seq[graft.table.FileScanTask])
-      : graft.table.FileScanTask => SpjFileInfo = table.nameMapping match {
-    case None => SpjFileInfo.from(_, "graft-iceberg-spj")
-    case Some(_) =>
-      val hasIds = graft.table.SparkRead.fieldIdPresence(SparkSession.active,
-        tasks.map(_.file).filter(_.format.equalsIgnoreCase("PARQUET")).map(_.path).distinct)
-      val naming = keySchema.getOrElse(table.schema)
-      t => {
-        val info = SpjFileInfo.from(t, "graft-iceberg-spj")
-        if (hasIds.getOrElse(t.file.path, true)) info
-        else info.copy(nameMapped = true, constants = table.metadata.specById(t.specId)
-          .toSeq.flatMap(_.fields.zipWithIndex).collect {
-            case (pf, i) if pf.transform == Transforms.Identity &&
-                naming.idToField.contains(pf.sourceId) =>
-              naming.idToField(pf.sourceId).name -> SpjScan.toCatalyst(t.file.partition(i))
-          }.toArray)
-      }
+    SpjScan.inputPartitions(table, tasks, keySchema.getOrElse(table.schema),
+      "graft-iceberg-spj", effectiveClaim.map { case (_, proj) => claimKey(proj, _) })
   }
 
   override def outputPartitioning(): Partitioning = effectiveClaim match {
@@ -1202,6 +1150,66 @@ object SpjScan {
 
   /** Reader factories built, for the one-build-per-planned-scan test. */
   private[graft] val factoryBuilds = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** The one planning step from planned tasks to input partitions, for
+    * batch scans and streaming micro-batches alike. A scan that claims a
+    * partitioning passes `claimKey`: one input partition per key, sorted by
+    * key. Otherwise files pack into input partitions by Spark's file-source
+    * split rule ([[pack]]).
+    *
+    * A parquet file without field ids ([[ReadRoute.withoutFieldIds]])
+    * reads by its mapped names, and the identity-partition columns a
+    * hive-layout file omits take the manifest's partition values, named by
+    * `naming` (the read's schema).
+    */
+  def inputPartitions(table: GraftTable, tasks: Seq[graft.table.FileScanTask],
+      naming: graft.core.IcebergSchema, context: String,
+      claimKey: Option[graft.table.FileScanTask => Seq[Any]] = None): Array[SpjInputPartition] = {
+    val mapped = ReadRoute.withoutFieldIds(SparkSession.active, table, tasks).map(_.file.path).toSet
+    val info = (t: graft.table.FileScanTask) => {
+      val plain = SpjFileInfo.from(t, context)
+      if (!mapped(t.file.path)) plain
+      else plain.copy(nameMapped = true, constants = table.metadata.specById(t.specId)
+        .toSeq.flatMap(_.fields.zipWithIndex).collect {
+          case (pf, i) if pf.transform == Transforms.Identity &&
+              naming.idToField.contains(pf.sourceId) =>
+            naming.idToField(pf.sourceId).name -> toCatalyst(t.file.partition(i))
+        }.toArray)
+    }
+    claimKey match {
+      case Some(key) =>
+        tasks.groupBy(key).toSeq
+          .map { case (partValues, ts) =>
+            SpjInputPartition(partValues.map(toCatalyst).toArray, ts.map(info).toArray)
+          }
+          .sortBy(_.key.toSeq.map(String.valueOf).mkString(" "))
+          .toArray
+      case None => pack(tasks.map(info))
+    }
+  }
+
+  /** Spark's file-source split rule, as `FileSourceStrategy` applies it:
+    * files in descending size, filled next-fit by
+    * `FilePartition.getFilePartitions` into splits of up to
+    * `FilePartition.maxSplitBytes` (min(maxPartitionBytes,
+    * max(openCostInBytes, Σ(size + openCost) / parallelism))). Files are
+    * never split — each is read whole, its row positions and deletes with
+    * it — so a thousand tiny imported files read in about `parallelism`
+    * tasks, not a thousand.
+    */
+  private def pack(files: Seq[SpjFileInfo]): Array[SpjInputPartition] = {
+    import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+    val spark = SparkSession.active
+    val openCost = org.apache.spark.sql.internal.SQLConf.get.filesOpenCostInBytes
+    val byPath = files.map(f => org.apache.spark.paths.SparkPath.fromPathString(f.path) -> f)
+    val info = byPath.toMap
+    val split = FilePartition.maxSplitBytes(spark, files.map(_.len + openCost).sum)
+    FilePartition.getFilePartitions(spark, byPath.sortBy(-_._2.len).map { case (p, f) =>
+        PartitionedFile(InternalRow.empty, p, 0, f.len, Array.empty, 0, f.len)
+      }, split)
+      .map(fp => SpjInputPartition(Array.empty, fp.files.map(pf => info(pf.filePath))))
+      .toArray
+  }
 
   /** Build the executor reader closures a partition set needs: the plain
     * data reader always; delete-application machinery (position-carrying

@@ -31,9 +31,10 @@ final class SpjMicroBatchStream(table: GraftTable, sparkSchema: StructType,
     preparedHead = Some(table.refresh().metadata.currentSnapshotId)
 
   // the factory is built per batch AFTER planInputPartitions (Spark calls
-  // them in order on the driver) — remember the planned set so the reader
-  // carries exactly the delete state those files need
-  @volatile private var planned: Array[SpjInputPartition] = Array.empty
+  // them in order on the driver) — remember the planned set, and the table
+  // state it was planned from, so the reader carries exactly the delete
+  // state and name mapping those files need
+  @volatile private var planned: (GraftTable, Array[SpjInputPartition]) = (table, Array.empty)
 
   private val maxFilesPerTrigger: Option[Int] = options.collectFirst {
     case (k, v) if k.equalsIgnoreCase("maxFilesPerTrigger") => v.toInt
@@ -94,13 +95,13 @@ final class SpjMicroBatchStream(table: GraftTable, sparkSchema: StructType,
       else if (startId == SnapshotOffset.Initial)
         t.newScan.useSnapshot(endId).planFiles()
       else Incremental.appendsBetween(t, startId, endId)
-    planned = tasks.map(ft => SpjInputPartition(Array.empty,
-      Array(SpjFileInfo.from(ft, "graft-stream")))).toArray
-    planned.map(identity[InputPartition])
+    val parts = SpjScan.inputPartitions(t, tasks, table.schema, "graft-stream")
+    planned = (t, parts)
+    parts.map(identity[InputPartition])
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    SpjScan.readerFactory(table, planned, SpjTable.RequestedMeta(sparkSchema),
+    SpjScan.readerFactory(planned._1, planned._2, SpjTable.RequestedMeta(sparkSchema),
       options, Nil)
 
   override def commit(end: Offset): Unit = ()

@@ -11,15 +11,19 @@ import org.apache.spark.sql.SparkSession
   *
   *  - [[ReadRoute.PerTask]]: the DSv2 [[graft.sources.SpjScan]] readers,
   *    which apply DV bitmaps, positional-delete sets and equality-key sets
-  *    per task from executor LRU caches. Every plain parquet read with a
+  *    per task from executor LRU caches, and read a name-mapped (imported)
+  *    file without field ids through the mapping. Every parquet read with a
   *    bounded equality-delete backlog takes it.
   *  - everything else reads through [[SparkRead.readTasks]], the anti-join
-  *    pipeline: name-mapped (imported) tables, whose files may lack field
-  *    ids or carry pre-rename names, unless a row-level scan reads them;
-  *    non-parquet data files, which the per-task parquet readers cannot
-  *    open; and equality-delete backlogs over
+  *    pipeline: non-parquet data files, which the per-task parquet readers
+  *    cannot open, and equality-delete backlogs over
   *    `spark.graft.eqDeleteFallbackBytes`, whose key sets would not fit in
-  *    executor memory.
+  *    executor memory. The pipeline resolves parquet columns by field id
+  *    alone, so on such a route the parquet files an import left without
+  *    field ids ([[withoutFieldIds]]) still read per task, through the
+  *    table's name mapping ([[SparkRead.readOffRoute]]); their
+  *    equality-delete key sets load into executor memory as on the per-task
+  *    route.
   *
   * [[SparkRead.matchedPositions]], which finds the rows a programmatic
   * merge-on-read delete removes, always reads per task, as a row-level
@@ -29,7 +33,6 @@ object ReadRoute {
 
   sealed abstract class Route(val name: String)
   case object PerTask extends Route("keyset")
-  case object NameMapping extends Route("name-mapping")
   case object NonParquet extends Route("non-parquet")
   case object AntiJoin extends Route("anti-join")
 
@@ -55,26 +58,36 @@ object ReadRoute {
 
   /** `options`: the read's options (may carry `eq-delete-fallback-bytes`).
     * `positionMeta`: the read asks for `_file`/`_pos`/lineage metadata
-    * columns through the SQL surface; an equality-delete backlog keeps it
-    * on the per-task route.
-    * `rowLevel`: the candidate scan of a SQL DELETE, UPDATE or MERGE. It
-    * reads whole candidate files, so an equality-delete backlog keeps it on
-    * the per-task route, and so does a name mapping: the per-task readers
-    * resolve a file without field ids through the mapping, and Spark plans
-    * a copy-on-write rewrite only over a DSv2 batch scan, which the
-    * anti-join pipeline is not. Only non-parquet files leave it.
+    * columns through the SQL surface; `rowLevel`: the candidate scan of a
+    * SQL DELETE, UPDATE or MERGE, which reads whole candidate files and
+    * which Spark plans only over a DSv2 batch scan. Either keeps an
+    * equality-delete backlog on the per-task route; only non-parquet files
+    * leave it.
     */
-  def choose(spark: SparkSession, table: Table, tasks: Seq[FileScanTask],
+  def choose(spark: SparkSession, tasks: Seq[FileScanTask],
       options: Map[String, String], positionMeta: Boolean = false,
       rowLevel: Boolean = false): Decision = {
     val eqBytes = tasks.flatMap(_.eqDeletes.map(_._1)).distinctBy(_.path).map(_.fileSize).sum
     val fallbackBytes = eqFallbackBytes(spark, options)
     val route =
-      if (!rowLevel &&
-          table.metadata.properties.contains(graft.format.NameMapping.PropertyKey)) NameMapping
-      else if (tasks.exists(!_.file.format.equalsIgnoreCase("PARQUET"))) NonParquet
+      if (tasks.exists(!_.file.format.equalsIgnoreCase("PARQUET"))) NonParquet
       else if (eqBytes > fallbackBytes && !positionMeta && !rowLevel) AntiJoin
       else PerTask
     Decision(route, eqBytes, fallbackBytes)
   }
+
+  /** The parquet tasks of `tasks` whose data file carries no field ids —
+    * files an import registered, read through the table's name mapping.
+    * Only a name-mapped table can hold them; its files are probed once
+    * each ([[SparkRead.fieldIdPresence]]: cache hits plus one distributed
+    * job for the misses).
+    */
+  def withoutFieldIds(spark: SparkSession, table: Table,
+      tasks: Seq[FileScanTask]): Seq[FileScanTask] =
+    if (!table.metadata.properties.contains(graft.format.NameMapping.PropertyKey)) Nil
+    else {
+      val parquet = tasks.filter(_.file.format.equalsIgnoreCase("PARQUET"))
+      val hasIds = SparkRead.fieldIdPresence(spark, parquet.map(_.file.path).distinct)
+      parquet.filterNot(t => hasIds(t.file.path))
+    }
 }

@@ -14,21 +14,24 @@ import graft.format.DataFileContent
   * entry for every read of a planned task set: scans, Writer rewrites,
   * compaction and the changelog. [[ReadRoute.choose]] picks the engine:
   *
-  *  - the per-task route (every plain parquet read with a bounded
+  *  - the per-task route (every parquet read with a bounded
   *    equality-delete backlog): the planned tasks become a DSv2 relation
   *    ([[graft.sources.SpjPlannedTable]]) served by
   *    [[graft.sources.SpjScan]]'s readers, the same engine as the SQL
   *    catalog. Each task reads its data file with the table read-schema
   *    carrying `parquet.field.id` metadata (ID-based column resolution
-  *    inside Spark's parquet reader) and drops deleted rows as it reads:
-  *    DV bitmaps, positional-delete sets and equality-key sets come from
+  *    inside Spark's parquet reader), or, for an imported file without
+  *    field ids, by the table's name mapping with its identity-partition
+  *    values from the manifest. It drops deleted rows as it reads: DV
+  *    bitmaps, positional-delete sets and equality-key sets come from
   *    executor LRU caches, sequence-scoped by the planner.
-  *  - [[readTasks]], the fallback (name-mapped tables, non-parquet files,
-  *    oversized equality-delete backlogs): positional deletes become a
-  *    left-anti join on (file, `_metadata.row_index`), DVs a per-file
-  *    bitmap filter, and equality deletes null-safe left-anti joins —
-  *    shuffling joins, never in-memory hash sets, so an unbounded backlog
-  *    stays readable.
+  *  - [[readTasks]], the fallback (non-parquet files, oversized
+  *    equality-delete backlogs; an import's files without field ids still
+  *    read per task, [[readOffRoute]]): positional deletes become a
+  *    left-anti join on (file, `_metadata.row_index`), DVs a per-file bitmap
+  *    filter, and equality deletes null-safe left-anti joins — shuffling
+  *    joins, never in-memory hash sets, so an unbounded backlog stays
+  *    readable.
   *
   * Either way projection, the residual row filter (pushed into the parquet
   * reader for row-group pruning) and the limit are Catalyst operators above
@@ -58,17 +61,7 @@ object SparkRead {
     // threaded to every distributed read as per-scan options
     val ioOptions = scan.table.refreshIoCredentials()
     val tasks = scan.planFiles()
-    val meta = scan.table.metadata
-    // current-snapshot scans use the CURRENT table schema (metadata-only
-    // evolution has no snapshot to re-pin it); only explicit time travel
-    // (snapshot id / as-of / ref) pins the snapshot's schema
-    val timeTravel =
-      scan.snapshotId.isDefined || scan.asOfTimestampMs.isDefined || scan.ref.isDefined
-    val snapSchemaId =
-      if (timeTravel) scan.snapshot.flatMap(_.schemaId).getOrElse(meta.currentSchemaId)
-      else meta.currentSchemaId
-    val schema = meta.schemaById(snapSchemaId).getOrElse(meta.schema)
-
+    val schema = scan.readSchema
     val df = readPlanned(spark, scan.table, tasks, schema, scan.rowLineage, ioOptions)
     project(applyResidual(df, scan), scan, schema)
   }
@@ -84,14 +77,36 @@ object SparkRead {
       schema: IcebergSchema, rowLineage: Boolean = false,
       ioOptions: Map[String, String] = Map.empty): DataFrame = {
     configure(spark)
-    if (tasks.nonEmpty &&
-        ReadRoute.choose(spark, table, tasks, ioOptions).route == ReadRoute.PerTask)
-      withUnknownColumns(schema) { stored =>
-        org.apache.spark.sql.GraftSqlShim.readV2(spark, new graft.sources.SpjPlannedTable(
-          table, stored, tasks, rowLineage, ioOptions))
-      }
-    else readTasks(spark, tasks, schema, table.nameMapping, rowLineage,
-      table.metadata.specById, ioOptions)
+    if (tasks.nonEmpty && ReadRoute.choose(spark, tasks, ioOptions).route == ReadRoute.PerTask)
+      readPerTask(spark, table, tasks, schema, rowLineage, ioOptions)
+    else readOffRoute(spark, table, tasks, schema, rowLineage, ioOptions)
+  }
+
+  private def readPerTask(spark: SparkSession, table: Table, tasks: Seq[FileScanTask],
+      schema: IcebergSchema, rowLineage: Boolean,
+      ioOptions: Map[String, String]): DataFrame =
+    withUnknownColumns(schema) { stored =>
+      org.apache.spark.sql.GraftSqlShim.readV2(spark, new graft.sources.SpjPlannedTable(
+        table, stored, tasks, rowLineage, ioOptions))
+    }
+
+  /** A task set [[ReadRoute.choose]] sends off the per-task route, for
+    * this and [[graft.sources.SpjAntiJoinScan]]: the anti-join pipeline
+    * ([[readTasks]]) reads it, but for an import's parquet files without
+    * field ids ([[ReadRoute.withoutFieldIds]]), which only the per-task
+    * readers resolve through the name mapping. The two union by name.
+    */
+  private[graft] def readOffRoute(spark: SparkSession, table: Table,
+      tasks: Seq[FileScanTask], schema: IcebergSchema, rowLineage: Boolean,
+      ioOptions: Map[String, String]): DataFrame = {
+    val mapped = ReadRoute.withoutFieldIds(spark, table, tasks)
+    if (mapped.isEmpty) readTasks(spark, tasks, schema, rowLineage, ioOptions)
+    else {
+      val perTask = readPerTask(spark, table, mapped, schema, rowLineage, ioOptions)
+      val rest = tasks.filterNot(mapped.toSet)
+      if (rest.isEmpty) perTask
+      else readTasks(spark, rest, schema, rowLineage, ioOptions).unionByName(perTask)
+    }
   }
 
   /** The (`_file`, `_pos`) of every live row of `tasks` that matches
@@ -127,16 +142,14 @@ object SparkRead {
   }
 
   /** The anti-join pipeline: read a set of scan tasks with their MoR
-    * deletes applied as distributed joins. Reached through [[readPlanned]]
-    * as the route's fallback, from [[graft.sources.SpjAntiJoinScan]], and by
-    * callers that hold planned tasks but no `Table` (REST-planned scans).
-    * An empty task set reads as an empty frame of the same columns.
-    *
-    * When the table carries a name mapping (add_files import), each group is
-    * split into ID-resolved and name-mapped subgroups: Spark's fieldId
-    * reader hard-fails on ID-less files, so those are read with an
-    * ID-metadata-free schema using the mapping's names, then renamed to the
-    * canonical schema. Tables never imported skip the footer probe entirely.
+    * deletes applied as distributed joins. Reached through [[readOffRoute]]
+    * (the fallback of [[readPlanned]] and [[graft.sources.SpjAntiJoinScan]])
+    * and by callers that hold planned tasks but no `Table` (REST-planned
+    * scans).
+    * Columns resolve by field id (parquet) or by name (ORC); a parquet file
+    * without field ids is the per-task route's to read, through the table's
+    * name mapping ([[readOffRoute]]). An empty task set reads as an empty
+    * frame of the same columns.
     *
     * `ioOptions` are per-scan storage options (typically REST-vended plan
     * credentials resolved through [[graft.io.PlanScopedCredentials]]): they
@@ -149,20 +162,12 @@ object SparkRead {
     */
   private[graft] def readTasks(spark: SparkSession, tasks: Seq[FileScanTask],
       schema: IcebergSchema,
-      nameMapping: Option[graft.format.NameMapping] = None,
       rowLineage: Boolean = false,
-      specById: Int => Option[graft.format.PartitionSpec] = _ => None,
       ioOptions: Map[String, String] = Map.empty,
-      residual: graft.core.Expr = graft.core.Expr.AlwaysTrue,
-      // keep the internal __file/__pos columns in the output (callers
-      // serving `_file`/`_pos` metadata columns through this V1 pipeline —
-      // e.g. name-mapped imported tables, whose renamed columns the stock
-      // DSv2 reader cannot resolve)
-      keepFilePos: Boolean = false): DataFrame = {
+      residual: graft.core.Expr = graft.core.Expr.AlwaysTrue): DataFrame = {
     configure(spark)
     val full = withUnknownColumns(schema) { storedSchema =>
-      readStoredTasks(spark, tasks, storedSchema, nameMapping, rowLineage,
-        specById, ioOptions, keepFilePos)
+      readStoredTasks(spark, tasks, storedSchema, rowLineage, ioOptions)
     }
     // residual ROW filter (spec fileScanTask residual-filter semantics):
     // planning pruned FILES; matching files still carry non-matching rows.
@@ -172,9 +177,8 @@ object SparkRead {
   }
 
   private def readStoredTasks(spark: SparkSession, tasks: Seq[FileScanTask],
-      storedSchema: IcebergSchema, nameMapping: Option[graft.format.NameMapping],
-      rowLineage: Boolean, specById: Int => Option[graft.format.PartitionSpec],
-      ioOptions: Map[String, String], keepFilePos: Boolean): DataFrame = {
+      storedSchema: IcebergSchema, rowLineage: Boolean,
+      ioOptions: Map[String, String]): DataFrame = {
     val readSchema: StructType = SchemaBridge.toSpark(storedSchema)
 
     // group tasks by identical (parquet pos-delete set, eq-delete set). DVs
@@ -190,230 +194,160 @@ object SparkRead {
         t.eqDeletes.map(_._1.path).toSet,
         t.file.format.toUpperCase)).values.toSeq
 
-    // ID-presence for name-mapped tables resolves ONCE for the whole task
-    // set (cache hits + one distributed probe job for misses) — never a
-    // serial per-file footer read on the driver (parquet only; ORC files
-    // read by name against the table schema)
-    val parquetPaths = tasks
-      .filter(_.file.format.equalsIgnoreCase("PARQUET")).map(_.file.path).distinct
-    val presence: Map[String, Boolean] = nameMapping match {
-      case None => Map.empty
-      case Some(_) if parquetPaths.isEmpty => Map.empty
-      case Some(_) => fieldIdPresence(spark, parquetPaths)
-    }
-
-    val parts = groups.flatMap { groupTasks =>
-      val subGroups: Seq[(Seq[FileScanTask], Boolean)] = nameMapping match {
-        case None => Seq((groupTasks, true))
-        case Some(_) if !groupTasks.head.file.format.equalsIgnoreCase("PARQUET") =>
-          Seq((groupTasks, true)) // ORC resolves by name below either way
-        case Some(_) =>
-          val (withIds, without) = groupTasks.partition(t => presence(t.file.path))
-          Seq((withIds, true), (without, false)).filter(_._1.nonEmpty)
-      }
-      subGroups.map { case (sub, idsPresent) => readSubGroup(spark, sub, idsPresent,
-        storedSchema, readSchema, nameMapping, rowLineage, specById, ioOptions,
-        keepFilePos) }
-    }
-
     // no tasks, no groups: an empty frame of the columns a read returns
-    parts.reduceOption(_ unionByName _).getOrElse {
-      val long = org.apache.spark.sql.types.LongType
-      val meta =
-        (if (rowLineage) SchemaBridge.LineageCols.map(c => StructField(c._1, long)) else Nil) ++
-          (if (keepFilePos) Seq(StructField("__file", org.apache.spark.sql.types.StringType),
-            StructField("__pos", long)) else Nil)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(readSchema.fields ++ meta))
-    }
+    groups.map(readGroup(spark, _, storedSchema, readSchema, rowLineage, ioOptions))
+      .reduceOption(_ unionByName _).getOrElse {
+        val lineage =
+          if (rowLineage) SchemaBridge.LineageCols.map(c =>
+            StructField(c._1, org.apache.spark.sql.types.LongType))
+          else Nil
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          StructType(readSchema.fields ++ lineage))
+      }
   }
 
-  private def readSubGroup(spark: SparkSession, groupTasks: Seq[FileScanTask],
-      idsPresent: Boolean, schema: IcebergSchema, readSchema: StructType,
-      nameMapping: Option[graft.format.NameMapping],
-      rowLineage: Boolean = false,
-      specById: Int => Option[graft.format.PartitionSpec] = _ => None,
-      ioOptions: Map[String, String] = Map.empty,
-      keepFilePos: Boolean = false): DataFrame = {
-    {
-      // lineage-preserving rewrites materialize _row_id /
-      // _last_updated_sequence_number as REAL parquet columns under the
-      // reserved field ids; request them so explicit values win over
-      // synthesis (files without the columns read null — the synth path)
-      val lineageScanSchema =
-        if (!rowLineage) readSchema
-        else StructType(readSchema.fields ++ SchemaBridge.LineageCols.map {
-          case (n, id) => StructField(n, org.apache.spark.sql.types.LongType,
-            nullable = true, new org.apache.spark.sql.types.MetadataBuilder()
-              .putLong(SchemaBridge.FieldIdKey, id.toLong).build())
-        })
-      // ORC data files (written by engines whose ORC path we interop with;
-      // the reference's own scanner is parquet-only — `arrow_scanner.go:1008`
-      // dispatches no other format): read by NAME against the table schema.
-      // Value-based features work unchanged (residuals, eq-delete
-      // anti-joins); POSITION-based features need Spark's `_metadata
-      // .row_index`, which the ORC source does not provide — reject loudly
-      // rather than fabricate positions.
-      val isOrc = groupTasks.head.file.format.equalsIgnoreCase("ORC")
-      if (isOrc) {
-        val posish = groupTasks.exists(_.posDeletes.nonEmpty)
-        require(!posish && !rowLineage && !keepFilePos,
-          "position-based features (positional deletes, deletion vectors, " +
-            "row lineage, _file/_pos metadata columns) are not supported " +
-            "over ORC data files")
-      }
-      // parquet reads go through MetadataRead: file statuses come from the
-      // manifests' (path, file_size_in_bytes), so no per-scan listing job
-      // re-stats the planned files (an O(files) pass per query otherwise)
-      val groupFiles = groupTasks.map(t => (t.file.path, t.file.fileSize))
-      var df =
-        if (isOrc) spark.read.options(ioOptions).schema(readSchema)
-          .orc(groupTasks.map(_.file.path): _*)
-        else if (idsPresent)
-          MetadataRead.parquet(spark, groupFiles, lineageScanSchema, ioOptions)
-        else {
-          val nm = nameMapping.get
-          val mappedSchema = StructType(schema.fields.map(f =>
-            StructField(nm.idToName.getOrElse(f.id, f.name),
-              SchemaBridge.toSparkType(f.fieldType), nullable = true)))
-          var raw = MetadataRead.parquet(spark, groupFiles, mappedSchema, ioOptions)
-          // hive-imported files omit identity partition source columns (the
-          // value lives in the directory name): fill from the path segment,
-          // distributed, O(1) plan size (iceberg constants-map semantics;
-          // reference arrow scanner injects partition constants per file).
-          // nullif guards the hive null sentinel; coalesce keeps real values
-          // for files that do carry the column.
-          val identSources: Seq[(String, org.apache.spark.sql.types.DataType)] =
-            groupTasks.map(_.specId).distinct.flatMap(specById(_).toSeq)
-              .flatMap(_.fields.filter(_.transform == graft.core.Transforms.Identity))
-              .flatMap(pf => schema.idToField.get(pf.sourceId)).distinct
-              .map(f => (nm.idToName.getOrElse(f.id, f.name),
-                SchemaBridge.toSparkType(f.fieldType)))
-          raw = identSources.foldLeft(raw) { case (d, (mappedName, st)) =>
-            // Column APIs, not string SQL: regex-quote the name (it may carry
-            // metacharacters) and nullif the no-match '' before decoding so a
-            // genuinely absent segment yields NULL, not ''.
-            val seg = regexp_extract(col("_metadata.file_path"),
-              "/" + java.util.regex.Pattern.quote(mappedName) + "=([^/]+)", 1)
-            // Hive's escapePathName only %XX-encodes (literal '+' is legal);
-            // protect '+' before url_decode so it survives rather than
-            // becoming a space (URLDecoder form semantics)
-            val decoded = nullif(
-              url_decode(regexp_replace(nullif(seg, lit("")), "\\+", "%2B")),
-              lit("__HIVE_DEFAULT_PARTITION__"))
-            d.withColumn(mappedName, coalesce(d.col(s"`$mappedName`"), decoded.try_cast(st)))
-          }
-          raw.select(schema.fields.map(f =>
-            col(nm.idToName.getOrElse(f.id, f.name)).as(f.name)): _*)
-        }
-
-      // DVs span the whole group (one blob per data file); parquet
-      // pos-deletes are identical across the group by construction of the key
-      val dvDeletes = groupTasks.flatMap(_.posDeletes.filter(_.format == "PUFFIN"))
-        .distinctBy(d => (d.path, d.contentOffset))
-      val posDeletes = groupTasks.head.posDeletes.filter(_.format != "PUFFIN")
-      val eqDeletes = groupTasks.head.eqDeletes
-      // eq-deletes anti-join on VALUE columns — they don't need positions,
-      // which also keeps them working over ORC files (no row_index there)
-      val needsPos =
-        dvDeletes.nonEmpty || posDeletes.nonEmpty || rowLineage || keepFilePos
-      if (needsPos) {
-        df = df.withColumn("__file", normalizePath(col("_metadata.file_path")))
-          .withColumn("__pos", col("_metadata.row_index"))
-      }
-
-      if (posDeletes.nonEmpty) {
-        // no broadcast hint: delete sets are unbounded, so let AQE pick the
-        // join strategy from the delete side's actual size at runtime.
-        // Null file_path/pos rows mean the delete file is corrupt — an
-        // anti-join would silently NO-OP them and resurrect the rows they
-        // should delete, so fail closed (reference
-        // TestReadDeletesRejectsNullPos / RejectsMissingFilePath).
-        // the guard rides INSIDE the projected join key: a bare filter
-        // below the join gets outflanked by the inferred IsNotNull
-        // constraints on the equi-join keys, which push to the parquet scan
-        // and drop the corrupt row before any check sees it
-        val guardedPos = when(col("pos").isNull || col("file_path").isNull,
-          raise_error(lit("corrupt positional delete file: null file_path or pos"))
-            .cast("long"))
-          .otherwise(col("pos"))
-        // explicit spec schema (file_path, pos): skips the inference footer
-        // read; missing columns surface as nulls and trip the corrupt-file
-        // guard exactly like inference-era analysis failures did
-        val delDf = MetadataRead.parquet(spark,
-          posDeletes.map(d => (d.path, d.fileSize)), PosDeleteSchema, ioOptions)
-          .select(normalizePath(col("file_path")).as("__file"),
-            guardedPos.as("__pos"))
-        df = df.join(delDf, Seq("__file", "__pos"), "left_anti")
-      }
-
-      if (dvDeletes.nonEmpty) {
-        // deletion vectors: broadcast only blob METADATA (file -> puffin
-        // path/offset/length); each executor reads and caches the bitmaps
-        // for the files it scans (reference arrow_scanner.go:533-618 reads
-        // DVs in the per-task pipeline). Driver never holds bitmap bytes.
-        val dvMeta: Map[String, (String, Long, Long)] = dvDeletes.map(d =>
-          graft.io.FileIO.canonical(d.referencedDataFile.get) ->
-            ((d.path, d.contentOffset.get, d.contentSize.get))).toMap
-        val bc = spark.sparkContext.broadcast(dvMeta)
-        val opts = ioOptions // serialized with the closure: executors need
-        // the vended credentials to open puffin blobs, not just data files
-        val keep = udf((file: String, pos: Long) =>
-          bc.value.get(file).forall { case (p, off, len) =>
-            !DvCache.get(p, off, len, opts).contains(pos)
-          })
-        df = df.filter(keep(col("__file"), col("__pos")))
-      }
-
-      // equality deletes: anti-join per distinct equality-id set, scoped by
-      // sequence number (data rows in this group all share applicability
-      // because grouping is by delete-set). Join keys use null-safe equality:
-      // Iceberg eq-deletes match null = null (reference canonical key
-      // encoding, table/equality_delete_reader.go:352-527), which a plain
-      // equi-join would silently drop.
-      eqDeletes.groupBy(_._1.equalityIds).foreach { case (eqIds, dels) =>
-        val keyFields = eqIds.map(schema.idToField)
-        val keyCols = keyFields.map(_.name)
-        // explicit key schema, by NAME without field ids (delete files may
-        // lack them): no inference footer read, no listing job. Required
-        // keys stay non-nullable, so a delete file lacking the column fails
-        // the read instead of matching nothing (as the per-task readers do)
-        val keySchema = StructType(keyFields.map(f =>
-          StructField(f.name, SchemaBridge.toSparkType(f.fieldType), nullable = !f.required)))
-        val delDf = MetadataRead.parquet(spark,
-            dels.map(d => (d._1.path, d._1.fileSize)).distinctBy(_._1), keySchema, ioOptions)
-          .select(keyCols.map(k => col(k).as(s"__del_$k")): _*)
-        val cond = keyCols.map(k => col(k) <=> col(s"__del_$k")).reduce(_ && _)
-        df = df.join(delDf, cond, "left_anti")
-      }
-
-      if (rowLineage) {
-        // v3 lineage synthesis (reference table/arrow_scanner.go:896-984):
-        // an EXPLICIT _row_id / _last_updated_sequence_number value read
-        // from the file (a lineage-preserving rewrite materialized it) WINS;
-        // where it is null, synthesize first_row_id + position / data
-        // sequence. A broadcast JOIN against the per-file lineage frame
-        // (bounded: one row per scanned file) instead of a Scala UDF keeps
-        // the stage inside whole-stage codegen; evaluated after deletes so
-        // surviving rows keep their original positions.
-        import spark.implicits._
-        if (!df.columns.contains(SchemaBridge.RowIdCol))
-          df = df.withColumn(SchemaBridge.RowIdCol, lit(null).cast("long"))
-            .withColumn(SchemaBridge.LastUpdatedSeqCol, lit(null).cast("long"))
-        val lm = groupTasks.flatMap(t =>
-          t.file.firstRowId.map(fr => (t.file.path, fr, t.dataSequence)))
-        val lmDf = broadcast(lm.toDF("__lineage_file", "__first_row_id", "__lineage_seq"))
-        df = df.join(lmDf, col("__file") === col("__lineage_file"), "left")
-          .withColumn(SchemaBridge.RowIdCol,
-            coalesce(col(SchemaBridge.RowIdCol), col("__first_row_id") + col("__pos")))
-          .withColumn(SchemaBridge.LastUpdatedSeqCol,
-            coalesce(col(SchemaBridge.LastUpdatedSeqCol), col("__lineage_seq")))
-          .drop("__lineage_file", "__first_row_id", "__lineage_seq")
-      }
-
-      if (needsPos && !keepFilePos) df = df.drop("__file", "__pos")
-      df
+  private def readGroup(spark: SparkSession, groupTasks: Seq[FileScanTask],
+      schema: IcebergSchema, readSchema: StructType, rowLineage: Boolean,
+      ioOptions: Map[String, String]): DataFrame = {
+    // lineage-preserving rewrites materialize _row_id /
+    // _last_updated_sequence_number as REAL parquet columns under the
+    // reserved field ids; request them so explicit values win over
+    // synthesis (files without the columns read null — the synth path)
+    val lineageScanSchema =
+      if (!rowLineage) readSchema
+      else StructType(readSchema.fields ++ SchemaBridge.LineageCols.map {
+        case (n, id) => StructField(n, org.apache.spark.sql.types.LongType,
+          nullable = true, new org.apache.spark.sql.types.MetadataBuilder()
+            .putLong(SchemaBridge.FieldIdKey, id.toLong).build())
+      })
+    // ORC data files (written by engines whose ORC path we interop with;
+    // the reference's own scanner is parquet-only — `arrow_scanner.go:1008`
+    // dispatches no other format): read by NAME against the table schema.
+    // Value-based features work unchanged (residuals, eq-delete
+    // anti-joins); POSITION-based features need Spark's `_metadata
+    // .row_index`, which the ORC source does not provide — reject loudly
+    // rather than fabricate positions.
+    val isOrc = groupTasks.head.file.format.equalsIgnoreCase("ORC")
+    if (isOrc) {
+      val posish = groupTasks.exists(_.posDeletes.nonEmpty)
+      require(!posish && !rowLineage,
+        "position-based features (positional deletes, deletion vectors, " +
+          "row lineage) are not supported over ORC data files")
     }
+    // parquet reads go through MetadataRead: file statuses come from the
+    // manifests' (path, file_size_in_bytes), so no per-scan listing job
+    // re-stats the planned files (an O(files) pass per query otherwise)
+    var df =
+      if (isOrc) spark.read.options(ioOptions).schema(readSchema)
+        .orc(groupTasks.map(_.file.path): _*)
+      else MetadataRead.parquet(spark,
+        groupTasks.map(t => (t.file.path, t.file.fileSize)), lineageScanSchema, ioOptions)
+
+    // DVs span the whole group (one blob per data file); parquet
+    // pos-deletes are identical across the group by construction of the key
+    val dvDeletes = groupTasks.flatMap(_.posDeletes.filter(_.format == "PUFFIN"))
+      .distinctBy(d => (d.path, d.contentOffset))
+    val posDeletes = groupTasks.head.posDeletes.filter(_.format != "PUFFIN")
+    val eqDeletes = groupTasks.head.eqDeletes
+    // eq-deletes anti-join on VALUE columns — they don't need positions,
+    // which also keeps them working over ORC files (no row_index there)
+    val needsPos = dvDeletes.nonEmpty || posDeletes.nonEmpty || rowLineage
+    if (needsPos) {
+      df = df.withColumn("__file", normalizePath(col("_metadata.file_path")))
+        .withColumn("__pos", col("_metadata.row_index"))
+    }
+
+    if (posDeletes.nonEmpty) {
+      // no broadcast hint: delete sets are unbounded, so let AQE pick the
+      // join strategy from the delete side's actual size at runtime.
+      // Null file_path/pos rows mean the delete file is corrupt — an
+      // anti-join would silently NO-OP them and resurrect the rows they
+      // should delete, so fail closed (reference
+      // TestReadDeletesRejectsNullPos / RejectsMissingFilePath).
+      // the guard rides INSIDE the projected join key: a bare filter
+      // below the join gets outflanked by the inferred IsNotNull
+      // constraints on the equi-join keys, which push to the parquet scan
+      // and drop the corrupt row before any check sees it
+      val guardedPos = when(col("pos").isNull || col("file_path").isNull,
+        raise_error(lit("corrupt positional delete file: null file_path or pos"))
+          .cast("long"))
+        .otherwise(col("pos"))
+      // explicit spec schema (file_path, pos): skips the inference footer
+      // read; missing columns surface as nulls and trip the corrupt-file
+      // guard exactly like inference-era analysis failures did
+      val delDf = MetadataRead.parquet(spark,
+        posDeletes.map(d => (d.path, d.fileSize)), PosDeleteSchema, ioOptions)
+        .select(normalizePath(col("file_path")).as("__file"),
+          guardedPos.as("__pos"))
+      df = df.join(delDf, Seq("__file", "__pos"), "left_anti")
+    }
+
+    if (dvDeletes.nonEmpty) {
+      // deletion vectors: broadcast only blob METADATA (file -> puffin
+      // path/offset/length); each executor reads and caches the bitmaps
+      // for the files it scans (reference arrow_scanner.go:533-618 reads
+      // DVs in the per-task pipeline). Driver never holds bitmap bytes.
+      val dvMeta: Map[String, (String, Long, Long)] = dvDeletes.map(d =>
+        graft.io.FileIO.canonical(d.referencedDataFile.get) ->
+          ((d.path, d.contentOffset.get, d.contentSize.get))).toMap
+      val bc = spark.sparkContext.broadcast(dvMeta)
+      val opts = ioOptions // serialized with the closure: executors need
+      // the vended credentials to open puffin blobs, not just data files
+      val keep = udf((file: String, pos: Long) =>
+        bc.value.get(file).forall { case (p, off, len) =>
+          !DvCache.get(p, off, len, opts).contains(pos)
+        })
+      df = df.filter(keep(col("__file"), col("__pos")))
+    }
+
+    // equality deletes: anti-join per distinct equality-id set, scoped by
+    // sequence number (data rows in this group all share applicability
+    // because grouping is by delete-set). Join keys use null-safe equality:
+    // Iceberg eq-deletes match null = null (reference canonical key
+    // encoding, table/equality_delete_reader.go:352-527), which a plain
+    // equi-join would silently drop.
+    eqDeletes.groupBy(_._1.equalityIds).foreach { case (eqIds, dels) =>
+      val keyFields = eqIds.map(schema.idToField)
+      val keyCols = keyFields.map(_.name)
+      // explicit key schema, by NAME without field ids (delete files may
+      // lack them): no inference footer read, no listing job. Required
+      // keys stay non-nullable, so a delete file lacking the column fails
+      // the read instead of matching nothing (as the per-task readers do)
+      val keySchema = StructType(keyFields.map(f =>
+        StructField(f.name, SchemaBridge.toSparkType(f.fieldType), nullable = !f.required)))
+      val delDf = MetadataRead.parquet(spark,
+          dels.map(d => (d._1.path, d._1.fileSize)).distinctBy(_._1), keySchema, ioOptions)
+        .select(keyCols.map(k => col(k).as(s"__del_$k")): _*)
+      val cond = keyCols.map(k => col(k) <=> col(s"__del_$k")).reduce(_ && _)
+      df = df.join(delDf, cond, "left_anti")
+    }
+
+    if (rowLineage) {
+      // v3 lineage synthesis (reference table/arrow_scanner.go:896-984):
+      // an EXPLICIT _row_id / _last_updated_sequence_number value read
+      // from the file (a lineage-preserving rewrite materialized it) WINS;
+      // where it is null, synthesize first_row_id + position / data
+      // sequence. A broadcast JOIN against the per-file lineage frame
+      // (bounded: one row per scanned file) instead of a Scala UDF keeps
+      // the stage inside whole-stage codegen; evaluated after deletes so
+      // surviving rows keep their original positions.
+      import spark.implicits._
+      if (!df.columns.contains(SchemaBridge.RowIdCol))
+        df = df.withColumn(SchemaBridge.RowIdCol, lit(null).cast("long"))
+          .withColumn(SchemaBridge.LastUpdatedSeqCol, lit(null).cast("long"))
+      val lm = groupTasks.flatMap(t =>
+        t.file.firstRowId.map(fr => (t.file.path, fr, t.dataSequence)))
+      val lmDf = broadcast(lm.toDF("__lineage_file", "__first_row_id", "__lineage_seq"))
+      df = df.join(lmDf, col("__file") === col("__lineage_file"), "left")
+        .withColumn(SchemaBridge.RowIdCol,
+          coalesce(col(SchemaBridge.RowIdCol), col("__first_row_id") + col("__pos")))
+        .withColumn(SchemaBridge.LastUpdatedSeqCol,
+          coalesce(col(SchemaBridge.LastUpdatedSeqCol), col("__lineage_seq")))
+        .drop("__lineage_file", "__first_row_id", "__lineage_seq")
+    }
+
+    if (needsPos) df = df.drop("__file", "__pos")
+    df
   }
 
   /** Positional-delete scan mode (reference `table/arrow_scanner.go:

@@ -134,6 +134,17 @@ final case class Scan(
     copy(rowLineage = true)
   }
 
+  /** The schema a read of this scan names its columns by: under time
+    * travel (an explicit snapshot id, timestamp or ref) the snapshot's,
+    * otherwise the table's current schema — metadata-only evolution has no
+    * snapshot to re-pin it.
+    */
+  def readSchema: IcebergSchema = {
+    val meta = table.metadata
+    if (snapshotId.isEmpty && asOfTimestampMs.isEmpty && ref.isEmpty) meta.schema
+    else snapshot.flatMap(_.schemaId).flatMap(meta.schemaById).getOrElse(meta.schema)
+  }
+
   /** Snapshot resolution: explicit id > as-of timestamp > ref > current. */
   def snapshot: Option[Snapshot] = {
     snapshotId.map(id => table.metadata.snapshotById(id).getOrElse(
@@ -176,12 +187,18 @@ final case class Scan(
           s"snapshot ${snap.snapshotId} references unknown schema-id $sid"))
       case None => meta.schema
     }
-    val boundFilter = Expr.bindNames(Expr.rewriteNot(filter), schema, caseSensitive)
+    // the filter names the read's columns; stats and partition values are
+    // evaluated by field id under the snapshot's schema, so a column
+    // renamed or added since the last write binds, and old manifests'
+    // bounds keep their old encoding
+    val named = readSchema
+    val byName = Expr.bindNames(Expr.rewriteNot(filter), named, caseSensitive)
     // fail fast on references no schema field satisfies (reference
     // ExtractFieldIDs' unbound panic, visitors.go:524-526): a typo'd column
     // must error at plan time, not degrade to a might-match that silently
     // scans the whole table
-    Expr.extractFieldIds(boundFilter, schema, caseSensitive)
+    Expr.extractFieldIds(byName, named, caseSensitive)
+    val boundFilter = if (named == schema) byName else Expr.renameByIds(byName, named, schema)
 
     val manifests = Manifests.readManifestList(snap.manifestList)
 

@@ -404,7 +404,7 @@ object Writer {
     * hive-style directories: partition values parse from `<col>=<value>`
     * path segments (typed, like the fanout writer's own dirs); hive layout
     * omits the partition column from the files, so the read path fills it
-    * from the directory value.
+    * from the partition value the manifest records.
     */
   def addFiles(spark: SparkSession, table: Table, paths: Seq[String]): Table = {
     val spec = table.spec

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
@@ -33,6 +34,12 @@ object ParquetRowReadBridge {
       (String, Long) => Iterator[InternalRow] = {
     val session = spark.asInstanceOf[classic.SparkSession]
     val hadoopConf = session.sessionState.newHadoopConfWithOptions(options)
+    // resolve columns by field id whatever the session set: a session that
+    // only queries through the catalog never ran `SparkRead.configure`, and
+    // by-name resolution would read renamed columns as null. A requested id
+    // absent from a file reads null (the Iceberg absent-column semantic)
+    hadoopConf.setBoolean(SQLConf.PARQUET_FIELD_ID_READ_ENABLED.key, true)
+    hadoopConf.setBoolean(SQLConf.IGNORE_MISSING_PARQUET_FIELD_ID.key, true)
     // returning_batch=false: rows even under the vectorized reader — the
     // DSv2 row-based PartitionReader consumes InternalRows
     val opts = options + (org.apache.spark.sql.execution.datasources.FileFormat

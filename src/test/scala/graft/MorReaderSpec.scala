@@ -208,8 +208,7 @@ class MorReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(perTask.queryExecution.optimizedPlan.collectFirst {
         case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
       }.nonEmpty, s"$name: expected the per-task scan")
-      val antiJoin = SparkRead.readTasks(spark, t.newScan.planFiles(), t.schema,
-        t.nameMapping, rowLineage = false, specById = t.metadata.specById)
+      val antiJoin = SparkRead.readTasks(spark, t.newScan.planFiles(), t.schema)
       assert(perTask.select("id").collect().map(_.getLong(0)).sorted.toSeq === want, name)
       def comparable(df: DataFrame) =
         rows(df.select(perTask.columns.map(col): _*).withColumn("k_bin", hex(col("k_bin"))))

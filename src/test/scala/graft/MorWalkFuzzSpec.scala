@@ -72,7 +72,7 @@ class MorWalkFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       val tasks = head.newScan.planFiles()
       val engines = Seq("per-task" -> SparkRead.read(spark, head.newScan)) ++
         (if (tasks.isEmpty) Nil else Seq("anti-join" -> SparkRead.readTasks(spark,
-          tasks, head.schema, specById = head.metadata.specById)))
+          tasks, head.schema)))
       engines.foreach { case (engine, df) =>
         val got = df.select(col("id"), col("seg"), col("v"))
           .as[(Long, String, Int)].collect().sortBy(_._1).toSeq

@@ -87,6 +87,30 @@ class OrcInteropSpec extends AnyFunSuite with BeforeAndAfterAll {
       .head.getLong(0) === 100)
   }
 
+  test("ORC files beside parquet files without field ids read and compact by name") {
+    val src = (lo: Long, hi: Long, tag: String) => spark.range(lo, hi).toDF("k")
+      .withColumn("seg", concat(lit(tag), (col("k") % 3).cast("string")))
+    val orcSrc = src(0, 300, "o")
+    val pqSrc = src(300, 500, "p")
+    orcSrc.repartition(2).write.orc(s"$wh/mixed-orc")
+    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "false")
+    try pqSrc.repartition(2).write.parquet(s"$wh/mixed-pq")
+    finally spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+    val pqPaths = graft.io.FileIO.listFilesRecursive(s"$wh/mixed-pq").map(_.path)
+      .filter(_.endsWith(".parquet"))
+    val t0 = catalog.createTable("orc_mixed", SchemaBridge.fromSpark(orcSrc.schema),
+      PartitionSpec.Unpartitioned)
+    val t1 = Writer.addFiles(spark, t0, orcPaths(s"$wh/mixed-orc") ++ pqPaths)
+    assert(t1.nameMapping.isDefined)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    val want = rows(orcSrc.unionByName(pqSrc))
+    assert(rows(SparkRead.read(spark, t1.newScan)) === want, "SparkRead.read")
+    assert(rows(spark.sql("SELECT k, seg FROM g.orc_mixed")) === want, "SQL")
+    val compacted = graft.table.Maintenance.rewriteDataFiles(spark, t1, rewriteAll = true).table
+    assert(compacted.newScan.planFiles().forall(_.file.format == "PARQUET"))
+    assert(rows(SparkRead.read(spark, compacted.newScan)) === want, "rewriteDataFiles")
+  }
+
   test("CoW DELETE rewrites ORC files (reading needs no positions)") {
     // stats-less ORC files carry no bounds, so the strict evaluator can
     // prove nothing and CoW rewrites every touched file (to parquet)

@@ -11,14 +11,15 @@ import org.scalatest.BeforeAndAfterAll
 import graft.catalog.HadoopCatalog
 import graft.core.{Expr, SchemaBridge, Transforms}
 import graft.format.PartitionSpec
-import graft.table.{Evolve, Scan, SparkRead, Table, Writer}
+import graft.table.{Evolve, Maintenance, Scan, SparkRead, Table, Writer}
 
 /** The programmatic read and the SQL catalog share one delete engine and
   * one routing rule ([[graft.table.ReadRoute]]). `SparkRead.read` serves
-  * plain parquet MoR tables from the per-task [[graft.sources.SpjScan]]
-  * readers and sends name-mapped, non-parquet and oversized-backlog
-  * tables to the anti-join pipeline (`SparkRead.readTasks`). Every case
-  * here checks the per-task answer against that independent pipeline.
+  * parquet MoR tables, imported ones included, from the per-task
+  * [[graft.sources.SpjScan]] readers and sends non-parquet and
+  * oversized-backlog tables to the anti-join pipeline
+  * (`SparkRead.readTasks`). Every case here checks the per-task answer
+  * against that independent pipeline, or an import against its source.
   */
 class ReadRouteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -46,13 +47,8 @@ class ReadRouteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** The anti-join pipeline's answer for the same scan. */
   private def viaReadTasks(scan: Scan): DataFrame = {
-    val meta = scan.table.metadata
-    val timeTravel =
-      scan.snapshotId.isDefined || scan.asOfTimestampMs.isDefined || scan.ref.isDefined
-    val schema = scan.snapshot.filter(_ => timeTravel).flatMap(_.schemaId)
-      .flatMap(meta.schemaById).getOrElse(meta.schema)
-    val df = SparkRead.readTasks(spark, scan.planFiles(), schema,
-      scan.table.nameMapping, scan.rowLineage, meta.specById, residual = scan.filter)
+    val df = SparkRead.readTasks(spark, scan.planFiles(), scan.readSchema,
+      scan.rowLineage, residual = scan.filter)
     if (scan.selected.isEmpty) df else df.select(scan.selected.map(col): _*)
   }
 
@@ -115,15 +111,20 @@ class ReadRouteSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(mem.reports.count(_.isInstanceOf[graft.metrics.ScanReport]) === 1)
   }
 
-  test("read takes readTasks for name-mapped, ORC and over-threshold tables") {
+  test("read takes readTasks for ORC and backlog tables and per task for an import") {
     import spark.implicits._
-    // a name-mapped import: files written without field ids
+    // a name-mapped import: files written without field ids, read per task
+    // through the mapping (readTasks resolves by field id and cannot read
+    // them), so the source files are the reference
     val flat = Files.createTempDirectory("graft-rr-flat").toString + "/flat"
     spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "false")
     try base(0, 100).write.parquet(flat)
     finally spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
     val imported = Writer.snapshotImport(spark, catalog, flat, "rr_imported")
     assert(imported.nameMapping.isDefined)
+    val importedDf = SparkRead.read(spark, imported.newScan)
+    assert(perTask(importedDf), importedDf.queryExecution.optimizedPlan.toString)
+    assert(rows(importedDf) === rows(spark.read.parquet(flat)))
 
     // ORC data files, name mapping removed: routed by file format alone
     val orcDir = Files.createTempDirectory("graft-rr-orc").toString + "/orc"
@@ -141,16 +142,24 @@ class ReadRouteSpec extends AnyFunSuite with BeforeAndAfterAll {
       SchemaBridge.fromSpark(base(0, 1).schema), PartitionSpec.Unpartitioned), base(0, 100))
     backlog = Writer.equalityDelete(spark, backlog, Seq(1L, 2L).toDF("id"), Seq("id"))
 
+    // the same backlog on the import: the anti-join pipeline resolves by
+    // field id alone, so a name mapping keeps it per task
+    val importedBacklog =
+      Writer.equalityDelete(spark, imported, Seq(1L, 2L).toDF("id"), Seq("id"))
+
     val saved = spark.conf.getOption("spark.graft.eqDeleteFallbackBytes")
     try {
       spark.conf.set("spark.graft.eqDeleteFallbackBytes", "1")
-      Seq(imported -> 100L, orc -> 100L, backlog -> 98L).foreach { case (t, n) =>
+      Seq(orc -> 100L, backlog -> 98L).foreach { case (t, n) =>
         val df = SparkRead.read(spark, t.newScan)
         assert(v2Scan(df).isEmpty, s"${t.name}: expected the anti-join pipeline in\n" +
           df.queryExecution.optimizedPlan)
         assert(df.count() === n, t.name)
         assert(rows(df) === rows(viaReadTasks(t.newScan)), t.name)
       }
+      val importedLive = SparkRead.read(spark, importedBacklog.newScan)
+      assert(perTask(importedLive))
+      assert(rows(importedLive) === rows(spark.read.parquet(flat).filter(!col("id").isin(1L, 2L))))
     } finally saved match {
       case Some(x) => spark.conf.set("spark.graft.eqDeleteFallbackBytes", x)
       case None => spark.conf.unset("spark.graft.eqDeleteFallbackBytes")
@@ -269,6 +278,85 @@ class ReadRouteSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rows(SparkRead.read(spark, catalog.loadTable(name).newScan.select("id", "v", "seg"))) ===
         want, name)
     }
+  }
+
+  test("a hive-layout import reads the partition values its manifest holds on every route") {
+    import spark.implicits._
+    // each value needs escaping in a hive path segment, or is the null sentinel
+    val values = Seq("a+b", "c d", "50%", "x/y", "e=f", null)
+    val name = "rr_hive_values"
+    val dir = Files.createTempDirectory(s"graft-$name").toString + "/src"
+    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "false")
+    try values.zipWithIndex.map { case (p, i) => (i.toLong, p) }.toDF("id", "p")
+      .write.partitionBy("p").parquet(dir)
+    finally spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+    val t = Writer.snapshotImport(spark, catalog, dir, name)
+    assert(t.newScan.planFiles().map(_.file.partition.head).toSet === values.toSet)
+    val want = values.zipWithIndex.map { case (p, i) => s"[$i,$p]" }.sorted
+    assert(rows(SparkRead.read(spark, t.newScan.select("id", "p"))) === want, "SparkRead.read")
+    assert(rows(spark.sql(s"SELECT id, p FROM grr.$name")) === want, "SQL")
+    val withFile = spark.sql(s"SELECT id, p, _file FROM grr.$name")
+    assert(rows(withFile.select("id", "p")) === want, "SQL with _file")
+    assert(withFile.collect().forall(_.getString(2).endsWith(".parquet")))
+  }
+
+  test("a backlog on an import reads only its files without field ids per task") {
+    import spark.implicits._
+    val name = "rr_import_backlog"
+    val dir = Files.createTempDirectory(s"graft-$name").toString + "/src"
+    val withP = (df: DataFrame) => df.withColumn("p", concat(lit("p"), (col("id") % 2).cast("string")))
+    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "false")
+    try withP(base(0, 100)).write.partitionBy("p").parquet(dir)
+    finally spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+    val appended = withP(base(100, 150))
+    var t = Writer.append(spark, Writer.snapshotImport(spark, catalog, dir, name), appended)
+    t = Writer.equalityDelete(spark, t, Seq(1L, 2L, 120L).toDF("id"), Seq("id"))
+    val source = spark.read.parquet(dir).unionByName(appended)
+    def want(deleted: Long*) = rows(source.filter(!col("id").isin(deleted: _*)))
+    def antiJoinRelations(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l
+    }
+    val saved = spark.conf.getOption("spark.graft.eqDeleteFallbackBytes")
+    try {
+      spark.conf.set("spark.graft.eqDeleteFallbackBytes", "1")
+      // the appended files carry field ids and take the anti-join pipeline;
+      // the imported ones read per task through the mapping
+      val mixed = SparkRead.read(spark, t.newScan)
+      assert(perTask(mixed) && antiJoinRelations(mixed).nonEmpty,
+        mixed.queryExecution.optimizedPlan.toString)
+      assert(rows(mixed) === want(1L, 2L, 120L))
+      assert(rows(spark.sql(s"SELECT id, seg, v, p FROM grr.$name")) === want(1L, 2L, 120L))
+      // compacted, every file carries field ids: a backlog leaves the
+      // per-task route whole, name mapping or not
+      t = Maintenance.rewriteDataFiles(spark, catalog.loadTable(name), rewriteAll = true).table
+      t = Writer.equalityDelete(spark, t, Seq(3L).toDF("id"), Seq("id"))
+      val compacted = SparkRead.read(spark, t.newScan)
+      assert(v2Scan(compacted).isEmpty, compacted.queryExecution.optimizedPlan.toString)
+      assert(rows(compacted) === want(1L, 2L, 3L, 120L))
+    } finally saved match {
+      case Some(x) => spark.conf.set("spark.graft.eqDeleteFallbackBytes", x)
+      case None => spark.conf.unset("spark.graft.eqDeleteFallbackBytes")
+    }
+  }
+
+  test("a fresh session that only queries the catalog resolves columns by field id") {
+    val name = "rr_fresh_session"
+    var t = catalog.createTable(name, SchemaBridge.fromSpark(base(0, 1).schema),
+      PartitionSpec.Unpartitioned)
+    t = Writer.append(spark, t, base(0, 20))
+    t = Evolve.renameColumn(t, "v", "w")
+    t = Evolve.addColumn(t, "z", graft.core.IcebergTypes.StringT)
+    val fresh = spark.newSession()
+    fresh.conf.set("spark.sql.catalog.grr", classOf[graft.sources.GraftSpjCatalog].getName)
+    fresh.conf.set("spark.sql.catalog.grr.uri", wh)
+    // nothing configured this session for field ids
+    assert(fresh.conf.get("spark.sql.parquet.fieldId.read.enabled") === "false")
+    val all = (0L until 20L).map(i => s"[$i,${i * 7 % 100},null]").sorted
+    assert(rows(fresh.sql(s"SELECT id, w, z FROM grr.$name")) === all)
+    // filters on the renamed and the added column, before any write
+    // under the evolved schema
+    assert(rows(fresh.sql(s"SELECT id, w, z FROM grr.$name WHERE w = 49 AND z IS NULL")) ===
+      Seq("[7,49,null]"))
   }
 
   test("time travel, row lineage, limit and unknown columns read the same rows as before") {

@@ -108,8 +108,7 @@ class RestCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(async.planPolls.get >= 2)  // >=1 "submitted" + the completed fetch
       assert(async.taskFetches.get >= 2) // 1 inline + 2 sharded
       // rows through the async-planned tasks match a direct read
-      val rows = SparkRead.readTasks(spark, planned.tasks, planned.schema,
-        specById = client.loadTable("asyncplan").metadata.specById _).count()
+      val rows = SparkRead.readTasks(spark, planned.tasks, planned.schema).count()
       assert(rows === 25L)
       // shard handles are one-shot: a second drain of the same plan's
       // handles gets the typed 404 (server shard state stays bounded by
@@ -287,8 +286,7 @@ class RestCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     val PlannedScan(tasks, planSchema, _, _) = client.planScan("plan")
     assert(tasks.nonEmpty)
     assert(tasks.exists(_.posDeletes.exists(_.format == "PUFFIN")))
-    val viaRest = SparkRead.readTasks(spark, tasks, planSchema,
-      specById = t2.metadata.specById).count()
+    val viaRest = SparkRead.readTasks(spark, tasks, planSchema).count()
     val direct = SparkRead.read(spark, t2.newScan).count()
     assert(viaRest === direct)
 
@@ -298,7 +296,7 @@ class RestCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     val planned = client.planScan("plan", Expr.eq("c_mktsegment", "BUILDING"))
     assert(planned.tasks.size <= tasks.size)
     val viaFiltered = SparkRead.readTasks(spark, planned.tasks, planned.schema,
-      specById = t2.metadata.specById, residual = planned.residual)
+      residual = planned.residual)
     val directFiltered = SparkRead.read(spark,
       t2.newScan.withFilter(Expr.eq("c_mktsegment", "BUILDING"))).count()
     assert(viaFiltered.count() === directFiltered)

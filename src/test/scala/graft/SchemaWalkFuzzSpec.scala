@@ -109,8 +109,25 @@ class SchemaWalkFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"first-diff=${got.zip(want).find { case (a, b) => a != b }.take(1)}")
     }
 
+    /** A filter on a column renamed or added since the last write binds by
+      * the read's schema: IS NULL and NOT NULL split the model's rows.
+      */
+    def verifyFilter(step: Int, op: String, name: String): Unit = {
+      val f = schema.findField(name).get
+      val isNull = rows.toSeq.collect {
+        case (id, vals) if vals.get(f.id).orElse(f.initialDefault).forall(_ == null) => id
+      }.toSet
+      Seq(Expr.isNull(name) -> isNull, Expr.notNull(name) -> (rows.keySet.toSet -- isNull))
+        .foreach { case (filter, want) =>
+          val got = SparkRead.read(spark, t.refresh().newScan.withFilter(filter))
+            .select("id").collect().map(_.getLong(0)).toSet
+          assert(got === want, s"seed=$seed step=$step op=$op filter=$filter")
+        }
+    }
+
     appendBatch() // seed data before the walk
     (0 until 16).foreach { step =>
+      var evolved: Option[String] = None
       val op = r.nextInt(10) match {
         case 0 | 1 | 2 => appendBatch()
         case 3 => // add column, sometimes with an initial default
@@ -119,6 +136,7 @@ class SchemaWalkFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
           val dflt = if (r.nextInt(3) == 0) Some(randomValue(r, ft)) else None
           t = Evolve.addColumn(t.refresh(), s"c$colSerial", ft,
             initialDefault = dflt, writeDefault = dflt)
+          evolved = Some(s"c$colSerial")
           s"add c$colSerial:$ft default=$dflt"
         case 4 => // rename keeps the field id
           mutableCols match {
@@ -126,6 +144,7 @@ class SchemaWalkFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
               val c = cols(r.nextInt(cols.size))
               colSerial += 1
               t = Evolve.renameColumn(t.refresh(), c.name, s"r$colSerial")
+              evolved = Some(s"r$colSerial")
               s"rename ${c.name}->r$colSerial"
             case _ => appendBatch()
           }
@@ -143,6 +162,7 @@ class SchemaWalkFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
           val name = if (r.nextBoolean() && colSerial > 1) s"c${1 + r.nextInt(colSerial)}" else s"c$colSerial"
           if (schema.findField(name).isEmpty) {
             t = Evolve.addColumn(t.refresh(), name, StringT)
+            evolved = Some(name)
             s"re-add $name"
           } else appendBatch()
         case 7 => // promote int->long / float->double
@@ -167,6 +187,7 @@ class SchemaWalkFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
           "compact"
       }
       verify(step, op)
+      evolved.foreach(verifyFilter(step, op, _))
     }
   }
 

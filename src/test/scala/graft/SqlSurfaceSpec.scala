@@ -129,7 +129,8 @@ class SqlSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("general reads: unpartitioned tables plan per-file; time-transform specs read correctly") {
-    // unpartitioned, written as several files → per-file input partitions
+    // unpartitioned, written as several files → the files spread over
+    // several input partitions (Spark's file-source split rule)
     val n = spark.read.parquet(s"$sf/customer.parquet").repartition(3)
     val schema = SchemaBridge.fromSpark(n.schema)
     Writer.append(spark, catalog.createTable("t_unpart", schema,

@@ -144,4 +144,34 @@ class StreamingTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!q.isActive, "AvailableNow query terminates on its own")
     assert(spark.sql("SELECT count(*) FROM g.an_dst").head.getLong(0) === 2)
   }
+
+  test("readStream.table reads a snapshotImport without field ids through its name mapping") {
+    import org.apache.spark.sql.functions.col
+    val src = Files.createTempDirectory("st-import-src").toString + "/flat"
+    val rows = spark.range(0, 100).select(col("id"), (col("id") % 7).cast("string").as("v"))
+    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "false")
+    try rows.repartition(3).write.parquet(src)
+    finally spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
+    graft.table.Writer.snapshotImport(spark, catalog, src, "st_import")
+    val want = rows.collect().map(_.toString).sorted.toSeq
+
+    def streamed(session: SparkSession): Seq[String] = {
+      val out = Files.createTempDirectory("out-import").toString
+      val q = session.readStream.table("g.st_import")
+        .writeStream.format("parquet")
+        .option("checkpointLocation", Files.createTempDirectory("ckpt-import").toString)
+        .option("path", out)
+        .start()
+      q.processAllAvailable()
+      q.stop()
+      session.read.parquet(out).select("id", "v").collect().map(_.toString).sorted.toSeq
+    }
+    // a session that never ran SparkRead, then one that did
+    val fresh = spark.newSession()
+    fresh.conf.set("spark.sql.catalog.g", classOf[graft.sources.GraftSpjCatalog].getName)
+    fresh.conf.set("spark.sql.catalog.g.uri", wh)
+    assert(streamed(fresh) === want, "fresh session")
+    graft.table.SparkRead.read(spark, catalog.loadTable("st_import").newScan).count()
+    assert(streamed(spark) === want, "session after SparkRead")
+  }
 }

@@ -33,6 +33,12 @@ class WapImportSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def nation = spark.read.parquet(s"$sf/nation.parquet")
 
+  /** Whether `df` reads through the per-task DSv2 scan. */
+  private def perTask(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
+    }.exists(_.isInstanceOf[graft.sources.SpjScan])
+
   test("stage-only append is invisible until cherry-picked; summary stamped") {
     val schema = SchemaBridge.fromSpark(nation.schema)
     val t0 = catalog.createTable("wap_stage", schema, PartitionSpec.Unpartitioned)
@@ -151,17 +157,18 @@ class WapImportSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.newScan.planFiles().forall(_.file.path.startsWith(tmp)))
     assert(SparkRead.read(spark, t.newScan).count() === 25)
     // a row-reading SQL query (COUNT(*) alone would answer from manifest
-    // stats via agg pushdown) routes through the SparkRead (name-mapping)
-    // pipeline
-    assert(spark.sql(s"SELECT n_name FROM $ctl.snap_flat").collect().length === 25)
-    assert(graft.sources.SpjRouting.lastRoute("snap_flat") === Some("name-mapping"))
+    // stats via agg pushdown) reads the ID-less files per task, by their
+    // mapped names
+    val names = spark.sql(s"SELECT n_name FROM $ctl.snap_flat")
+    assert(perTask(names))
+    assert(names.collect().map(_.getString(0)).sorted.toSeq ===
+      nation.collect().map(_.getAs[String]("n_name")).sorted.toSeq)
   }
 
-  // a metadata-column request on a name-mapped imported table must ride
-  // the V1 name-mapping route too: SpjScan's stock name-based reader
-  // null-fills a RENAMED data column (the file says `old_id`, the table
-  // says `id`) — before this routing, `SELECT id, _file FROM t` returned
-  // NULL ids beside correct file paths, silent wrong results
+  // a metadata-column request on a name-mapped imported table: a stock
+  // name-based reader would null-fill a RENAMED data column (the file says
+  // `old_id`, the table says `id`) beside correct file paths, silent wrong
+  // results; the per-task reader requests it by its mapped name
   test("metadata columns on a name-mapped imported table resolve renamed columns") {
     import spark.implicits._
     val ctl = "gnmmc"
@@ -186,6 +193,6 @@ class WapImportSpec extends AnyFunSuite with BeforeAndAfterAll {
       "renamed column resolves through the name mapping, never null-fills")
     assert(rows.forall(r => r.getString(2).endsWith(".parquet")))
     assert(rows.map(_.getLong(3)).toSeq === Seq(0L, 1L, 2L), "physical positions")
-    assert(graft.sources.SpjRouting.lastRoute("nmmc") === Some("name-mapping"))
+    assert(perTask(spark.sql(s"SELECT id, v, _file, _pos FROM $ctl.nmmc")))
   }
 }
